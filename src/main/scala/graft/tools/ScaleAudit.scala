@@ -32,6 +32,8 @@ object ScaleAudit {
       shufflePartitions = cpus
     ).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    def drainListeners(): Unit = org.apache.spark.sql.graftshim.Bridge
+      .drainListeners(spark.sparkContext, timeoutMs = 60000L)
     // Memory/spill audit (guide §5, round-17 verdict item 6): accumulate
     // stage-level task metrics across each query's TIMED passes so the
     // per-tier lines carry spill growth next to wall growth. spill_* are
@@ -62,9 +64,9 @@ object ScaleAudit {
       var rows = 0L
       rows = q.run(spark, dir).count() // discarded warmup
       graft.core.CacheScope.drain()
-      // listener events are posted async; give the bus a beat so warmup
-      // stages don't leak into the timed counters
-      Thread.sleep(500)
+      // listener events are posted async; drain the bus so warmup stages
+      // don't leak into the timed counters
+      drainListeners()
       spillMem.set(0); spillDisk.set(0); peakExec.set(0)
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
@@ -73,7 +75,7 @@ object ScaleAudit {
         graft.core.CacheScope.drain() // outside the timed region, as Bench
         t
       }.sorted
-      Thread.sleep(500) // drain the listener bus before reading counters
+      drainListeners() // every timed stage has reached the counters
       val mb = 1024.0 * 1024.0
       val spillM = spillMem.get / mb
       val spillD = spillDisk.get / mb
@@ -84,16 +86,10 @@ object ScaleAudit {
         f"spill_mem_mb=$spillM%.1f spill_disk_mb=$spillD%.1f " +
         f"peak_exec_mb=$peakM%.1f")
       sys.env.get("SPARK_GRAFT_SCALE_OUT").foreach { path =>
-        // Escape interpolated strings so a quote/backslash in a data dir
-        // path can't produce a line scripts/scale_json.py fails to parse.
-        def js(s: String): String =
-          s.flatMap {
-            case '"'  => "\\\""
-            case '\\' => "\\\\"
-            case c if c < ' ' => f"\\u${c.toInt}%04x"
-            case c    => c.toString
-          }
-        val line = f"""{"query":"${js(name)}","dir":"${js(dir)}","median_s":$median%.3f,""" +
+        // Jsons.str escapes, so a quote/backslash in a data dir path can't
+        // produce a line scripts/scale_json.py fails to parse.
+        val js = graft.core.Jsons.str _
+        val line = f"""{"query":${js(name)},"dir":${js(dir)},"median_s":$median%.3f,""" +
           s""""rows":$rows,"all_s":[$all],""" +
           f""""spill_mem_mb":$spillM%.1f,"spill_disk_mb":$spillD%.1f,""" +
           f""""peak_exec_mb":$peakM%.1f}""" + "\n"

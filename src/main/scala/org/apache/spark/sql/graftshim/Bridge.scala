@@ -4,13 +4,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ⇄ Expression bridge for graft's native expressions.
+/** Access to the Spark internals graft needs, from a package under
+  * `org.apache.spark.sql` so `private[sql]` and `private[spark]` members
+  * are reachable.
   *
+  * Mostly the Column ⇄ Expression bridge for graft's native expressions:
   * Spark 4 made the classic `Column(expr)` constructor and `Column.expr`
   * accessor `private[sql]` (the public surface now goes through ColumnNode).
   * Extension libraries that ship custom Catalyst expressions use a shim in a
-  * `org.apache.spark.sql` subpackage to reach the sanctioned converters —
-  * this is the entire contents of ours.
+  * `org.apache.spark.sql` subpackage to reach the sanctioned converters.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -29,4 +31,11 @@ object Bridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Blocks until every event posted so far has reached every listener
+    * (`SparkContext.listenerBus` is `private[spark]`) — read listener
+    * counters after this instead of sleeping and hoping. Throws
+    * `java.util.concurrent.TimeoutException` after `timeoutMs`. */
+  def drainListeners(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }
