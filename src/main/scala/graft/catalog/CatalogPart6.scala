@@ -1649,17 +1649,17 @@ private[graft] trait CatalogPart6 extends CatalogPart5 {
     q191.oracle)
 
   /** The standing dedup index through its FULL maintenance lifecycle
-    * ([[graft.operators.Dedup.indexAppend]] /
-    * [[graft.operators.Dedup.indexCompact]]): generation 1 of the index
-    * is built from the doc_id % 4 ∈ {1, 2} slices, generation 2 (the
-    * % 4 == 3 slice) is APPENDED — O(batch) writes honoring the bucket
-    * spec, one new file per bucket — the index is then COMPACTED back to
-    * one sorted file per bucket (O(corpus) parquet IO, zero recompute),
-    * and the % 4 == 0 ingest batch probes the result. The corpus seen by
-    * the probe is exactly q221's (% 4 != 0), so the output — and the
-    * oracle — is identical to q221's: a lost or doubled generation, a
-    * bucket-spec drift, or a compaction that corrupts rows all diverge.
-    * All three maintenance ops are idempotent per session (one-shot
+    * ([[graft.operators.Dedup.indexAppendLeveled]] /
+    * [[graft.operators.Dedup.foldDedupIndexL0]]): generation 1 of the
+    * index is built from the doc_id % 4 ∈ {1, 2} slices, generation 2 (the
+    * % 4 == 3 slice) is APPENDED — O(batch) writes into the unbucketed L0
+    * side tables — and, at `foldEvery = 1`, immediately FOLDED into the
+    * main level as one sorted file per bucket (O(corpus) parquet IO, zero
+    * recompute); the % 4 == 0 ingest batch probes the result. The corpus
+    * seen by the probe is exactly q221's (% 4 != 0), so the output — and
+    * the oracle — is identical to q221's: a lost or doubled generation, a
+    * bucket-spec drift, or a fold that corrupts rows all diverge. The
+    * build and the tagged append are idempotent per session (one-shot
     * guards), so repeated runs (bench passes, verify re-runs) read the
     * same two-generation index. */
   private[graft] val q225 = QuerySpec(
@@ -1673,11 +1673,9 @@ private[graft] trait CatalogPart6 extends CatalogPart5 {
         docs.where(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2),
         "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
         sigTable = sigT, bandTable = bandT)
-      Dedup.indexAppend(docs.where(col("doc_id") % 4 === 3),
+      Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 3),
         "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
-        sigTable = sigT, bandTable = bandT, batchTag = "gen2")
-      Dedup.indexCompact(s, sigT, tag = "post-gen2")
-      Dedup.indexCompact(s, bandT, tag = "post-gen2")
+        sigTable = sigT, bandTable = bandT, batchTag = "gen2", foldEvery = 1)
       Dedup.minhashCandidatesIndexedTables(
           docs.where(col("doc_id") % 4 === 0),
           "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,

@@ -378,7 +378,8 @@ object Dedup {
     * corpus: signatures bucketed+sorted on id, band keys bucketed+sorted
     * on the fused [[fusedBandKey]]. The write pays the corpus shuffle
     * exactly once; [[minhashCandidatesIndexedTables]] is the per-batch
-    * read path, [[indexAppend]]/[[indexCompact]] the maintenance path. */
+    * read path, [[indexAppendLeveled]]/[[foldDedupIndexL0]] the
+    * maintenance path. */
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
       sigTable: String, bandTable: String, buckets: Int = 32): Unit = {
@@ -395,9 +396,10 @@ object Dedup {
 
   /** The per-ingest-batch probe of [[minhashCandidatesIndexed]], reading
     * the standing index TABLES directly (whatever built or appended them —
-    * [[buildDedupIndex]], [[indexAppend]], or a prior
+    * [[buildDedupIndex]], [[indexAppendLeveled]], or a prior
     * [[minhashCandidatesIndexed]] call). Same output contract and scale
-    * shape as [[minhashCandidatesIndexed]]. */
+    * shape as [[minhashCandidatesIndexed]]. Throws if only one of the two
+    * L0 side tables exists (a torn index: see [[dropDedupIndex]]). */
   def minhashCandidatesIndexedTables(newDf: DataFrame,
       idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
@@ -408,13 +410,18 @@ object Dedup {
     val bandsOld = spark.table(bandTable)
     // leveled appends ([[indexAppendLeveled]]) park recent generations in
     // unbucketed L0 side tables until the next fold; a probe between folds
-    // must see corpus = main ∪ L0. Auto-detected so the no-L0 plan (every
-    // caller that maintains the index with indexAppend/indexCompact, e.g.
-    // q221/q225) is byte-identical to the pre-L0 shape; when L0 is live its
-    // rows join as SEPARATE small branches — the main level's exchange-free
-    // bucketed scans are never unioned into (a union would re-exchange the
-    // corpus side and forfeit the layout).
+    // must see corpus = main ∪ L0. Auto-detected so the no-L0 plan (a
+    // freshly built or folded index, e.g. q221/q225) is byte-identical to
+    // the pre-L0 shape; when L0 is live its rows join as SEPARATE small
+    // branches — the main level's exchange-free bucketed scans are never
+    // unioned into (a union would re-exchange the corpus side and forfeit
+    // the layout). Sig and band L0 live and die together; one without the
+    // other would silently drop generations from the candidate set.
     val hasL0 = spark.catalog.tableExists(l0Of(sigTable))
+    if (hasL0 != spark.catalog.tableExists(l0Of(bandTable)))
+      throw new IllegalStateException(s"torn dedup index: only one of " +
+        s"${l0Of(sigTable)} and ${l0Of(bandTable)} exists; drop the index " +
+        "(dropDedupIndex) and rebuild it from the corpus")
     val sigsL0 = if (hasL0) Some(spark.table(l0Of(sigTable))) else None
     val bandsL0 = if (hasL0) Some(spark.table(l0Of(bandTable))) else None
     // the batch side: |new| signatures, persisted because they feed the
@@ -482,83 +489,44 @@ object Dedup {
           .cast("double") / lit(numHashes)).as("est_jaccard"))
   }
 
-  /** One-shot guard registry for index maintenance ops: an append or a
-    * compaction tagged (table, tag) runs once per JVM session — the same
-    * idempotence contract as [[graft.operators.ScaleOps.ensureBucketed]]'s
-    * write-once, extended to MUTATIONS so a repeated caller (bench warmup
-    * + timed passes, verify re-runs, sweep specs) cannot double-append a
-    * generation or re-pay a compaction. Session-scoped is the right
-    * scope: the metastore is in-memory and the warehouse a per-JVM temp
-    * dir, so the tables themselves are session-scoped too. */
+  /** One-shot guard registry for index maintenance: a leveled append
+    * tagged (tables, tag) runs once per JVM session — the same idempotence
+    * contract as [[graft.operators.ScaleOps.ensureBucketed]]'s write-once,
+    * extended to MUTATIONS so a repeated caller (bench warmup + timed
+    * passes, verify re-runs, sweep specs) cannot double-append a
+    * generation. Session-scoped is the right scope: the metastore is
+    * in-memory and the warehouse a per-JVM temp dir, so the tables
+    * themselves are session-scoped too. Keys are
+    * `<ns>|<sigTable>|<bandTable>|<batchTag>` in two namespaces:
+    * `appendL0` (applied appends) and `pendingL0` (generations not yet
+    * folded). */
   private val appliedIndexOps =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Every registry key of one index, in both namespaces. */
+  private def indexKeys(sigTable: String, bandTable: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val tables = s"|$sigTable|$bandTable|"
+    appliedIndexOps.asScala.filter(_.contains(tables)).toSeq
+  }
+
+  private def pendingKeys(sigTable: String, bandTable: String): Seq[String] =
+    indexKeys(sigTable, bandTable).filter(_.startsWith("pendingL0|"))
+
+  /** L0 side-table name for a standing index table (leveled appends). */
+  private def l0Of(table: String): String = table + "_l0"
 
   /** Append one ingest batch's signatures and band keys to the STANDING
     * dedup index — the maintenance half of the production loop whose read
     * half is [[minhashCandidatesIndexedTables]]: admit a batch against
     * the index, then append the admitted docs so the NEXT batch dedups
-    * against them too, never recomputing the corpus. The append honors
-    * the tables' bucket spec (`bucketBy`+`sortBy` must match or Spark
-    * fails the write loudly) and lands exactly ONE new file per bucket
-    * (the same repartition-on-bucket-key trick as
-    * [[graft.operators.ScaleOps.writeBucketed]]), so joins against the
-    * index stay exchange-free immediately. What appends DO cost is the
-    * sort-elision: with more than one file per bucket Spark drops the
-    * scan's sortBy ordering at plan time (correctly — concatenated sorted
-    * files are not sorted) and merge joins re-sort per partition until
-    * [[indexCompact]] restores the one-file-per-bucket invariant. That is
-    * the LSM trade, chosen deliberately: appends are O(batch), reads stay
-    * co-located, and the periodic compaction is O(corpus) WRITE (no
-    * shingling, no signing — orders cheaper than recompute).
-    *
-    * Idempotent per (session, table, batchTag): a replayed call with the
-    * same tag is a no-op, so foreachBatch replays after a crash cannot
-    * double a generation. */
-  def indexAppend(batch: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, numHashes: Int, bands: Int,
-      sigTable: String, bandTable: String, batchTag: String,
-      buckets: Int = 32): Unit = appliedIndexOps.synchronized {
-    // the guard key is recorded only AFTER both writes succeed: a crash
-    // between the sig and band appends must leave the op re-runnable
-    // (torn-index repair is the caller's job — see the replay-repair
-    // branch in corpusIngestSinkIndexed — but the registry must never
-    // claim an append that didn't finish). Serialized on the registry:
-    // maintenance ops are rare and short relative to what they guard.
-    val key = s"append|$sigTable|$bandTable|$batchTag"
-    if (appliedIndexOps.contains(key)) return
-    val rowsPerBand = numHashes / bands
-    val sigs = graft.core.CacheScope.persist(
-      minhashSigs(batch, idCol, textCol, shingleSize, numHashes))
-    sigs.repartition(buckets, col("id"))
-      .write.mode("append")
-      .bucketBy(buckets, "id").sortBy("id")
-      .format("parquet").saveAsTable(sigTable)
-    lshBands(sigs, "id", "sig", bands, rowsPerBand)
-      .select(fusedBandKey.as("bkey"), col("id"))
-      .repartition(buckets, col("bkey"))
-      .write.mode("append")
-      .bucketBy(buckets, "bkey").sortBy("bkey")
-      .format("parquet").saveAsTable(bandTable)
-    appliedIndexOps.add(key)
-    ()
-  }
-
-  /** L0 side-table name for a standing index table (leveled appends). */
-  private def l0Of(table: String): String = table + "_l0"
-
-  /** LEVELED (L0→L1) append — the round-17 verdict's refinement of
-    * [[indexAppend]], whose one-file-per-bucket append dirties EVERY
-    * bucket on every batch (`buckets` new files per table per batch) and
-    * therefore couples compaction cadence to batch cadence: at small
-    * frequent batches the only way to keep file counts bounded is an
-    * O(corpus) [[indexCompact]] per few batches — prohibitive at 100 TB.
-    * The LSM shape instead: each batch lands in PLAIN unbucketed L0 side
-    * tables (`<table>_l0`, one append of batch-partition-many files — no
-    * bucket fan-out, no bucket-spec shuffle), and every `foldEvery`-th
-    * pending generation is FOLDED into the main bucketed level (read main
-    * raw + L0, one [[graft.operators.ScaleOps.writeBucketed]] rewrite,
-    * rename, drop L0 — the same publish mechanics as [[indexCompact]], so
-    * readers never see a half-folded index). Probe-side,
+    * against them too, never recomputing the corpus. LEVELED (L0→L1, the
+    * LSM shape): each batch lands in PLAIN unbucketed L0 side tables
+    * (`<table>_l0`, one append of batch-partition-many files — no bucket
+    * fan-out, no bucket-spec shuffle; a bucketed per-batch append would
+    * dirty every bucket and tie the O(corpus) rewrite cadence to the
+    * batch cadence), and every `foldEvery`-th pending generation is FOLDED
+    * into the main bucketed level ([[foldDedupIndexL0]]). Probe-side,
     * [[minhashCandidatesIndexedTables]] auto-detects a live L0 and unions
     * its (small, batch-grain) rows into the candidate and signature
     * lookups WITHOUT touching the main level's exchange-free bucketed
@@ -566,18 +534,24 @@ object Dedup {
     * batches of rows, and the payoff is a compaction cadence chosen by
     * `foldEvery`, decoupled from how often batches arrive.
     *
-    * Same idempotence contract as [[indexAppend]]: once per (session,
-    * tables, batchTag), key recorded only after both L0 writes land, so a
-    * crash mid-append leaves the op re-runnable and the caller's
-    * torn-index repair ([[dropDedupIndex]], which drops L0 too) covers
-    * the replayed-batch window. The fold count is tracked by the same
-    * session-scoped registry (consistent: tables live in the in-memory
-    * metastore, so registry and tables die together). */
+    * Idempotent per (session, tables, batchTag): a replayed call with the
+    * same tag is a no-op, also after its generation was folded, so
+    * foreachBatch replays after a crash cannot double a generation. The
+    * fold count is tracked by the same session-scoped registry
+    * (consistent: tables live in the in-memory metastore, so registry and
+    * tables die together). */
   def indexAppendLeveled(batch: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
       sigTable: String, bandTable: String, batchTag: String,
       foldEvery: Int = 8): Unit = appliedIndexOps.synchronized {
     require(foldEvery >= 1, "foldEvery must be >= 1")
+    // the guard key is recorded only AFTER both L0 writes succeed: a crash
+    // between the sig and band appends must leave the op re-runnable
+    // (torn-index repair is the caller's job — [[dropDedupIndex]], see the
+    // replay-repair branch in corpusIngestSinkIndexed — but the registry
+    // must never claim an append that didn't finish). Serialized on the
+    // registry: maintenance ops are rare and short relative to what they
+    // guard.
     val key = s"appendL0|$sigTable|$bandTable|$batchTag"
     if (appliedIndexOps.contains(key)) return
     val rowsPerBand = numHashes / bands
@@ -596,62 +570,64 @@ object Dedup {
     // replayed batchTag after a fold would otherwise re-append rows the
     // fold already moved into the main level.
     appliedIndexOps.add(s"pendingL0|$sigTable|$bandTable|$batchTag")
-    val prefix = s"pendingL0|$sigTable|$bandTable|"
-    var pending = 0
-    val it = appliedIndexOps.iterator()
-    while (it.hasNext) if (it.next().startsWith(prefix)) pending += 1
-    if (pending >= foldEvery) foldDedupIndexL0(batch.sparkSession,
-      sigTable, bandTable)
+    if (pendingKeys(sigTable, bandTable).size >= foldEvery)
+      foldDedupIndexL0(batch.sparkSession, sigTable, bandTable)
     ()
   }
 
-  /** Fold the L0 side tables into the main bucketed level: read the main
-    * level's raw parquet (NOT the bucketed scan — see [[indexCompact]]'s
-    * exchange-elision trap) plus L0, rewrite as one sorted file per bucket
-    * via write-to-sibling + catalog rename, drop L0. O(main + L0) parquet
-    * IO, zero recompute (no shingling, no signing); after the fold the
-    * probe's no-L0 fast path and full sort-elision are restored. Safe to
-    * call with no pending L0 (no-op). */
+  /** Fold the L0 side tables into the main bucketed level: each table's
+    * main level plus its L0 is rewritten as one sorted file per bucket
+    * into a `_folding` sibling, and only when BOTH siblings are written is
+    * the fold published (drop main, rename sibling, drop L0, per table).
+    * A failed write drops the siblings and leaves the old index — main
+    * level and L0 — as it was; only a crash inside the publish's catalog
+    * calls can still tear it. O(main + L0) parquet IO, zero recompute (no
+    * shingling, no signing); after the fold the probe's no-L0 fast path
+    * and full sort-elision are restored. Safe to call with no pending L0
+    * (no-op). */
   def foldDedupIndexL0(spark: org.apache.spark.sql.SparkSession,
       sigTable: String, bandTable: String): Unit = {
-    Seq(sigTable, bandTable).foreach { t =>
-      val l0 = l0Of(t)
-      if (spark.catalog.tableExists(l0)) {
-        val cat = spark.sessionState.catalog
-        val meta = cat.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t))
-        val spec = meta.bucketSpec.getOrElse(
-          sys.error(s"foldDedupIndexL0('$t'): not a bucketed table"))
-        val l0Meta = cat.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(l0))
-        val merged = spark.read.parquet(meta.location.toString)
-          .unionByName(spark.read.parquet(l0Meta.location.toString))
-        val tmp = t + "_folding"
-        graft.operators.ScaleOps.writeBucketed(
-          merged, tmp, spec.numBuckets, spec.bucketColumnNames)
-        spark.sql(s"DROP TABLE $t")
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $t")
-        spark.sql(s"DROP TABLE $l0")
-      }
+    val cat = spark.sessionState.catalog
+    def meta(t: String) = cat.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t))
+    val folds = Seq(sigTable, bandTable)
+      .filter(t => spark.catalog.tableExists(l0Of(t)))
+      .map(t => t -> (t + "_folding"))
+    try folds.foreach { case (t, tmp) =>
+      val main = meta(t)
+      val spec = main.bucketSpec.getOrElse(
+        sys.error(s"foldDedupIndexL0('$t'): not a bucketed table"))
+      // Read the main level's RAW parquet files, not the catalog table: a
+      // bucketed scan reports a hash partitioning that can satisfy the
+      // write-side repartition, so Spark would elide the exchange and pass
+      // multi-file buckets through as several write tasks — the folded
+      // table would keep 2+ files per bucket and lose sort propagation.
+      val merged = spark.read.parquet(main.location.toString)
+        .unionByName(spark.read.parquet(meta(l0Of(t)).location.toString))
+      graft.operators.ScaleOps.writeBucketed(
+        merged, tmp, spec.numBuckets, spec.bucketColumnNames)
+    } catch {
+      case e: Throwable =>
+        folds.foreach { case (_, tmp) => spark.sql(s"DROP TABLE IF EXISTS $tmp") }
+        throw e
+    }
+    folds.foreach { case (t, tmp) =>
+      spark.sql(s"DROP TABLE $t")
+      spark.sql(s"ALTER TABLE $tmp RENAME TO $t")
+      spark.sql(s"DROP TABLE ${l0Of(t)}")
     }
     // folded generations are no longer pending: clear their PENDING markers
     // so the next fold counts only new generations. The appendL0 idempotence
     // keys stay — a replayed batchTag must remain a no-op after its rows
     // were folded into the main level.
-    val prefix1 = s"pendingL0|$sigTable|$bandTable|"
-    val it = appliedIndexOps.iterator()
-    val toDrop = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val k = it.next(); if (k.startsWith(prefix1)) toDrop += k
-    }
-    toDrop.foreach(appliedIndexOps.remove)
+    pendingKeys(sigTable, bandTable).foreach(appliedIndexOps.remove)
   }
 
   /** Drop both halves of a standing dedup index (and forget their
     * maintenance guards) so the next [[buildDedupIndex]] rebuilds from
     * scratch — the torn-index repair path: after a crash that may have
-    * landed between a corpus swap and the matching [[indexAppend]] (or
-    * mid-append), the CORPUS TABLE is the source of truth and an
+    * landed between a corpus swap and the matching [[indexAppendLeveled]]
+    * (or mid-append), the CORPUS TABLE is the source of truth and an
     * O(corpus) rebuild on the rare replay is the honest recovery.
     * Leveled L0 side tables are part of the index and drop with it. */
   def dropDedupIndex(spark: org.apache.spark.sql.SparkSession,
@@ -660,50 +636,8 @@ object Dedup {
       Seq(sigTable, bandTable, l0Of(sigTable), l0Of(bandTable)).foreach { t =>
         if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE $t")
       }
-      val dead = appliedIndexOps.iterator()
-      val toDrop = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (dead.hasNext) {
-        val k = dead.next()
-        if (k.contains(s"|$sigTable|") || k.contains(s"|$bandTable|") ||
-            k.endsWith(s"|$sigTable") || k.endsWith(s"|$bandTable"))
-          toDrop += k
-      }
-      toDrop.foreach(appliedIndexOps.remove)
+      indexKeys(sigTable, bandTable).foreach(appliedIndexOps.remove)
     }
-
-  /** Per-bucket compaction of a standing bucketed table: rewrite into
-    * exactly one sorted file per bucket (the
-    * [[graft.operators.ScaleOps.writeBucketed]] layout), restoring the
-    * sort-free merge-scan shape that [[indexAppend]]'s extra per-bucket
-    * files suspend. Write-to-sibling + catalog rename, so a reader never
-    * observes a half-compacted table; O(corpus) parquet IO, zero
-    * recompute. Idempotent per (session, table, tag). */
-  def indexCompact(spark: org.apache.spark.sql.SparkSession, table: String,
-      tag: String): Unit = appliedIndexOps.synchronized {
-    // key recorded after the rename lands, same rationale as indexAppend
-    val key = s"compact|$table|$tag"
-    if (appliedIndexOps.contains(key)) return
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(
-      sys.error(s"indexCompact('$table'): not a bucketed table"))
-    val tmp = table + "_compacting"
-    // Read the RAW parquet files, not the catalog table: a bucketed scan
-    // reports a hash partitioning that already satisfies the write-side
-    // repartition, so Spark elides the exchange and each multi-file
-    // bucket passes through as multiple write tasks — the "compacted"
-    // table would keep 2+ files per bucket and never regain sort
-    // propagation. The plain file scan has no partitioning to satisfy
-    // anything, so writeBucketed's repartition actually runs and lands
-    // exactly one sorted file per bucket.
-    graft.operators.ScaleOps.writeBucketed(
-      spark.read.parquet(meta.location.toString), tmp,
-      spec.numBuckets, spec.bucketColumnNames)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    appliedIndexOps.add(key)
-    ()
-  }
 
   /** Corpus version diff: per-doc status between two snapshots of a
     * document table — the audit step of dataset versioning (pairs with

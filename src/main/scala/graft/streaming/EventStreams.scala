@@ -393,8 +393,9 @@ object EventStreams {
     *     both-new pair → greater id drops),
     *  3. swaps the corpus table ([[mergeSwap]], effectively-once), and
     *  4. APPENDS the admitted docs' sigs/bands to the index
-    *     ([[graft.operators.Dedup.indexAppend]], O(batch), tagged by
-    *     batchId) so the NEXT batch dedups against them.
+    *     ([[graft.operators.Dedup.indexAppendLeveled]], O(batch), tagged
+    *     by batchId; every `foldEvery`-th append folds L0 into the main
+    *     level) so the NEXT batch dedups against them.
     * Same quality/blocklist gates, same metrics rows, same output as the
     * unindexed sink (property-gated in EventStreamsSpec and by the q226
     * driver row).
@@ -439,10 +440,10 @@ object EventStreams {
             minQuality, blockedPatterns,
             // LINEAGE-TRUNCATED before the swap (localCheckpoint, eager):
             // the survivors' plan reads the pre-swap corpus dir, and the
-            // post-swap indexAppend below must see these exact rows — a
-            // plain persist is not enough (the append's write re-analyzes
-            // the plan, and a cache miss would re-derive over the
-            // already-swapped table: observed as FILE_NOT_EXIST).
+            // post-swap indexAppendLeveled below must see these exact rows
+            // — a plain persist is not enough (the append's write
+            // re-analyzes the plan, and a cache miss would re-derive over
+            // the already-swapped table: observed as FILE_NOT_EXIST).
             // Checkpoint blocks bypass the CacheManager; ContextCleaner
             // frees them when the batch's reference drops.
             seal = _.localCheckpoint(true),

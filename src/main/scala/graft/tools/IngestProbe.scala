@@ -37,12 +37,14 @@ object IngestProbe {
       .where(col("doc_id") % 4 =!= 0)
     val batch = spark.read.parquet(s"$batchDir/documents.parquet")
       .where(col("doc_id") % 4 === 0)
-    def run(tag: String, f: () => org.apache.spark.sql.DataFrame): Unit = {
-      var rows = f().count() // discarded warmup (indexed: builds the index)
+    // one timed op per tag: a discarded warmup, then `reps` timed calls;
+    // `op` gets the rep label ("warm", "1", ...) and returns its row count
+    def timed(tag: String)(op: String => Long): Unit = {
+      var rows = op("warm")
       graft.core.CacheScope.drain()
-      val times = (1 to reps).map { _ =>
+      val times = (1 to reps).map { i =>
         val t0 = System.nanoTime()
-        rows = f().count()
+        rows = op(i.toString)
         val t = (System.nanoTime() - t0) / 1e9
         graft.core.CacheScope.drain()
         t
@@ -57,9 +59,12 @@ object IngestProbe {
         java.nio.file.Files.write(java.nio.file.Paths.get(path),
           line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
           java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
+          java.nio.file.StandardOpenOption.APPEND): Unit
       }
     }
+    // a probe's warmup builds the index it reads (indexed runs)
+    def run(tag: String, f: () => org.apache.spark.sql.DataFrame): Unit =
+      timed(tag)(_ => f().count())
     run("ingest_fixedbatch_indexed", () =>
       graft.operators.Dedup.minhashCandidatesIndexed(corpus, batch,
         "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
@@ -100,49 +105,16 @@ object IngestProbe {
         "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
         lvSig, lvBand)
     })
-    // Append-cost comparison on fresh throwaway tables (unique tag per
-    // rep, so every rep pays a REAL append): leveled L0 (plain parquet
-    // append, no bucket fan-out) vs the bucketed indexAppend (one new
-    // file per bucket per batch = `buckets` files per table). Both append
-    // the same fixed batch; both should be O(batch) across tiers — the
-    // leveled one without dirtying every bucket.
-    def timeAppends(tag: String)(f: String => Unit): Unit = {
-      f(s"${tag}_warm")
-      graft.core.CacheScope.drain()
-      val times = (1 to reps).map { i =>
-        val t0 = System.nanoTime()
-        f(s"${tag}_$i")
-        val t = (System.nanoTime() - t0) / 1e9
-        graft.core.CacheScope.drain()
-        t
-      }.sorted
-      val all = times.map(t => f"$t%.2f").mkString(",")
-      println(f"SCALEAUDIT $tag $corpusDir ${times.head}%.2f s (0 rows) " +
-        s"all=$all")
-      sys.env.get("SPARK_GRAFT_SCALE_OUT").foreach { path =>
-        def js(s: String): String = graft.core.Jsons.str(s)
-        val line = s"""{"query":${js(tag)},"dir":${js(corpusDir)},""" +
-          s""""median_s":${times(times.size / 2)},"rows":0,""" +
-          s""""all_s":[${times.mkString(",")}]}""" + "\n"
-        java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND): Unit
-      }
-    }
-    timeAppends("ingest_l0_append") { t =>
+    // Append cost on fresh throwaway tables: a unique tag per rep, so
+    // every rep pays a REAL leveled L0 append of the fixed batch (plain
+    // parquet append, no bucket fan-out) — O(batch) across tiers.
+    timed("ingest_l0_append") { rep =>
       graft.operators.Dedup.indexAppendLeveled(batch, "doc_id", "text",
         shingleSize = 3, numHashes = 32, bands = 16,
         graft.operators.ScaleOps.bucketTableName("graft_probe_apl0s", corpusDir),
         graft.operators.ScaleOps.bucketTableName("graft_probe_apl0b", corpusDir),
-        batchTag = t, foldEvery = Int.MaxValue)
-    }
-    timeAppends("ingest_bucketed_append") { t =>
-      graft.operators.Dedup.indexAppend(batch, "doc_id", "text",
-        shingleSize = 3, numHashes = 32, bands = 16,
-        graft.operators.ScaleOps.bucketTableName("graft_probe_apbks", corpusDir),
-        graft.operators.ScaleOps.bucketTableName("graft_probe_apbkb", corpusDir),
-        batchTag = t, buckets = 32)
+        batchTag = s"ingest_l0_append_$rep", foldEvery = Int.MaxValue)
+      0L
     }
     spark.stop()
   }
