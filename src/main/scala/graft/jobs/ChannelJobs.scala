@@ -8,18 +8,23 @@ import graft.sources.{AuditLog, VersionedTable}
   * (`S1:1261-1304` = `/root/reference/PySpark_Scripts/
   * stage_1_hcp_channel_all_hardcode.py`):
   *
-  *   audit INITIATED → nvs_tam → nvs_digital → catalog refresh → audit COMPLETED
+  *   audit INITIATED → {nvs_tam ∥ nvs_digital} → catalog refresh → audit COMPLETED
   *
-  * Each job materializes ONE DataFrame (persist → count → staging overwrite →
-  * versioned append, S1:185-222,1086-1125): the six digital views are lazy
-  * plan aliases that Catalyst inlines and optimizes as a whole — only the
-  * final union is ever executed (SURVEY §3). We add the `unpersist` the
-  * reference leaks (SURVEY §4, harmless there, correct here).
+  * The reference runs the two jobs one after the other; they read disjoint
+  * staging views and write disjoint paths, so here they run concurrently
+  * (see [[par]]). Each job materializes ONE DataFrame (persist → count →
+  * {staging overwrite ∥ versioned append}, S1:185-222,1086-1125): the six
+  * digital views are lazy plan aliases that Catalyst inlines and optimizes as
+  * a whole — only the final union is ever executed (SURVEY §3). We add the
+  * `unpersist` the reference leaks (SURVEY §4, harmless there, correct here).
   *
-  * Scale notes: the persist covers exactly two actions (count + write) per
-  * job; `coalesce(8)` mirrors the reference's output-file sizing — at real
-  * scale pass `outputFiles` sized to ~128MB-1GB per file. The versioned
-  * append touches only the new `version=` partition directory.
+  * Scale notes: the persist covers exactly three actions (count + two
+  * writes) per job, and both writes read the cache; `coalesce(8)` mirrors
+  * the reference's output-file sizing — at real scale pass `outputFiles`
+  * sized to ~128MB-1GB per file. The versioned append touches only the new
+  * `version=` partition directory. Running the jobs side by side fills the
+  * cores one job alone leaves idle on plan building and small stages; it
+  * keeps both jobs' cached frames live at once.
   */
 object ChannelJobs {
 
@@ -32,22 +37,48 @@ object ChannelJobs {
 
   final case class TableWrite(table: String, rows: Long, version: Long)
 
-  /** persist → count → overwrite staging → versioned historical append
-    * (S1:185-222 for tam, S1:1086-1125 for digital). */
-  def materialize(s: SparkSession, df: DataFrame, table: String,
+  /** Runs `a` on a fresh thread and `b` on the calling one, and returns once
+    * both have finished. If either throws, the other is still joined; then
+    * `a`'s error (else `b`'s) is rethrown, with the other attached by
+    * `addSuppressed`. The forked thread never outlives the call. Each side
+    * owns its [[graft.core.CacheScope]], which is per thread. */
+  private def par[A, B](a: => A, b: => B): (A, B) = {
+    var ra: Either[Throwable, A] = null
+    val t = new Thread(() => ra = try Right(a) catch { case e: Throwable => Left(e) },
+      "ChannelJobs.par")
+    t.start()
+    val rb = try Right(b) catch { case e: Throwable => Left(e) }
+    var interrupted = false
+    while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(ea), Left(eb)) => ea.addSuppressed(eb); throw ea
+      case (Left(e), _) => throw e
+      case (_, Left(e)) => throw e
+    }
+  }
+
+  /** persist → count → {overwrite staging ∥ versioned historical append}
+    * (S1:185-222 for tam, S1:1086-1125 for digital). `df` is built inside
+    * the drain, so the persists a build registers are released even when
+    * the build itself throws. */
+  def materialize(s: SparkSession, df: => DataFrame, table: String,
       cfg: JobConfig): TableWrite = {
-    val persisted = df.persist()
     try {
-      val n = persisted.count() // ACTION 1 — executes + caches (S1:188)
-      persisted.coalesce(cfg.outputFiles)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"${cfg.outDir}/${table}_staging") // ACTION 2, from cache (S1:191)
-      val hist = new VersionedTable(s, s"${cfg.outDir}/${table}_historical",
-        cfg.outputFiles)
-      val v = hist.snapshot(persisted) // max(version)+1 append (S1:208-222)
-      TableWrite(table, n, v)
+      val persisted = df.persist()
+      try {
+        val n = persisted.count() // ACTION 1 — executes + caches (S1:188)
+        val hist = new VersionedTable(s, s"${cfg.outDir}/${table}_historical",
+          cfg.outputFiles)
+        val (_, v) = par(
+          persisted.coalesce(cfg.outputFiles)
+            .write.mode(SaveMode.Overwrite)
+            .parquet(s"${cfg.outDir}/${table}_staging"), // ACTION 2, from cache (S1:191)
+          hist.snapshot(persisted)) // max(version)+1 append (S1:208-222)
+        TableWrite(table, n, v)
+      } finally persisted.unpersist()
     } finally {
-      persisted.unpersist()
       // materialize runs the job's terminal actions, so it is the session
       // owner in the CacheScope contract: release operator-internal persists
       // (NvsPipeline's allHcp union) here, or a rerun re-persisting the
@@ -64,16 +95,18 @@ object ChannelJobs {
   def runDigital(s: SparkSession, cfg: JobConfig): TableWrite =
     materialize(s, NvsPipeline.combined(s), "digital_nvs", cfg)
 
-  /** Full driver sequence (S1:1279-1304). `registry.refresh` stands in for the
-    * Glue crawler (M-6): re-reads written parquet footers so downstream
-    * consumers see the new tables through the catalog. */
+  /** Full driver sequence (S1:1279-1304), with the two jobs run concurrently.
+    * COMPLETED is written only when both jobs succeed. `registry.refresh`
+    * stands in for the Glue crawler (M-6): re-reads written parquet footers
+    * so downstream consumers see the new tables through the catalog. */
   def run(s: SparkSession, cfg: JobConfig,
       registry: Option[TableRegistry] = None): Seq[TableWrite] = {
     val auditPath = s"${cfg.outDir}/audit_log"
     val start = new java.sql.Timestamp(System.currentTimeMillis()).toString
     AuditLog.initiated(s, auditPath, cfg.script, cfg.layer, cfg.batchId, start)
 
-    val writes = Seq(runTam(s, cfg), runDigital(s, cfg))
+    val (tam, digital) = par(runTam(s, cfg), runDigital(s, cfg))
+    val writes = Seq(tam, digital)
 
     registry.foreach { r =>
       r.register("tam_nvs_staging", s"${cfg.outDir}/tam_nvs_staging")

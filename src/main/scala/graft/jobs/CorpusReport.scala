@@ -74,7 +74,7 @@ object CorpusReport {
 
     // the fit is a 1-row summary — reading it on the driver and riding it as
     // a literal beats a 1×N join for plan simplicity (same precedent as
-    // VersionedTable's max-version head)
+    // the reference's max-version head, S1:209-211)
     val z = TextAnalysis.zipfSlope(docs, "text", cfg.vocabK).head()
     rolled
       .withColumn("zipf_slope",

@@ -38,4 +38,11 @@ object Bridge {
     * `java.util.concurrent.TimeoutException` after `timeoutMs`. */
   def drainListeners(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** Number of plans the session's CacheManager holds (`numCachedEntries`
+    * is `private[sql]`): persisted frames count from `persist()` on, before
+    * any action materializes them. */
+  def cachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }

@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
 import graft.SparkSpec
 import graft.sources.VersionedTable
 
@@ -41,6 +42,33 @@ class VersionedTableSpec extends SparkSpec {
     // version is a partition column → the at() scan prunes to one directory
     val plan = vt.at(1).queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("version"))
+
+    // latestVersion is a directory listing: only numeric version=<n> dirs
+    // count, bookkeeping entries and non-numeric suffixes are skipped
+    val listed = Files.createTempDirectory("graft_vt_list")
+    Files.createFile(listed.resolve("_SUCCESS"))
+    Seq("_temporary", ".hidden", "version=abc", "version=2", "version=10")
+      .foreach(d => Files.createDirectory(listed.resolve(d)))
+    assert(new VersionedTable(spark, listed.toString).latestVersion.contains(10L))
+    assert(new VersionedTable(spark, s"$listed/missing").latestVersion.isEmpty)
+    val empty = Files.createTempDirectory("graft_vt_empty").toString
+    assert(new VersionedTable(spark, empty).latestVersion.isEmpty)
+    assert(!new VersionedTable(spark, empty).exists)
+
+    // ... and it starts no Spark job
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    Bridge.drainListeners(sc, 10000)
+    sc.addSparkListener(counter)
+    try {
+      assert(vt.latestVersion.contains(2L))
+      Bridge.drainListeners(sc, 10000)
+    } finally sc.removeSparkListener(counter)
+    assert(jobs.get == 0, s"latestVersion started ${jobs.get} Spark job(s)")
   }
 }
 

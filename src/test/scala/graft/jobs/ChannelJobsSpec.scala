@@ -1,15 +1,28 @@
 package graft.jobs
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
 import graft.SparkSpec
 import graft.core.TableRegistry
 import graft.sources.AuditLog
 
 /** End-to-end driver sequence over the fixtures: staging overwrite, versioned
   * historical append with monotone versions, audit INITIATED/COMPLETED rows
-  * (S1:1261-1304 lifecycle). */
+  * (S1:1261-1304 lifecycle), and the concurrent jobs' failure semantics. */
 class ChannelJobsSpec extends SparkSpec {
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** Runs `body` with `views` dropped, and registers the fixtures again after. */
+  private def withoutViews[T](views: String*)(body: => T): T = {
+    NvsFixtures.registerAll(spark)
+    views.foreach(spark.catalog.dropTempView)
+    try body finally NvsFixtures.registerAll(spark)
+  }
 
   test("EnvConfig: two-env INI selects by argument; missing section raises " +
       "the reference's error") {
@@ -95,5 +108,65 @@ class ChannelJobsSpec extends SparkSpec {
       .select("table_name", "rows_updated").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(counts == w1.map(w => w.table -> w.rows).toMap)
+  }
+
+  test("concurrent run equals the two jobs run one after the other") {
+    NvsFixtures.registerAll(spark)
+    val dir = Files.createTempDirectory("graft_par").toString
+    val seqDir = Files.createTempDirectory("graft_seq").toString
+    val cfg = ChannelJobs.JobConfig(outDir = dir, batchId = "p1", outputFiles = 2)
+    val seqCfg = cfg.copy(outDir = seqDir)
+    val w = ChannelJobs.run(spark, cfg)
+    val ws = Seq(ChannelJobs.runTam(spark, seqCfg), ChannelJobs.runDigital(spark, seqCfg))
+    assert(w == ws)
+    for (t <- Seq("tam_nvs", "digital_nvs"))
+      assert(sameRows(spark.read.parquet(s"$dir/${t}_staging"),
+        spark.read.parquet(s"$seqDir/${t}_staging")), t)
+
+    val w2 = ChannelJobs.run(spark, cfg.copy(batchId = "p2"))
+    assert(w2.map(_.version) == Seq(2L, 2L))
+    for (t <- Seq("tam_nvs", "digital_nvs")) {
+      val hist = spark.read.parquet(s"$dir/${t}_historical")
+      assert(hist.select("version").distinct().collect().map(_.getInt(0)).toSet ==
+        Set(1, 2), t)
+      assert(sameRows(hist.where(col("version") === 2).drop("version"),
+        spark.read.parquet(s"$dir/${t}_staging")), t)
+    }
+  }
+
+  test("a failing build releases the persists it registered") {
+    val before = Bridge.cachedEntries(spark)
+    withoutViews("hcp_all_weekly") {
+      val dir = Files.createTempDirectory("graft_leak").toString
+      intercept[AnalysisException](
+        ChannelJobs.run(spark, ChannelJobs.JobConfig(outDir = dir, outputFiles = 2)))
+    }
+    assert(graft.core.CacheScope.pending == 0)
+    assert(Bridge.cachedEntries(spark) <= before,
+      s"cache entries $before -> ${Bridge.cachedEntries(spark)}")
+  }
+
+  test("one job failing: the other completes, no COMPLETED row, no thread left") {
+    val dir = Files.createTempDirectory("graft_fail").toString
+    val cfg = ChannelJobs.JobConfig(outDir = dir, batchId = "f1", outputFiles = 2)
+    withoutViews("costs_wide") {
+      intercept[AnalysisException](ChannelJobs.run(spark, cfg))
+    }
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "ChannelJobs.par"))
+    val tam = NvsPipeline.tamCe(spark)
+    assert(sameRows(spark.read.parquet(s"$dir/tam_nvs_staging"), tam))
+    val hist = spark.read.parquet(s"$dir/tam_nvs_historical")
+    assert(hist.select("version").distinct().collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(sameRows(hist.drop("version"), tam))
+    val audit = AuditLog.read(spark, s"$dir/audit_log").where(col("batch_id") === "f1")
+    assert(audit.where(col("log_id_status") === "INITIATED").count() == 1)
+    assert(audit.where(col("log_id_status") === "COMPLETED").isEmpty)
+
+    // both failing: tam's error is thrown, digital's rides along suppressed
+    val both = withoutViews("nvs_calls_v1", "costs_wide") {
+      intercept[AnalysisException](ChannelJobs.run(spark, cfg.copy(batchId = "f2")))
+    }
+    assert(both.getMessage.contains("nvs_calls_v1"))
+    assert(both.getSuppressed.exists(_.getMessage.contains("costs_wide")))
   }
 }
