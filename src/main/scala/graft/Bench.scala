@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     // SPARK_GRAFT_BENCH_ONLY=q169,q140 restricts the run to the named
     // query prefixes — for targeted iteration; the driver's full run
     // leaves it unset
@@ -85,8 +80,14 @@ object Bench {
     // three rounds of bench history while measuring 0.4s isolated). One
     // untimed pass puts every timed number at steady-state engine cost —
     // what a long-lived cluster session actually sees.
-    ordered.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+    // A failure is one stderr line (full name, exception class, message);
+    // Throwable is caught so one query's OOM can't end the whole bench.
+    def failed(phase: String, name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $phase $name failed: " +
+        s"${e.getClass.getName}: ${e.getMessage}".replace('\n', ' '))
+    ordered.foreach { case (name, fn) =>
+      try { fn(spark, sfDir).count() }
+      catch { case e: Throwable => failed("warmup", name, e) }
       graft.core.CacheScope.drain()
     }
     // MEDIAN of three timed executions per query (warmup pass discarded
@@ -101,13 +102,17 @@ object Bench {
     val perPass = Array.fill(nPasses)(0.0)
     val allTimes = ordered.map { case (name, fn) =>
       val ts = (0 until nPasses).map { p =>
-        val t0 = System.nanoTime()
         // a crashed query must not masquerade as a fast one: record it for
         // the JSON's errors field (the harness keeps only a short output
-        // tail, so a mid-run stack trace alone can scroll away unseen)
-        try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => errored += name; -1L }
-        val t = (System.nanoTime() - t0) / 1e9
+        // tail, so a mid-run stack trace alone can scroll away unseen) and
+        // report its first failure
+        val (t, _) = graft.core.Timing.seconds {
+          try { fn(spark, sfDir).count() }
+          catch { case e: Throwable =>
+            if (errored.add(name)) failed("timed", name, e)
+            -1L
+          }
+        }
         // per-query cache release is part of session hygiene, not query
         // compute — drained outside the timed region
         graft.core.CacheScope.drain()
@@ -129,7 +134,7 @@ object Bench {
     def short(k: String): String =
       k.indexOf('_') match { case -1 => k; case i => k.substring(0, i) }
     def toJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + short(k) + "\":" + f3(v) }
+      rs.map { case (k, v) => graft.core.Jsons.str(short(k)) + ":" + f3(v) }
         .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // The streaming driver gates (qNN_stream_*) pay a fixed MemoryStream
@@ -137,7 +142,7 @@ object Bench {
     // out so round-over-round comparisons of the batch total aren't
     // swamped by gate-harness latency.
     val streaming = results.filter(_._1.contains("_stream_")).map(_._2).sum
-    val errs = errored.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errs = errored.toSeq.map(graft.core.Jsons.str).mkString("[", ",", "]")
     val passes = perPass.map(f3).mkString("[", ",", "]")
     // Matched-window ratio vs the persisted DuckDB oracle measurement
     // (ORACLE_BASELINE.json, written by scripts/time_oracle.py): the naive

@@ -172,15 +172,14 @@ object CurationJob {
         case Some(sd) =>
           stageN += 1
           val p = s"$sd/stage$stageN"
-          val t0 = System.nanoTime()
-          df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-          profile(s"stage$stageN $label", (System.nanoTime() - t0) / 1e9)
+          val (t, _) = graft.core.Timing.seconds(
+            df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p))
+          profile(s"stage$stageN $label", t)
           docs.sparkSession.read.parquet(p)
       }
     def timedCount(label: String, df: DataFrame): Long = {
-      val t0 = System.nanoTime()
-      val n = df.count()
-      profile(s"count $label", (System.nanoTime() - t0) / 1e9, s" ($n rows)")
+      val (t, n) = graft.core.Timing.seconds(df.count())
+      profile(s"count $label", t, s" ($n rows)")
       n
     }
     val input = timedCount("input", docs)

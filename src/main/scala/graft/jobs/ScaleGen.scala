@@ -58,9 +58,9 @@ object ScaleGen {
       df.crossJoin(s.range(factor).select(col("id").as("rep")))
 
     def write(name: String)(df: DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.mode(SaveMode.Overwrite).parquet(s"$out/$name.parquet")
-      println(f"SCALEGEN $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      val (t, _) = graft.core.Timing.seconds(
+        df.write.mode(SaveMode.Overwrite).parquet(s"$out/$name.parquet"))
+      println(f"SCALEGEN $name $t%.1f s")
     }
 
     if (docMode == "boilerplate") {

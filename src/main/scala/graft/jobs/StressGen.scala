@@ -167,11 +167,11 @@ object StressGen {
   * 10/100/992 patterns (flat cost) vs the per-pattern declarative twin. */
 object StressMain {
   def main(args: Array[String]): Unit = {
-    val s = graft.core.Sessions.local(32)
+    val s = graft.core.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"STRESS $label ${(System.nanoTime() - t0) / 1e9}%.2f s ($rows rows)")
+      val (t, rows) = graft.core.Timing.seconds(f)
+      println(f"STRESS $label $t%.2f s ($rows rows)")
     }
 
     if (args.headOption.contains("curation")) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan and wall time of one catalog
   * query. `sbt "runMain graft.tools.Explain q46_fuzzy_edit_pairs [sfDir] [n]
   * [pre1,pre2,…]"` (n = timed repetitions after a discarded warmup, default
@@ -14,29 +12,22 @@ object Explain {
     val reps = if (args.length > 2) args(2).toInt else 1
     val pre = if (args.length > 3) args(3).split(",").toSeq else Seq.empty
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     val q = graft.QueryCatalog.all.find(_.name == name)
       .getOrElse(sys.error(s"no such query: $name"))
     q.run(spark, sfDir).explain("formatted")
-    if (pre.isEmpty) {
-      q.run(spark, sfDir).count() // warmup: codegen + scan metadata
-    } else {
-      pre.foreach { p =>
-        graft.QueryCatalog.all.find(_.name == p)
-          .foreach { pq => pq.run(spark, sfDir).count() }
-        graft.core.CacheScope.drain()
-      }
-    }
-    graft.core.CacheScope.drain()
-    (1 to reps).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = q.run(spark, sfDir).count()
-      println(f"[explain] run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      graft.core.CacheScope.drain()
+    graft.core.Timing.warmThenTime[Long](reps, after = (rep, t, n) =>
+      if (rep != "warm") println(f"[explain] run $rep: $t%.2f s ($n rows)")) {
+      // the pre list stands in for the same-query warmup
+      case "warm" if pre.nonEmpty =>
+        pre.foreach { p =>
+          graft.QueryCatalog.all.find(_.name == p)
+            .foreach { pq => pq.run(spark, sfDir).count() }
+          graft.core.CacheScope.drain()
+        }
+        0L
+      // the warmup pays codegen + scan metadata; the timed runs follow
+      case _ => q.run(spark, sfDir).count()
     }
     spark.stop()
   }

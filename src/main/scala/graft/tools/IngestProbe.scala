@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Dev tool: the fixed-batch ingest-cost probe behind the
@@ -17,9 +16,9 @@ import org.apache.spark.sql.functions.col
   * against the unindexed [[Dedup.minhashCandidatesIncremental]] (which
   * re-shingles and re-signs the corpus every call). Indexed per-batch
   * cost should stay ~flat across tiers; the unindexed path grows with
-  * the corpus. Prints SCALEAUDIT-style lines (min-estimator protocol:
-  * report the MIN across reps) and appends SPARK_GRAFT_SCALE_OUT JSONL
-  * like ScaleAudit when set.
+  * the corpus. Each tag is one [[ScaleAudit.measure]]: the same
+  * SCALEAUDIT line (median, all reps, spill and peak memory) and the same
+  * SPARK_GRAFT_SCALE_OUT JSONL row when set.
   *
   * Usage: `IngestProbe <corpusDir> [reps]` (batch dir pinned to sf0.1) */
 object IngestProbe {
@@ -28,40 +27,17 @@ object IngestProbe {
     val reps = if (args.length > 1) args(1).toInt else 3
     val batchDir = "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.core.Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus
-    ).getOrCreate()
+    val spark = graft.core.Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    val out = sys.env.get("SPARK_GRAFT_SCALE_OUT")
     val corpus = spark.read.parquet(s"$corpusDir/documents.parquet")
       .where(col("doc_id") % 4 =!= 0)
     val batch = spark.read.parquet(s"$batchDir/documents.parquet")
       .where(col("doc_id") % 4 === 0)
-    // one timed op per tag: a discarded warmup, then `reps` timed calls;
-    // `op` gets the rep label ("warm", "1", ...) and returns its row count
-    def timed(tag: String)(op: String => Long): Unit = {
-      var rows = op("warm")
-      graft.core.CacheScope.drain()
-      val times = (1 to reps).map { i =>
-        val t0 = System.nanoTime()
-        rows = op(i.toString)
-        val t = (System.nanoTime() - t0) / 1e9
-        graft.core.CacheScope.drain()
-        t
-      }.sorted
-      val all = times.map(t => f"$t%.2f").mkString(",")
-      println(f"SCALEAUDIT $tag $corpusDir ${times.head}%.2f s ($rows rows) all=$all")
-      sys.env.get("SPARK_GRAFT_SCALE_OUT").foreach { path =>
-        def js(s: String): String = graft.core.Jsons.str(s)
-        val line = s"""{"query":${js(tag)},"dir":${js(corpusDir)},""" +
-          s""""median_s":${times(times.size / 2)},"rows":$rows,""" +
-          s""""all_s":[${times.mkString(",")}]}""" + "\n"
-        java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND): Unit
-      }
-    }
+    // one ScaleAudit measurement per tag; `op` gets the rep label ("warm",
+    // "1", ...) and returns its row count
+    def timed(tag: String)(op: String => Long): Unit =
+      ScaleAudit.measure(spark, tag, corpusDir, reps, out)(op)
     // a probe's warmup builds the index it reads (indexed runs)
     def run(tag: String, f: () => org.apache.spark.sql.DataFrame): Unit =
       timed(tag)(_ => f().count())

@@ -103,3 +103,72 @@ class SessionsSpec extends SparkSpec {
       Seq("event_id", "payload"))
   }
 }
+
+class TimingSpec extends SparkSpec {
+
+  test("warmThenTime runs one warmup plus n timed runs, sorted times, last result") {
+    val labels = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (times, last) = Timing.warmThenTime(4) { rep =>
+      labels += rep
+      labels.size
+    }
+    assert(labels.toSeq == Seq("warm", "1", "2", "3", "4"))
+    assert(last == 5)
+    assert(times.size == 4)
+    assert(times.forall(_ >= 0.0))
+    assert(times == times.sorted)
+  }
+
+  test("warmThenTime drains CacheScope after every run, also when the op throws") {
+    def persistAndCount(): Long =
+      CacheScope.persist(spark.range(5).toDF("id")).count()
+    val seenPending = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val (_, n) = Timing.warmThenTime(2) { _ =>
+      seenPending += CacheScope.pending
+      persistAndCount()
+    }
+    assert(n == 5L)
+    assert(seenPending.toSeq == Seq(0, 0, 0), "a run started with undrained persists")
+    assert(CacheScope.pending == 0)
+
+    val e = intercept[IllegalStateException] {
+      Timing.warmThenTime(3) { rep =>
+        persistAndCount()
+        if (rep == "2") throw new IllegalStateException("boom on rep 2")
+        1L
+      }
+    }
+    assert(e.getMessage == "boom on rep 2")
+    assert(CacheScope.pending == 0)
+  }
+
+  test("ScaleAudit.measure appends one JSON row that spark.read.json reads back") {
+    val out = Files.createTempDirectory("graft_scale_out").resolve("rows.jsonl")
+    val dir = "/data/q\"uo\\te"
+    graft.tools.ScaleAudit.measure(spark, "tag_rt", dir, reps = 2,
+      Some(out.toString))(_ => spark.range(7).count())
+    assert(Files.readAllLines(out).size == 1)
+    val df = spark.read.json(out.toString)
+    assert(!df.columns.contains("_corrupt_record"))
+    val r = df.collect().head
+    assert(r.getAs[String]("query") == "tag_rt")
+    assert(r.getAs[String]("dir") == dir)
+    assert(r.getAs[Long]("rows") == 7L)
+    assert(r.getAs[scala.collection.Seq[Double]]("all_s").size == 2)
+    Seq("median_s", "spill_mem_mb", "spill_disk_mb", "peak_exec_mb").foreach { f =>
+      assert(!r.isNullAt(r.fieldIndex(f)), s"$f missing")
+    }
+  }
+
+  test("System.nanoTime appears in exactly one main source file: the shared loop") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val hits = scala.util.Using.resource(Files.walk(root)) { paths =>
+      paths.iterator.asScala
+        .filter(p => Files.isRegularFile(p) &&
+          Files.readString(p).contains("System.nanoTime"))
+        .map(root.relativize(_).toString).toList
+    }
+    assert(hits == List("graft/core/Timing.scala"))
+  }
+}
