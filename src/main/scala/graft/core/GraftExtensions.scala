@@ -12,105 +12,64 @@ import graft.functions.{ArrayDot, CharBigramCounts, CompressionRatio, HilbertInd
   * word_shingles(text, 3) ...")` plans the same codegen'd operator the
   * DataFrame API uses — no separate SQL/DataFrame capability surface. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text, Literal(n: Int, _)) if n >= 1 => WordShingles(text, n)
-        case Seq(text) => WordShingles(text, 3)
-        case _ => throw new IllegalArgumentException(
-          "word_shingles(text[, n]) — n must be an integer literal >= 1")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDot].getName, "array_dot"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => ArrayDot(a, b)
-        case _ => throw new IllegalArgumentException("array_dot(a, b)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("quantize_int8"),
-      new ExpressionInfo(classOf[QuantizeInt8].getName, "quantize_int8"),
-      (args: Seq[Expression]) => args match {
-        case Seq(v) => QuantizeInt8(v)
-        case _ => throw new IllegalArgumentException("quantize_int8(vec)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text, Literal(n: Int, _), Literal(k: Int, _)) =>
-          MinhashSig(text, n, k)
-        case Seq(text) => MinhashSig(text, 3, 32)
-        case _ => throw new IllegalArgumentException(
-          "minhash_sig(text[, n, numHashes]) — n/numHashes integer literals")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("token_counts"),
-      new ExpressionInfo(classOf[TokenCounts].getName, "token_counts"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => TokenCounts(text)
-        case _ => throw new IllegalArgumentException("token_counts(text)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("char_bigram_counts"),
-      new ExpressionInfo(classOf[CharBigramCounts].getName, "char_bigram_counts"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => CharBigramCounts(text)
-        case _ => throw new IllegalArgumentException("char_bigram_counts(text)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("hilbert_index"),
-      new ExpressionInfo(classOf[HilbertIndex].getName, "hilbert_index"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b, Literal(bits: Int, _)) => HilbertIndex(a, b, bits)
-        case Seq(a, b) => HilbertIndex(a, b, 16)
-        case _ => throw new IllegalArgumentException(
-          "hilbert_index(a, b[, bits]) — bits an integer literal in [1, 31]")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text, Literal(n: Int, _)) if n >= 1 => ShingleHashes(text, n)
-        case Seq(text) => ShingleHashes(text, 3)
-        case _ => throw new IllegalArgumentException(
-          "shingle_hashes(text[, n]) — n must be an integer literal >= 1")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("segment_hashes"),
-      new ExpressionInfo(classOf[SegmentHashes].getName, "segment_hashes"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text, Literal(w: Int, _)) if w >= 1 => SegmentHashes(text, w)
-        case Seq(text) => SegmentHashes(text, 8)
-        case _ => throw new IllegalArgumentException(
-          "segment_hashes(text[, w]) — w must be an integer literal >= 1")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimhashSig].getName, "simhash_sig"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => SimhashSig(text, graft.operators.Dedup.SimhashBits)
-        case Seq(text, Literal(b: Int, _)) => SimhashSig(text, b)
-        case _ => throw new IllegalArgumentException(
-          "simhash_sig(text[, bits]) — bits an integer literal in [1, 60]")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("compression_ratio"),
-      new ExpressionInfo(classOf[CompressionRatio].getName, "compression_ratio"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => CompressionRatio(text)
-        case _ => throw new IllegalArgumentException("compression_ratio(text)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_counts"),
-      new ExpressionInfo(classOf[NgramCounts].getName, "ngram_counts"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text, Literal(n: Int, _)) if n >= 1 => NgramCounts(text, n)
-        case Seq(text) => NgramCounts(text, 2)
-        case _ => throw new IllegalArgumentException(
-          "ngram_counts(text[, n]) — n must be an integer literal >= 1")
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((
+        new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name),
+        (args: Seq[Expression]) => f.build.applyOrElse(args,
+          (_: Seq[Expression]) => throw new IllegalArgumentException(f.usage))))
+    }
+}
+
+object GraftExtensions {
+  /** One SQL function: its name, the expression it plans, the argument
+    * shapes it accepts (anything else fails analysis with `usage`). */
+  private[graft] final case class SqlFunction(name: String, cls: Class[_ <: Expression],
+      build: PartialFunction[Seq[Expression], Expression], usage: String)
+
+  private[graft] val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("word_shingles", classOf[WordShingles], {
+      case Seq(text, Literal(n: Int, _)) if n >= 1 => WordShingles(text, n)
+      case Seq(text) => WordShingles(text, 3)
+    }, "word_shingles(text[, n]) — n must be an integer literal >= 1"),
+    SqlFunction("array_dot", classOf[ArrayDot], {
+      case Seq(a, b) => ArrayDot(a, b)
+    }, "array_dot(a, b)"),
+    SqlFunction("quantize_int8", classOf[QuantizeInt8], {
+      case Seq(v) => QuantizeInt8(v)
+    }, "quantize_int8(vec)"),
+    SqlFunction("minhash_sig", classOf[MinhashSig], {
+      case Seq(text, Literal(n: Int, _), Literal(k: Int, _)) => MinhashSig(text, n, k)
+      case Seq(text) => MinhashSig(text, 3, 32)
+    }, "minhash_sig(text[, n, numHashes]) — n/numHashes integer literals"),
+    SqlFunction("token_counts", classOf[TokenCounts], {
+      case Seq(text) => TokenCounts(text)
+    }, "token_counts(text)"),
+    SqlFunction("char_bigram_counts", classOf[CharBigramCounts], {
+      case Seq(text) => CharBigramCounts(text)
+    }, "char_bigram_counts(text)"),
+    SqlFunction("hilbert_index", classOf[HilbertIndex], {
+      case Seq(a, b, Literal(bits: Int, _)) => HilbertIndex(a, b, bits)
+      case Seq(a, b) => HilbertIndex(a, b, 16)
+    }, "hilbert_index(a, b[, bits]) — bits an integer literal in [1, 31]"),
+    SqlFunction("shingle_hashes", classOf[ShingleHashes], {
+      case Seq(text, Literal(n: Int, _)) if n >= 1 => ShingleHashes(text, n)
+      case Seq(text) => ShingleHashes(text, 3)
+    }, "shingle_hashes(text[, n]) — n must be an integer literal >= 1"),
+    SqlFunction("segment_hashes", classOf[SegmentHashes], {
+      case Seq(text, Literal(w: Int, _)) if w >= 1 => SegmentHashes(text, w)
+      case Seq(text) => SegmentHashes(text, 8)
+    }, "segment_hashes(text[, w]) — w must be an integer literal >= 1"),
+    SqlFunction("simhash_sig", classOf[SimhashSig], {
+      case Seq(text) => SimhashSig(text, graft.operators.Dedup.SimhashBits)
+      case Seq(text, Literal(b: Int, _)) => SimhashSig(text, b)
+    }, "simhash_sig(text[, bits]) — bits an integer literal in [1, 60]"),
+    SqlFunction("compression_ratio", classOf[CompressionRatio], {
+      case Seq(text) => CompressionRatio(text)
+    }, "compression_ratio(text)"),
+    SqlFunction("ngram_counts", classOf[NgramCounts], {
+      case Seq(text, Literal(n: Int, _)) if n >= 1 => NgramCounts(text, n)
+      case Seq(text) => NgramCounts(text, 2)
+    }, "ngram_counts(text[, n]) — n must be an integer literal >= 1"))
 }

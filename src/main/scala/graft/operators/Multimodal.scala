@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Multimodal (image/audio/video) column plumbing.
+/** Multimodal (image/audio) column plumbing.
   *
   * Media travel as opaque `binary` columns plus typed metadata — the schema,
   * partition behavior, and batch shape are real and tested; only the codec call
@@ -110,13 +110,8 @@ object Multimodal {
     // block-average luma over the 8×8 partition of the real image — the
     // classic aHash downscale (each cell = mean luminance of its block;
     // images smaller than 8×8 map pixels onto cells directly)
-    def grid8(payload: Array[Byte]): Array[Float] = grid8Of(read(payload))
-
-    /** The same 8×8 luma grid on an ALREADY-decoded frame — shared by the
-      * single-image path and the multi-frame video path, so a frame and
-      * the identical still image hash identically. */
-    private[operators] def grid8Of(
-        img: java.awt.image.BufferedImage): Array[Float] = {
+    def grid8(payload: Array[Byte]): Array[Float] = {
+      val img = read(payload)
       val (w, h) = (img.getWidth, img.getHeight)
       val sums = new Array[Float](64); val counts = new Array[Float](64)
       var y = 0
@@ -136,27 +131,6 @@ object Multimodal {
       Array.tabulate(64)(c => if (counts(c) == 0) 0f else sums(c) / counts(c))
     }
 
-    /** REAL multi-frame decode: every stored frame of an animated GIF (or
-      * any multi-image container ImageIO can read), in order. Frames come
-      * back AS STORED — GIF delta frames are not composited over their
-      * predecessors (the JDK reader exposes no disposal pipeline); encode
-      * fixtures/corpora with full frames, the norm for training-data
-      * stills. A single-frame image yields a 1-element sequence, so the
-      * video path degrades to the image path on still payloads. */
-    def readFrames(payload: Array[Byte]): Seq[java.awt.image.BufferedImage] = {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext)
-        throw new IllegalArgumentException(
-          s"payload (${payload.length} bytes) is not a decodable image")
-      val reader = readers.next()
-      try {
-        reader.setInput(iis)
-        val n = reader.getNumImages(true)
-        (0 until n).map(reader.read)
-      } finally { reader.dispose(); iis.close() }
-    }
     /** REAL resample: decode → `Graphics2D` bilinear scale → PNG re-encode.
       * PNG (lossless) keeps the round-trip deterministic — the same payload
       * and target always produce identical bytes, which downstream
@@ -255,50 +229,6 @@ object Multimodal {
       envelope(decode(payload)._1, dims)
     def grid8(payload: Array[Byte]): Array[Float] =
       envelope(decode(payload)._1, 64)
-    /** Silence-split segmentation — the audio analog of text chunking:
-      * contiguous ACTIVE sample spans, where a span is a maximal run of
-      * RMS windows at or above `thresholdFrac` of the loudest window
-      * (scale-free: a quiet recording segments like a loud one). Returns
-      * [start, end) sample offsets. An all-silent (or empty) payload
-      * yields no spans. */
-    def activeSegments(payload: Array[Byte], windows: Int = 64,
-        thresholdFrac: Double = 0.1): Seq[(Long, Long)] = {
-      require(windows >= 1 && thresholdFrac > 0 && thresholdFrac <= 1,
-        "windows >= 1, thresholdFrac in (0, 1]")
-      val (s, _, _) = decode(payload)
-      if (s.isEmpty) return Nil
-      // Cap windows at the sample count (a window narrower than one sample
-      // has no RMS), and compute each window's [lo, hi) ONCE — the span
-      // loop reuses the same bounds, so spans are always non-empty and
-      // tile the sample range exactly.
-      val w = math.min(windows, s.length)
-      val los = new Array[Int](w)
-      val his = new Array[Int](w)
-      val rms = new Array[Double](w)
-      var c = 0
-      while (c < w) {
-        los(c) = (c.toLong * s.length / w).toInt
-        his(c) = ((c + 1).toLong * s.length / w).toInt
-        var acc = 0.0; var i = los(c)
-        while (i < his(c)) { acc += s(i) * s(i); i += 1 }
-        rms(c) = math.sqrt(acc / math.max(his(c) - los(c), 1))
-        c += 1
-      }
-      val thr = rms.max * thresholdFrac
-      if (thr == 0) return Nil
-      val spans = Seq.newBuilder[(Long, Long)]
-      var start = -1L
-      c = 0
-      while (c < w) {
-        val active = rms(c) >= thr
-        if (active && start < 0) start = los(c).toLong
-        if (!active && start >= 0) { spans += ((start, los(c).toLong)); start = -1 }
-        if (active && c == w - 1) spans += ((start, his(c).toLong))
-        c += 1
-      }
-      spans.result()
-    }
-
     def resize(payload: Array[Byte], targetW: Int, targetH: Int): Array[Byte] = {
       require(targetW >= 1 && targetH >= 1, "target dims >= 1")
       val (s, rate, _) = decode(payload)
@@ -371,122 +301,6 @@ object Multimodal {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map(r =>
       r.copy(payload = codec.resize(r.payload, targetW, targetH))))
-  }
-
-  /** Distributed silence-split segmentation
-    * ([[WavCodec.activeSegments]] per row): one audio row in → one row per
-    * active span out (media_id, seg_idx, start_sample, end_sample) — the
-    * same narrow explode shape as [[sampleFrames]]; payloads never
-    * shuffle. */
-  def audioSegments(media: Dataset[MediaRow], windows: Int = 64,
-      thresholdFrac: Double = 0.1): DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      WavCodec.activeSegments(r.payload, windows, thresholdFrac)
-        .zipWithIndex.map { case ((lo, hi), i) => (r.media_id, i, lo, hi) }
-    }.toDF("media_id", "seg_idx", "start_sample", "end_sample")
-  }
-
-  /** Frame sampling for video-like payloads: split the byte stream into
-    * `frameSize` chunks, keep every `stride`-th — the row-explosion pattern a
-    * real frame sampler produces (one row in → many rows out, still narrow). */
-  def sampleFrames(media: Dataset[MediaRow], frameSize: Int, stride: Int):
-      DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      r.payload.grouped(frameSize).zipWithIndex
-        .filter { case (_, i) => i % stride == 0 }
-        .map { case (chunk, i) => (r.media_id, i, chunk.length, featureStub(chunk)) }
-    }.toDF("media_id", "frame_idx", "frame_bytes", "feature")
-  }
-
-  /** REAL video-frame sampling: decode every stored frame of each payload
-    * (animated GIF via [[ImageIoCodec.readFrames]]), keep every `stride`-th,
-    * and emit one narrow row per kept frame — (media_id, frame_idx, width,
-    * height, ahash64). The heavy pixels die inside the task: only the
-    * 8-byte perceptual hash and the frame geometry ever leave, so the
-    * row-explosion stays shuffle-cheap no matter how large the frames are.
-    * Feeding `ahash64` into [[Dedup.bandedHammingPairs]] (keyed on a
-    * media/frame composite) is cross-video frame dedup — the standard
-    * near-duplicate-still cut over video corpora; a frame and the same
-    * image ingested as a still hash IDENTICALLY (shared grid), so mixed
-    * image+video corpora dedup in one pass. */
-  def sampleDecodedFrames(media: Dataset[MediaRow], stride: Int = 1): DataFrame = {
-    require(stride >= 1, "stride >= 1")
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      ImageIoCodec.readFrames(r.payload).zipWithIndex
-        .filter { case (_, i) => i % stride == 0 }
-        .map { case (img, i) =>
-          (r.media_id, i, img.getWidth, img.getHeight,
-            averageHash64(ImageIoCodec.grid8Of(img)))
-        }
-    }.toDF("media_id", "frame_idx", "width", "height", "ahash64")
-  }
-
-  /** STUB batch encoder — stands in for a model-server / GPU call that
-    * consumes a whole batch at once. Deterministic and batch-size-invariant
-    * by construction (pure per-row math); a real encoder must also be
-    * row-wise deterministic or downstream hashes stop being reproducible. */
-  def batchEncodeStub(batch: Seq[MediaRow], dims: Int): Seq[(Long, Array[Float])] =
-    batch.map(r => r.media_id -> featureStub(r.payload, dims))
-
-  /** REAL batch encoder: deterministic random-projection embedding over the
-    * codec's perceptual 8×8 luminance grid — grid (64 dims) × a
-    * `dims`-row projection matrix whose weights come from the same
-    * md5-derived family as the LSH hyperplanes
-    * ([[graft.functions.Vectors.planeWeight]], offset 10_000 so encoder and
-    * index planes never alias). Random projection is a real embedding
-    * (Johnson–Lindenstrauss: pairwise distances preserved in expectation),
-    * not a fake: visually close images (close grids) land close in the
-    * embedding, distinct scenes don't — with zero external model artifact
-    * and exact cross-run determinism. The matrix multiply runs once per
-    * BATCH (the weights stay hot in cache across the batch's rows) — the
-    * compute shape a GPU/model-server call has, on real math. */
-  final class ProjectionEncoder(codec: Codec = StubCodec, dims: Int = 16)
-      extends Serializable {
-    // built lazily PER EXECUTOR (not serialized with the closure): 64·dims
-    // doubles derived from md5, identical on every executor by construction
-    @transient private lazy val w: Array[Array[Float]] =
-      Array.tabulate(dims, 64)((o, i) =>
-        graft.functions.Vectors.planeWeight(10000 + o, i).toFloat)
-    def encode(batch: Seq[MediaRow]): Seq[(Long, Array[Float])] = {
-      val m = w
-      batch.map { r =>
-        val g = codec.grid8(r.payload)
-        val out = new Array[Float](dims)
-        var o = 0
-        while (o < dims) {
-          val row = m(o); var i = 0; var acc = 0f
-          while (i < 64) { acc += row(i) * g(i); i += 1 }
-          out(o) = acc; o += 1
-        }
-        r.media_id -> out
-      }
-    }
-  }
-
-  /** Batched embedding: the model-inference shape — the partition iterator is
-    * regrouped into fixed-size batches (what a GPU / inference server wants:
-    * enough rows to fill the device, few enough to bound memory), the batch
-    * call runs once per group, results flatten back to rows. `grouped` keeps
-    * the iterator lazy: only `batchSize` payloads are resident per task at a
-    * time, so batch size bounds task memory independently of partition size.
-    * Same contract as `mapInPandas` with a batched model call in the lambda.
-    * The default encoder is the deterministic stub (what the oracle
-    * fixtures replay); for a real random-projection embedding of real
-    * images pass `{ val e = new ProjectionEncoder(ImageIoCodec, k)
-    * ; (b, _) => e.encode(b) }` (the encoder's width is fixed at
-    * construction, so the per-call dims is ignored). */
-  def embedBatched(media: Dataset[MediaRow], batchSize: Int = 64,
-      dims: Int = 8,
-      encoder: (Seq[MediaRow], Int) => Seq[(Long, Array[Float])] = batchEncodeStub)
-      : DataFrame = {
-    require(batchSize >= 1, "batchSize >= 1")
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(batch => encoder(batch, dims))
-    }.toDF("media_id", "embedding")
   }
 
   /** 64-bit perceptual average-hash from an 8×8 grid: bit i set iff cell i

@@ -596,33 +596,6 @@ object ScaleOps {
     psiFromCounts(counts, smoothing).withColumnRenamed("g", groupCol)
   }
 
-  /** Equal-frequency bin assignment for a continuous column — the binning
-    * companion to [[psiDrift]] (hand-chosen widths misbehave on skewed
-    * quality scores: one bin swallows the mass and drift hides inside it).
-    * Computes `numBins − 1` interior cut points with `approx_percentile`
-    * (ONE aggregate row — a bounded driver scalar, the sanctioned collect
-    * shape) and returns the bin index as a searched CASE over the cuts:
-    * codegen'd per-row comparisons against broadcast literals, zero
-    * additional passes over the data when composed into the PSI aggregate.
-    *
-    * Deterministic for a given dataset (the percentile sketch is
-    * deterministic), so PSI-over-quantile-bins stays reproducible; ties in
-    * the cuts collapse duplicate bins harmlessly (the grid just sees fewer
-    * distinct bins). */
-  def quantileBins(df: DataFrame, valueCol: String, numBins: Int = 10,
-      accuracy: Int = 10000): Column = {
-    require(numBins >= 2, "need at least 2 bins")
-    val probs = (1 until numBins).map(_.toDouble / numBins)
-    val cuts = df.select(
-        expr(s"approx_percentile($valueCol, array(${probs.mkString(",")}), " +
-          s"$accuracy)").as("cuts"))
-      .head().getSeq[Any](0).map(_.toString.toDouble)
-    val v = col(valueCol).cast("double")
-    cuts.zipWithIndex.foldRight(lit(cuts.length.toLong)) {
-      case ((cut, i), elseCol) => when(v <= cut, i.toLong).otherwise(elseCol)
-    }
-  }
-
   /** PSI of each group against a FIXED reference histogram — the textbook
     * population-stability form ([[psiDrift]] compares against the pooled
     * rest; this compares against an expected distribution: the vetted

@@ -975,19 +975,6 @@ object Similarity {
       .select("query_id", "rank", "neighbor_id", "cosine")
   }
 
-  /** Self-sizing [[lshTopKMulti]] — the same [[lshPlanesFor]] rule the
-    * bitext miner uses (q204): `numPlanes` from the corpus count so
-    * per-table bucket occupancy stays ≈ `targetBucket` as the corpus
-    * grows, instead of the fixed structure's quadratic per-bucket
-    * candidate blow-up. `numTables` stays the recall dial. One sizing
-    * rule, two consumers — tune `targetBucket` once and both the ANN
-    * and mining paths inherit it. */
-  def lshTopKMultiAuto(corpus: DataFrame, queries: DataFrame, k: Int,
-      numTables: Int = 4, targetBucket: Long = 64L, dims: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    lshTopKMulti(corpus, queries, k, numTables,
-      lshPlanesFor(corpus.count(), targetBucket), dims, idCol, vecCol)
-
   /** Embedding-space drift monitor: per label (domain, cluster, source —
     * whatever the embeddings are tagged with), the cosine between the
     * group's centroid in split A and in split B. Splits here are the

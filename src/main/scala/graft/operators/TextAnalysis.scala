@@ -423,51 +423,6 @@ object TextAnalysis {
       .withColumn("n_symbols", size(split(col("segmented"), " ")).cast("long"))
   }
 
-  /** BPE merge-table TRAINING — the loop that closes the tokenizer story
-    * ([[bpePairStats]] is one round's statistics, [[bpeSegmentExact]] the
-    * apply): `numMerges` greedy rounds, each re-segmenting the VOCABULARY
-    * under the merges learned so far, counting adjacent SYMBOL pairs
-    * weighted by word frequency, and adopting the heaviest pair
-    * (ties → lexicographic, so training is deterministic and
-    * engine-reproducible). Returns the rank-ordered merge table.
-    *
-    * Scale shape: the corpus collapses to its vocabulary ONCE (persisted);
-    * each round is then a vocabulary-grain aggregate (re-segmentation is
-    * row-local codegen via [[graft.functions.BpeSegment]]) plus a 1-row
-    * argmax collect — the same driver-scalar class as PageRank's N. Rounds
-    * are sequential by nature (merge r+1 depends on r); a production-size
-    * table (30k merges) would batch non-overlapping merges per round — the
-    * standard trainer optimization, unchanged plan shape per round. */
-  def bpeTrain(df: DataFrame, textCol: String,
-      numMerges: Int): Seq[(String, String)] = {
-    require(numMerges >= 1, "numMerges >= 1")
-    val vocab = graft.core.CacheScope.persist(df
-      .select(explode(graft.functions.TokenCounts(col(textCol))).as("tc"))
-      .groupBy(col("tc.tok").as("tok"))
-      .agg(sum("tc.tf").as("freq"))
-      .where(length(col("tok")) >= 2))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var exhausted = false
-    while (!exhausted && merges.size < numMerges) {
-      val syms = split(
-        graft.functions.BpeSegment(col("tok"), merges.toList), " ")
-      val top = vocab
-        .select(col("freq"), syms.as("syms"))
-        .where(size(col("syms")) >= 2)
-        .select(col("freq"),
-          explode(transform(sequence(lit(0), size(col("syms")) - 2),
-            i => struct(element_at(col("syms"), i + 1).as("a"),
-              element_at(col("syms"), i + 2).as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("freq").as("w"))
-        .orderBy(col("w").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else merges += ((top(0).getString(0), top(0).getString(1)))
-    }
-    merges.toSeq
-  }
-
   /** Quality-quantile gate: keep the top `keepFrac` of the corpus by
     * [[qualityScore]], exactly — equivalent to
     * `row_number() OVER (ORDER BY score DESC, id) <= floor(keepFrac·N)`

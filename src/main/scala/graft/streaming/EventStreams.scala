@@ -161,51 +161,6 @@ object EventStreams {
       .drop("_content_hash")
   }
 
-  /** Streaming NEAR-dup suppression: drop a document whose SimHash
-    * signature matches an earlier in-watermark doc exactly (hamming 0 —
-    * light reorderings and token noise hash to the same signature, unlike
-    * [[dedupedByContent]]'s exact md5). The signature is the fused per-row
-    * [[graft.functions.SimhashSig]] — a narrow map, so the only state is
-    * the watermark-bounded signature set; at ingest scale state size is
-    * (signature, timestamp) pairs only, never text.
-    *
-    * For hamming > 0 suppression, band the signature first
-    * ([[graft.operators.Dedup.simhashPairs]] semantics) and drop on any
-    * band match — that trades false-positive suppressions (band collisions)
-    * for recall, the standard streaming near-dup compromise; exact
-    * hamming re-checks need the pair join, which is a batch shape. */
-  def dedupedBySimhash(docs: DataFrame, textCol: String, tsCol: String = "ts",
-      watermark: String = "10 minutes"): DataFrame =
-    docs
-      .withColumn("_simhash",
-        graft.functions.SimhashSig(col(textCol), graft.operators.Dedup.SimhashBits))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("_simhash")
-      .drop("_simhash")
-
-  /** Parquet sink with checkpointing (exactly-once file sink). */
-  def writeParquet(df: DataFrame, outDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()) =
-    df.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode(OutputMode.Append)
-      .start()
-
-  /** Stream-static enrichment join: attach dimension attributes to each
-    * event. The static side is broadcast — no state store, no watermark
-    * needed (unlike stream-stream joins), and Spark re-plans the static
-    * side per micro-batch, so a dimension refresh (file overwrite) is
-    * picked up on the next batch. The standard shape for decorating a
-    * 100 TB/day event stream with a few-GB dimension. */
-  def enrichWithDim(events: DataFrame, dim: DataFrame, key: String,
-      dimCols: Seq[String]): DataFrame =
-    events.join(
-      broadcast(dim.select((key +: dimCols).map(col): _*)), Seq(key), "left")
-
   /** foreachBatch merge sink: maintains a keyed running-aggregate parquet
     * table (count + sum per key) across micro-batches — the "upsert into a
     * serving table" pattern for sinks with no native streaming support.
@@ -685,54 +640,18 @@ object EventStreams {
     f.delete(): Unit
   }
 
-  final case class UserTotal(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Spark 4 `transformWithState` processor: per-user running totals in a
-    * single ValueState cell. The new arbitrary-state API over
-    * `flatMapGroupsWithState` (see [[statefulSessions]] for the classic one):
-    * typed state handles, composable state variables, native TTL, and it
-    * REQUIRES the RocksDB state-store provider — which is also the right
-    * provider at scale (state spills off-heap instead of living on the
-    * executor heap like the default HDFS-backed provider). */
-  class RunningTotalProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, UserTotal] {
-    @transient private var totals: org.apache.spark.sql.streaming.ValueState[UserTotal] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      totals = getHandle.getValueState[UserTotal]("totals",
-        Encoders.product[UserTotal],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[UserTotal] = {
-      var cur = Option(totals.get()).getOrElse(UserTotal(key, 0L, 0.0))
-      rows.foreach(e => cur = UserTotal(key, cur.n_events + 1, cur.total_value + e.value))
-      totals.update(cur)
-      Iterator.single(cur)
-    }
-  }
-
-  /** Per-user running (count, total) via `transformWithState` — one updated
-    * row per user per micro-batch. Needs the RocksDB state-store provider
-    * on the session (the API rejects the default provider). */
-  def runningTotals(events: Dataset[Event]): Dataset[UserTotal] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-  }
-
   final case class UserTotalMicro(user_id: Long, n_events: Long,
       total_micro: Long)
 
-  /** [[RunningTotalProcessor]]'s ENGINE-PORTABLE twin: the running value
-    * total accumulates in integer MICRO-UNITS (`floor(v·10⁶ + 0.5)` per
-    * event — the repo-wide exact-sum contract), so the cumulative total
-    * is independent of fold order and a SQL oracle reproduces it
-    * bit-for-bit. The double-summing original stays for dashboards; this
-    * one exists so `transformWithState` can sit under the driver gate. */
+  /** Spark 4 `transformWithState` processor: per-user running totals in a
+    * single ValueState cell (typed state handles, native TTL; the API
+    * REQUIRES the RocksDB state-store provider, which also spills state
+    * off-heap at scale — see [[statefulSessions]] for the classic
+    * `flatMapGroupsWithState` shape). The value total accumulates in
+    * integer MICRO-UNITS (`floor(v·10⁶ + 0.5)` per event — the repo-wide
+    * exact-sum contract), so the cumulative total is independent of fold
+    * order and a SQL oracle reproduces it bit-for-bit, which lets
+    * `transformWithState` sit under the driver gate. */
   class RunningTotalMicroProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, UserTotalMicro] {
     @transient private var totals: org.apache.spark.sql.streaming.ValueState[UserTotalMicro] = _

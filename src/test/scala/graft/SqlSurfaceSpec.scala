@@ -68,6 +68,57 @@ class SqlSurfaceSpec extends SparkSpec {
       "same segment text must hash identically across docs")
   }
 
+  // One row per registered SQL function: an explicit-argument SQL call,
+  // the DataFrame constructor it must equal, and a call with a bad literal
+  // or arity that must fail analysis with the function's usage text.
+  private val sqlCases: Seq[(String, String, () => org.apache.spark.sql.Column, String)] = {
+    import org.apache.spark.sql.functions.{array, lit}
+    import graft.functions._
+    val text = "a b c d e a b"
+    Seq(
+      ("word_shingles", s"word_shingles('$text', 2)",
+        () => WordShingles(lit(text), 2), "word_shingles('a b c', 0)"),
+      ("array_dot", "array_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))",
+        () => ArrayDot(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))),
+        "array_dot(array(1.0D))"),
+      ("quantize_int8", "quantize_int8(array(0.5D, -1.0D, 0.25D))",
+        () => QuantizeInt8(array(lit(0.5), lit(-1.0), lit(0.25))),
+        "quantize_int8()"),
+      ("minhash_sig", s"minhash_sig('$text', 3, 16)",
+        () => MinhashSig(lit(text), 3, 16), "minhash_sig('a b c', 3)"),
+      ("token_counts", s"token_counts('$text')",
+        () => TokenCounts(lit(text)), "token_counts()"),
+      ("char_bigram_counts", "char_bigram_counts('abcab')",
+        () => CharBigramCounts(lit("abcab")), "char_bigram_counts()"),
+      ("hilbert_index", "hilbert_index(CAST(3 AS BIGINT), CAST(5 AS BIGINT), 4)",
+        () => HilbertIndex(lit(3L), lit(5L), 4), "hilbert_index(CAST(3 AS BIGINT))"),
+      ("shingle_hashes", s"shingle_hashes('$text', 2)",
+        () => ShingleHashes(lit(text), 2), "shingle_hashes('a b c', 0)"),
+      ("segment_hashes", s"segment_hashes('$text', 2)",
+        () => SegmentHashes(lit(text), 2), "segment_hashes('a b c', 0)"),
+      ("simhash_sig", s"simhash_sig('$text', 32)",
+        () => SimhashSig(lit(text), 32), "simhash_sig('a b c', 'x')"),
+      ("compression_ratio", s"compression_ratio('$text')",
+        () => CompressionRatio(lit(text)), "compression_ratio()"),
+      ("ngram_counts", s"ngram_counts('$text', 2)",
+        () => NgramCounts(lit(text), 2), "ngram_counts('a', 0)"))
+  }
+
+  test("every registered SQL function has a surface case") {
+    assert(sqlCases.map(_._1).sorted ==
+      graft.core.GraftExtensions.functions.map(_.name).sorted)
+  }
+
+  for ((name, call, viaDf, bad) <- sqlCases) {
+    test(s"SQL function $name: resolves, equals the DataFrame form, rejects bad arguments") {
+      val usage = graft.core.GraftExtensions.functions.find(_.name == name).get.usage
+      assert(spark.sql(s"SELECT $call").head().get(0) ==
+        spark.range(1).select(viaDf()).head().get(0))
+      val e = intercept[Exception](spark.sql(s"SELECT $bad").collect())
+      assert(e.getMessage.contains(usage), s"unexpected: ${e.getMessage}")
+    }
+  }
+
   test("word_shingles rejects n < 1 at analysis time, not at runtime") {
     val e = intercept[Exception] {
       spark.sql("SELECT word_shingles('a b c', 0)").collect()

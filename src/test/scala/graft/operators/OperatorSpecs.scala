@@ -597,20 +597,6 @@ class SimilaritySpec extends SparkSpec {
     assert(auto.nonEmpty)
   }
 
-  test("lshTopKMultiAuto: equals the fixed multi-table index at the derived size") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val queries = emb.where(col("vec_id") < 8)
-    val planes = Similarity.lshPlanesFor(emb.count(), targetBucket = 8L)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val auto = rows(Similarity.lshTopKMultiAuto(emb, queries, k = 3,
-      numTables = 3, targetBucket = 8L))
-    val fixed = rows(Similarity.lshTopKMulti(emb, queries, k = 3,
-      numTables = 3, numPlanes = planes))
-    assert(auto == fixed)
-    assert(auto.nonEmpty)
-  }
-
   test("trained IVF centroids: recall at restricted nprobe >= seed centroids") {
     // clustered corpus (what IVF training exists to exploit; the parquet
     // embeddings are directionless noise, where any space partition is as
@@ -1097,27 +1083,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(self == 0, "reference under its own model can have no OOV")
   }
 
-  test("bpeTrain: greedy merge order is hand-checkable; compression is monotone") {
-    import spark.implicits._
-    // vocab: low×3, lower×1, lowest×1. char-pair weights: (l,o)=5, (o,w)=5,
-    // (w,e)=2, rest 1 — tie at 5 breaks lexicographically to (l,o); after
-    // it, (lo,w)=5 dominates; then (low,e)=2.
-    val df = Seq("low low lower", "low lowest").toDF("text")
-    val merges = TextAnalysis.bpeTrain(df, "text", numMerges = 3)
-    assert(merges == Seq("l" -> "o", "lo" -> "w", "low" -> "e"))
-    // each adopted merge strictly shrinks the corpus token count
-    val totals = (0 to 3).map { k =>
-      TextAnalysis.bpeSegmentExact(df, "text", merges.take(k))
-        .agg(sum(col("freq") * col("n_symbols"))).head().getLong(0)
-    }
-    assert(totals == totals.sorted.reverse && totals.distinct == totals,
-      s"token counts not strictly decreasing: $totals")
-    // training exhausts gracefully: asking for more merges than exist stops
-    val tiny = Seq("ab ab").toDF("text")
-    val all = TextAnalysis.bpeTrain(tiny, "text", numMerges = 10)
-    assert(all == Seq("a" -> "b"))
-  }
-
   test("bpePairStats: hand-computed pair counts on a tiny vocabulary") {
     import spark.implicits._
     // vocab: "aab"×3 (docs repeat it), "ab"×1, "x"×1 (len<2 → ignored).
@@ -1152,17 +1117,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out.map(_.width).toSeq == again.map(_.width).toSeq)
   }
 
-  test("sampleFrames: chunking and stride arithmetic") {
-    import spark.implicits._
-    val media = Seq(Multimodal.MediaRow(1L, "video", Array.fill[Byte](100)(3))).toDS()
-    val frames = Multimodal.sampleFrames(media, frameSize = 10, stride = 2)
-      .orderBy("frame_idx").collect()
-    // 10 chunks, keep idx 0,2,4,6,8 → 5 frames of 10 bytes
-    assert(frames.length == 5)
-    assert(frames.map(_.getInt(1)).toSeq == Seq(0, 2, 4, 6, 8))
-    assert(frames.forall(_.getInt(2) == 10))
-  }
-
   test("resize: payload shrinks to target dims, deterministic, empty-safe") {
     import spark.implicits._
     val media = Seq(
@@ -1173,67 +1127,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out(0).payload.length == 32 && out(1).payload.length == 0)
     val again = Multimodal.resize(media, 8, 4).collect().sortBy(_.media_id)
     assert(out(0).payload.toSeq == again(0).payload.toSeq)
-  }
-
-  test("embedBatched: batch size never changes results, only task memory shape") {
-    import spark.implicits._
-    val media = (1L to 100L).map(i =>
-      Multimodal.MediaRow(i, "image", s"payload-bytes-$i".getBytes)).toDS()
-    def run(bs: Int) = Multimodal.embedBatched(media, batchSize = bs)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val (b1, b7, big) = (run(1), run(7), run(1000))
-    assert(b1 == b7 && b7 == big)
-    assert(b1.size == 100)
-    // the stub sees correctly-shaped batches: grouped() caps at batchSize
-    val sizes = media.repartition(2).mapPartitions(
-      _.grouped(7).map(_.size)).collect()
-    assert(sizes.forall(_ <= 7) && sizes.max == 7)
-    intercept[IllegalArgumentException](Multimodal.embedBatched(media, 0))
-  }
-
-  test("WavCodec.activeSegments: tone-silence-tone splits into exactly two spans") {
-    import spark.implicits._
-    // 9600 samples in 3 equal thirds: tone, silence, tone
-    val rate = 8000f
-    val n = 9600
-    val pcm = new Array[Byte](n * 2)
-    for (i <- 0 until n) {
-      val third = i / (n / 3)
-      val v = if (third == 1) 0
-        else (math.sin(2 * math.Pi * 440 * i / rate) * 12000).toInt
-      pcm(2 * i) = (v & 0xff).toByte
-      pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(rate, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    val wavBytes = bos.toByteArray
-
-    val spans = Multimodal.WavCodec.activeSegments(wavBytes, windows = 96)
-    assert(spans.length == 2, s"expected 2 spans: $spans")
-    val Seq((s1, e1), (s2, e2)) = spans
-    // boundaries within one window (100 samples) of the true thirds
-    assert(s1 == 0L && math.abs(e1 - 3200L) <= 100)
-    assert(math.abs(s2 - 6400L) <= 100 && e2 == 9600L)
-    // all-silence payload → no spans, through the distributed path too
-    val silent = {
-      val z = new Array[Byte](2000)
-      val a2 = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(z), fmt, 1000L)
-      val b2 = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(a2,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, b2)
-      b2.toByteArray
-    }
-    val viaDf = Multimodal.audioSegments(Seq(
-        Multimodal.MediaRow(1L, "audio", wavBytes),
-        Multimodal.MediaRow(2L, "audio", silent)).toDS(),
-      windows = 96)
-    assert(viaDf.where(col("media_id") === 1L).count() == 2L)
-    assert(viaDf.where(col("media_id") === 2L).count() == 0L)
   }
 
   test("WavCodec: real WAV decode — meta, energy envelope, perceptual dedup, resample") {
@@ -1289,48 +1182,6 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.decode(media.where(col("media_id") === 4), Multimodal.WavCodec).collect()
     }
     assert(e.getMessage != null)
-  }
-
-  test("ProjectionEncoder: real JL embedding — deterministic, batch-invariant, distance-preserving") {
-    import spark.implicits._
-    // real PNGs: two near-identical block scenes + one distinct scene
-    def scenePng(seed: Int, brighten: Boolean): Array[Byte] = {
-      val r = new scala.util.Random(seed)
-      val img = new java.awt.image.BufferedImage(
-        64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val block = Array.fill(8, 8)(r.nextInt(256))
-      for (y <- 0 until 64; x <- 0 until 64) {
-        val v0 = block(y / 8)(x / 8)
-        val v = if (brighten && y < 8 && x < 8) math.min(255, v0 + 30) else v0
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      val baos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", baos)
-      baos.toByteArray
-    }
-    val media = Seq(
-      Multimodal.MediaRow(1L, "image", scenePng(1, brighten = false)),
-      Multimodal.MediaRow(2L, "image", scenePng(1, brighten = true)),  // near-dup
-      Multimodal.MediaRow(3L, "image", scenePng(9, brighten = false))  // distinct
-    ).toDS()
-    val enc = new Multimodal.ProjectionEncoder(Multimodal.ImageIoCodec, dims = 16)
-    def run(bs: Int) = Multimodal.embedBatched(media, batchSize = bs, dims = 16,
-        encoder = (b, _) => enc.encode(b))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val e = run(2)
-    // batch-size invariance + determinism (cross-run hashes depend on it)
-    assert(run(1).view.mapValues(_.toSeq).toMap == e.view.mapValues(_.toSeq).toMap)
-    assert(e(1L).length == 16)
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
-      dot / (math.sqrt(a.map(x => x.toDouble * x).sum) *
-        math.sqrt(b.map(x => x.toDouble * x).sum))
-    }
-    // distance preservation (the JL point): a one-block edit stays close,
-    // a different scene lands far — so embedding-cosine dedup works on it
-    assert(cos(e(1L), e(2L)) > cos(e(1L), e(3L)),
-      s"near-dup must embed closer than distinct scene: ${cos(e(1L), e(2L))} vs ${cos(e(1L), e(3L))}")
-    assert(cos(e(1L), e(2L)) > 0.98, s"one-block edit moved too far: ${cos(e(1L), e(2L))}")
   }
 
   test("fromDocuments: binary payload round-trips through the decode path") {
@@ -1410,62 +1261,6 @@ class MultimodalSpec extends SparkSpec {
       Seq(Multimodal.MediaRow(2L, "raw", Array.tabulate[Byte](100)(_.toByte))).toDS(),
       8, 4).collect().head
     assert(stub.payload.length == 32)
-  }
-
-  test("sampleDecodedFrames: real animated GIF — frame count, stride, " +
-      "per-frame aHash dedup, still/frame parity") {
-    import spark.implicits._
-    def scene(seed: Int): java.awt.image.BufferedImage = {
-      val r = new scala.util.Random(seed)
-      val img = new java.awt.image.BufferedImage(
-        64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val block = Array.fill(8, 8)(r.nextInt(256))
-      for (y <- 0 until 64; x <- 0 until 64) {
-        val v = block(y / 8)(x / 8)
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      img
-    }
-    def gif(frames: java.awt.image.BufferedImage*): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-      val w = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-      try {
-        w.setOutput(ios)
-        w.prepareWriteSequence(null)
-        frames.foreach(f =>
-          w.writeToSequence(new javax.imageio.IIOImage(f, null, null), null))
-        w.endWriteSequence()
-      } finally { w.dispose(); ios.close() }
-      bos.toByteArray
-    }
-    // 4 stored frames; frames 0 and 2 are the SAME scene (a looping shot)
-    val anim = gif(scene(1), scene(2), scene(1), scene(3))
-    assert(Multimodal.ImageIoCodec.readFrames(anim).length == 4)
-    val media = Seq(Multimodal.MediaRow(10L, "video", anim)).toDS()
-    val all = Multimodal.sampleDecodedFrames(media)
-      .orderBy("frame_idx").collect()
-    assert(all.length == 4)
-    assert(all.forall(r => r.getInt(2) == 64 && r.getInt(3) == 64))
-    assert(all.map(_.getInt(1)).toSeq == Seq(0, 1, 2, 3))
-    // stride keeps every 2nd stored frame
-    val strided = Multimodal.sampleDecodedFrames(media, stride = 2)
-      .orderBy("frame_idx").collect()
-    assert(strided.map(_.getInt(1)).toSeq == Seq(0, 2))
-    // per-frame perceptual dedup: the repeated scene pairs at distance 0
-    // through the SAME banded pipeline images use, keyed per frame
-    val sigs = Multimodal.sampleDecodedFrames(media)
-      .select((col("media_id") * 100 + col("frame_idx")).as("fid"),
-        col("ahash64").as("sig"))
-    val pairs = Dedup.bandedHammingPairs(sigs, "fid", "sig",
-        maxHamming = 0, bands = 8, bits = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1000L, 1002L)), s"repeat frame must pair: $pairs")
-    // a frame and the same scene ingested as a single-image GIF hash
-    // identically — mixed image+video corpora dedup in one pass
-    val stillHash = Multimodal.averageHash64(
-      Multimodal.ImageIoCodec.grid8(gif(scene(2))))
-    assert(all(1).getLong(4) == stillHash, "still/frame aHash parity")
   }
 
   test("perceptualDedup: re-encoded and lightly-edited images pair, distinct scenes don't") {

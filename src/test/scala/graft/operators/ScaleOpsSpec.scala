@@ -568,26 +568,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(cat.toSeq == Seq(("A", 2 * perBin), ("B", 2 * perBin)))
   }
 
-  test("quantileBins: ~equal-frequency on skewed data, composes with psiDrift") {
-    import org.apache.spark.sql.functions._
-    val ev = graft.core.EventTs.toNanos(spark.read.parquet(s"$sfDir/events.parquet"))
-    val bins = ScaleOps.quantileBins(ev, "value", numBins = 8)
-    val freq = ev.select(bins.as("bin")).groupBy("bin").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(freq.keySet == (0L until 8L).toSet, s"all bins populated: $freq")
-    val n = freq.values.sum.toDouble
-    // each equal-frequency bin holds ~1/8 of the rows (sketch tolerance)
-    assert(freq.values.forall(c => c > n / 8 * 0.6 && c < n / 8 * 1.4), freq)
-    // end-to-end: drift gate over quantile bins runs and stays deterministic
-    val a = ScaleOps.psiDrift(ev, "event_type", bins)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b = ScaleOps.psiDrift(ev, "event_type", bins)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(a == b && a.nonEmpty)
-    // value is uniform-ish across event types → no moderate-drift flag
-    assert(a.values.forall(_ < 100000L), s"unexpected drift: $a")
-  }
-
   test("domainReweight: weights normalize, quality ordering drives the update") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val out = ScaleOps.domainReweight(docs, "source",

@@ -129,32 +129,6 @@ class EventStreamsSpec extends SparkSpec {
     assert(out == Set(1L, 3L))
   }
 
-  test("dedupedBySimhash drops near-dups (same signature), keeps distinct docs") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val docs = in.toDF().toDF("doc_id", "ts", "text")
-    val q = EventStreams.dedupedBySimhash(docs, "text")
-      .writeStream.format("memory").queryName("simdedup").outputMode("append").start()
-    // identical text → identical simhash → second drops; distinct text survives
-    in.addData(
-      (1L, ts(0), "the quick brown fox jumps over the lazy dog"),
-      (2L, ts(1), "the quick brown fox jumps over the lazy dog"),
-      (3L, ts(2), "completely different words in this one zzz yyy xxx"))
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("simdedup").select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(out == Set(1L, 3L))
-    // the suppression key is the SIGNATURE, not the bytes: batch-side check
-    // that a doc pair differing only by token order (same unigram multiset)
-    // collides — exactly what the streaming state would suppress
-    val a = "alpha beta gamma delta epsilon"
-    val b = "epsilon delta gamma beta alpha"
-    val sigs = Seq(a, b).toDF("text")
-      .select(graft.functions.SimhashSig(col("text"),
-        graft.operators.Dedup.SimhashBits)).collect().map(_.getLong(0))
-    assert(sigs(0) == sigs(1))
-  }
-
   test("intervalJoin: stream-stream join pairs events within the window only") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
@@ -187,7 +161,10 @@ class EventStreamsSpec extends SparkSpec {
     graft.core.EventTs.toNanos(spark.read.parquet(s"$sfDir/events.parquet")).write.parquet(s"$dir/in")
     val stream = EventStreams.windowedAgg(
       EventStreams.readEvents(spark, s"$dir/in"), watermark = "0 seconds")
-    val q = EventStreams.writeParquet(stream, s"$dir/out", s"$dir/chk")
+    val q = stream.writeStream.format("parquet")
+      .option("path", s"$dir/out").option("checkpointLocation", s"$dir/chk")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .outputMode("append").start()
     q.processAllAvailable(); q.stop()
 
     val streamed = spark.read.parquet(s"$dir/out")
@@ -198,51 +175,6 @@ class EventStreamsSpec extends SparkSpec {
     // append-mode windows all close once the source is drained except the last
     // open window; allow that tail difference
     assert(streamed >= batch - 100 && streamed <= batch)
-  }
-
-  test("enrichWithDim: stream-static broadcast join decorates events") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val in = MemoryStream[Event]
-    val q = EventStreams.enrichWithDim(in.toDF(), dim, "user_id", Seq("tier"))
-      .writeStream.format("memory").queryName("enriched").outputMode("append").start()
-    in.addData(Event(1, ts(0), 1, "click", 1.0), Event(2, ts(1), 2, "view", 2.0),
-      Event(3, ts(2), 9, "click", 3.0)) // user 9 not in dim → NULL tier
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("enriched")
-      .select("event_id", "tier").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getString(1))).toMap
-    assert(got == Map(1L -> "gold", 2L -> "basic", 3L -> null))
-  }
-
-  test("runningTotals: transformWithState accumulates per-user state (RocksDB store)") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[Event]
-      val q = EventStreams.runningTotals(in.toDS())
-        .writeStream.format("memory").queryName("totals").outputMode("update").start()
-      in.addData(Event(1, ts(0), 1, "click", 1.0), Event(2, ts(1), 1, "click", 2.0),
-        Event(3, ts(2), 2, "view", 5.0))
-      q.processAllAvailable()
-      in.addData(Event(4, ts(3), 1, "view", 4.0)) // state carries across batches
-      q.processAllAvailable(); q.stop()
-      // update mode: latest row per user wins
-      val got = spark.table("totals").groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("total_value"))).as("m"))
-        .select(col("user_id"), col("m.n_events"), col("m.total_value"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == Set((1L, 3L, 7.0), (2L, 1L, 5.0)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("runningAggSink: foreachBatch merge accumulates across micro-batches") {
