@@ -1,6 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.core.TableRegistry
 import graft.sources.{AuditLog, VersionedTable}
 
@@ -12,19 +14,23 @@ import graft.sources.{AuditLog, VersionedTable}
   *
   * The reference runs the two jobs one after the other; they read disjoint
   * staging views and write disjoint paths, so here they run concurrently
-  * (see [[par]]). Each job materializes ONE DataFrame (persist → count →
-  * {staging overwrite ∥ versioned append}, S1:185-222,1086-1125): the six
-  * digital views are lazy plan aliases that Catalyst inlines and optimizes as
-  * a whole — only the final union is ever executed (SURVEY §3). We add the
-  * `unpersist` the reference leaks (SURVEY §4, harmless there, correct here).
+  * (see [[par]]). Each job materializes ONE DataFrame: the six digital views
+  * are lazy plan aliases that Catalyst inlines and optimizes as a whole —
+  * only the final union is ever executed (SURVEY §3). The reference runs
+  * that frame as persist → count → staging overwrite → versioned append
+  * (S1:185-222,1086-1125); here it runs as ONE Spark action, the versioned
+  * append, which also observes the row count, and the staging table is
+  * published as a file copy of the new version. The outputs are the same:
+  * the staging rows, columns and column order, the new version, the count.
   *
-  * Scale notes: the persist covers exactly three actions (count + two
-  * writes) per job, and both writes read the cache; `coalesce(8)` mirrors
-  * the reference's output-file sizing — at real scale pass `outputFiles`
-  * sized to ~128MB-1GB per file. The versioned append touches only the new
-  * `version=` partition directory. Running the jobs side by side fills the
-  * cores one job alone leaves idle on plan building and small stages; it
-  * keeps both jobs' cached frames live at once.
+  * Scale notes: `coalesce(8)` mirrors the reference's output-file sizing —
+  * at real scale pass `outputFiles` sized to ~128MB-1GB per file. With no
+  * persist in front of the write, the coalesce also bounds the task count
+  * of the plan's last stage. The versioned append touches only the new
+  * `version=` directory; the staging copy moves bytes on the driver, not in
+  * Spark tasks, so it costs one read and one write of the output files.
+  * Running the jobs side by side fills the cores one job alone leaves idle
+  * on plan building and small stages.
   */
 object ChannelJobs {
 
@@ -59,25 +65,23 @@ object ChannelJobs {
     }
   }
 
-  /** persist → count → {overwrite staging ∥ versioned historical append}
-    * (S1:185-222 for tam, S1:1086-1125 for digital). `df` is built inside
-    * the drain, so the persists a build registers are released even when
-    * the build itself throws. */
+  /** One action per output (S1:185-222 for tam, S1:1086-1125 for
+    * digital): the versioned append writes `df` once and counts its rows
+    * as it goes, then `<table>_staging` is replaced by a copy of the new
+    * version's files. `df` is built inside the drain, so the persists a
+    * build registers are released even when the build itself throws. */
   def materialize(s: SparkSession, df: => DataFrame, table: String,
       cfg: JobConfig): TableWrite = {
     try {
-      val persisted = df.persist()
-      try {
-        val n = persisted.count() // ACTION 1 — executes + caches (S1:188)
-        val hist = new VersionedTable(s, s"${cfg.outDir}/${table}_historical",
-          cfg.outputFiles)
-        val (_, v) = par(
-          persisted.coalesce(cfg.outputFiles)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"${cfg.outDir}/${table}_staging"), // ACTION 2, from cache (S1:191)
-          hist.snapshot(persisted)) // max(version)+1 append (S1:208-222)
-        TableWrite(table, n, v)
-      } finally persisted.unpersist()
+      val rows = new Observation()
+      val hist = new VersionedTable(s, s"${cfg.outDir}/${table}_historical",
+        cfg.outputFiles)
+      // max(version)+1 append (S1:208-222); read the count only once the
+      // write has returned, as a failed write never completes the observation
+      val v = hist.snapshot(df.observe(rows, count(lit(1)).as("rows")))
+      val n = rows.get("rows").asInstanceOf[Long] // the count of S1:188
+      publish(s, hist.dirOf(v), new Path(s"${cfg.outDir}/${table}_staging")) // S1:191
+      TableWrite(table, n, v)
     } finally {
       // materialize runs the job's terminal actions, so it is the session
       // owner in the CacheScope contract: release operator-internal persists
@@ -85,6 +89,18 @@ object ChannelJobs {
       // identical plan trips CacheManager's "already cached" plan-match
       graft.core.CacheScope.drain()
     }
+  }
+
+  /** Overwrites directory `to` with a copy of directory `from`: the copy is
+    * made in an `_`-prefixed sibling, then swapped in. */
+  private def publish(s: SparkSession, from: Path, to: Path): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val fs = to.getFileSystem(conf)
+    val tmp = new Path(to.getParent, s"_${to.getName}")
+    fs.delete(tmp, true)
+    if (!FileUtil.copy(fs, from, fs, tmp, false, conf) ||
+        (fs.exists(to) && !fs.delete(to, true)) || !fs.rename(tmp, to))
+      throw new IllegalStateException(s"could not publish $from as $to")
   }
 
   /** `nvs_tam` (S1:93-225). */

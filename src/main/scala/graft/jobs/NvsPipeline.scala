@@ -23,11 +23,14 @@ import graft.operators.ChannelOps._
   *    S1:853 — implemented with the Spark-dialect twin of S1:717);
   *  - two allocation implementations exist (window vs groupBy+join-back) and
   *    both are kept, matching the reference's two code paths;
-  *  - the coalesce-keyed FULL JOIN (S1:1024-1025) degrades to a nested-loop
-  *    join — ported verbatim; its LEFT side is detail-grain (`allHcp`), but
-  *    the OTHER side of the nested loop is the bounded channel × month
-  *    allocations grid, so total cost is linear in detail rows × a small
-  *    constant — scale-safe without being key-equi.
+  *  - the missing-cost probe's FULL JOIN keys on `coalesce(d.k, ca.k) =
+  *    ca.k` (S1:1024-1025), which Spark can only run as a nested-loop join.
+  *    Its left side is the inner equi-join `allHcp ⋈ monthlyReach` on the
+  *    same three keys, which drops null keys, so `d.k` is never null there
+  *    and the condition equals `d.k = ca.k` on every pair of rows. The port
+  *    writes the plain equalities ([[missingCostProbe]]) and gets a
+  *    hash-keyed full outer join with the same rows; the DuckDB oracle keeps
+  *    the verbatim coalesce keys as its twin.
   */
 object NvsPipeline {
 
@@ -315,7 +318,7 @@ object NvsPipeline {
 
   /** `hcp_all_channels` (S1:817-1066) — the monster: weekly long→wide pivot,
     * week→month bucketing, old∪new channel normalization, share-spread ∪
-    * unpivot cost reconciliation, missing-cost probe (coalesce-key FULL JOIN),
+    * unpivot cost reconciliation, missing-cost probe (a FULL JOIN on plain keys),
     * and the /11 /9 back-spread. */
   def hcpAllChannels(s: SparkSession, dmas: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
@@ -433,27 +436,8 @@ object NvsPipeline {
       allHcp.groupBy($"brand", $"year", $"month", $"channel")
         .agg(sum($"reach").as("total_monthly_reach")))
 
-    // S1:1004-1027: missing-cost probe — inner join reach, coalesce-key FULL
-    // JOIN to allocations, keep 2024 rows where reach is null
-    val probe = allHcp.as("d")
-      .join(monthlyReach.as("mr"),
-        $"d.year" === $"mr.year" && $"d.month" === $"mr.month" && $"d.channel" === $"mr.channel")
-      .join(allocations.as("ca"),
-        coalesce($"d.year", $"ca.year") === $"ca.year" &&
-          coalesce($"d.month", $"ca.month") === $"ca.month" &&
-          coalesce($"d.channel", $"ca.channel") === $"ca.channel",
-        "full")
-      .where(coalesce($"d.year", $"ca.year", $"mr.year") === "2024" && $"d.reach".isNull)
-      .select(
-        coalesce($"d.brand", $"ca.brand", $"mr.brand").as("brand"),
-        coalesce($"d.channel", $"ca.channel", $"mr.channel").as("channel"),
-        coalesce($"d.audience", lit("HCP")).as("audience"),
-        coalesce($"d.year", $"ca.year", $"mr.year").as("year"),
-        coalesce($"d.month", $"ca.month", $"mr.month").as("month"),
-        $"d.reach", $"d.engage",
-        when($"d.reach".isNotNull && $"mr.total_monthly_reach".isNotNull,
-          ($"d.reach" / $"mr.total_monthly_reach") * $"ca.cost")
-          .otherwise($"ca.cost").as("cost"))
+    // S1:1004-1027: missing-cost probe
+    val probe = missingCostProbe(allHcp, monthlyReach, allocations)
 
     // S1:1029-1037: missing cost rolled up per (brand, channel, audience, year)
     val missingCost = probe
@@ -480,6 +464,35 @@ object NvsPipeline {
             ratio * $"ca.cost" + ratio * ($"mc.missing_cost" / 9))
           .otherwise(ratio * $"ca.cost").as("cost"))
   }
+
+  /** The missing-cost probe (S1:1004-1027): detail rows joined to their
+    * monthly reach, FULL JOIN to the channel-month allocations, kept where
+    * the year is 2024 and the detail reach is null. The reference keys the
+    * FULL JOIN on `coalesce(d.k, ca.k) = ca.k`; the inner join in front of
+    * it drops null `d` keys, so the plain equalities below pair exactly the
+    * same rows, and plan as a hash-keyed join instead of a nested loop. */
+  private[jobs] def missingCostProbe(allHcp: DataFrame, monthlyReach: DataFrame,
+      allocations: DataFrame): DataFrame =
+    allHcp.as("d")
+      .join(monthlyReach.as("mr"),
+        col("d.year") === col("mr.year") && col("d.month") === col("mr.month") &&
+          col("d.channel") === col("mr.channel"))
+      .join(allocations.as("ca"),
+        col("d.year") === col("ca.year") && col("d.month") === col("ca.month") &&
+          col("d.channel") === col("ca.channel"),
+        "full")
+      .where(coalesce(col("d.year"), col("ca.year"), col("mr.year")) === "2024" &&
+        col("d.reach").isNull)
+      .select(
+        coalesce(col("d.brand"), col("ca.brand"), col("mr.brand")).as("brand"),
+        coalesce(col("d.channel"), col("ca.channel"), col("mr.channel")).as("channel"),
+        coalesce(col("d.audience"), lit("HCP")).as("audience"),
+        coalesce(col("d.year"), col("ca.year"), col("mr.year")).as("year"),
+        coalesce(col("d.month"), col("ca.month"), col("mr.month")).as("month"),
+        col("d.reach"), col("d.engage"),
+        when(col("d.reach").isNotNull && col("mr.total_monthly_reach").isNotNull,
+          (col("d.reach") / col("mr.total_monthly_reach")) * col("ca.cost"))
+          .otherwise(col("ca.cost")).as("cost"))
 
   /** `combined_nvs_data` (S1:1069-1084): 6-way positional UNION ALL.
     * The DMA dim is derived and persisted ONCE here and shared by all six

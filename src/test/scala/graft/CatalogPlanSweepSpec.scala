@@ -43,10 +43,6 @@ class CatalogPlanSweepSpec extends SparkSpec {
     "q150_dedup_landscape",   // (n_total × n_clustered): two 1-row frames
     "q157_dead_stock",        // corpus-last-ship anchor: 1-row broadcast
     "q160_benford_digits",    // digit-count total: 1-row broadcast
-    "q167_nvs_hcp_all_channels", // J-10 reference-verbatim coalesce-key FULL
-                              //   JOIN probe (S1:1004-1027), bounded to
-                              //   channel-month grain by construction
-    "q168_nvs_combined",      // contains q167's probe via combined_nvs_data
     "q173_ann_ivfpq",         // IVF cell assignment: corpus × broadcast(nlist)
                               //   (codes⋈lut scoring join is equi on
                               //   (cid, sub, code) — cell-scoped, q101 shape)

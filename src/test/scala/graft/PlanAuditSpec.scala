@@ -519,13 +519,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("Window"), s"allocation window missing:\n$p")
   }
 
-  test("q167 hcp_all_channels: ONLY the reference-verbatim probe is a loop join") {
+  test("q167 hcp_all_channels: no loop join; the probe's FULL JOIN is hash-keyed") {
     val p = planOf("q167_nvs_hcp_all_channels")
-    // the coalesce-key FULL JOIN (S1:1024-1025) degrades to BNLJ by design,
-    // bounded to channel-month grain; everything else must stay hash-keyed
-    assert("BroadcastNestedLoopJoin".r.findAllIn(p).size == 1,
-      s"exactly one designed BNLJ (the missing-cost probe):\n$p")
+    // the missing-cost probe's FULL JOIN (S1:1024-1025) keys on plain
+    // equalities, so it plans as a keyed full outer join, never a BNLJ
+    assert(!p.contains("BroadcastNestedLoopJoin"), s"no nested-loop join:\n$p")
     assert(!p.contains("CartesianProduct"), s"no cartesian anywhere:\n$p")
+    val keyed = "(SortMergeJoin|ShuffledHashJoin) \\[[^\\]]+\\], \\[[^\\]]+\\], FullOuter".r
+    assert(keyed.findFirstIn(p).isDefined, s"the probe must be a keyed FullOuter join:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"dim joins must broadcast:\n$p")
   }
 

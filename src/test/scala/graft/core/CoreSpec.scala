@@ -70,6 +70,32 @@ class VersionedTableSpec extends SparkSpec {
     } finally sc.removeSparkListener(counter)
     assert(jobs.get == 0, s"latestVersion started ${jobs.get} Spark job(s)")
   }
+
+  test("an empty snapshot is stored: v1 holds 0 rows and the columns, the next is v2") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_vt_none").toString + "/t"
+    val vt = new VersionedTable(spark, path, outputFiles = 1)
+    val none = Seq((1, "a")).toDF("id", "v").where(col("id") < 0)
+    assert(vt.snapshot(none) == 1L)
+    assert(vt.snapshot(Seq((1, "a")).toDF("id", "v")) == 2L)
+    assert(vt.at(1).count() == 0)
+    assert(vt.at(1).columns.toSeq == Seq("id", "v", "version"))
+    assert(vt.at(2).count() == 1)
+  }
+
+  test("a failed snapshot write leaves no version and no pending directory") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_vt_fail").toString + "/t"
+    val vt = new VersionedTable(spark, path, outputFiles = 1)
+    assert(vt.snapshot(Seq((1, "a")).toDF("id", "v")) == 1L)
+    val broken = Seq((1, "a")).toDF("id", "v")
+      .withColumn("v", raise_error(lit("snapshot write fails")).cast("string"))
+    intercept[Exception](vt.snapshot(broken))
+    assert(new java.io.File(path).listFiles().filter(_.isDirectory).map(_.getName).toSeq ==
+      Seq("version=1"))
+    assert(vt.snapshot(Seq((2, "b")).toDF("id", "v")) == 2L)
+    assert(vt.latest.as[(Int, String, Int)].collect().toSeq == Seq((2, "b", 2)))
+  }
 }
 
 class SessionsSpec extends SparkSpec {

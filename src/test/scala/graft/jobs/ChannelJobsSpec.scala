@@ -3,7 +3,9 @@ package graft.jobs
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.graftshim.Bridge
 import graft.SparkSpec
 import graft.core.TableRegistry
@@ -11,7 +13,8 @@ import graft.sources.AuditLog
 
 /** End-to-end driver sequence over the fixtures: staging overwrite, versioned
   * historical append with monotone versions, audit INITIATED/COMPLETED rows
-  * (S1:1261-1304 lifecycle), and the concurrent jobs' failure semantics. */
+  * (S1:1261-1304 lifecycle), the concurrent jobs' failure semantics, and
+  * one Spark execution per materialized output. */
 class ChannelJobsSpec extends SparkSpec {
 
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
@@ -168,5 +171,73 @@ class ChannelJobsSpec extends SparkSpec {
     }
     assert(both.getMessage.contains("nvs_calls_v1"))
     assert(both.getSuppressed.exists(_.getMessage.contains("costs_wide")))
+  }
+
+  /** `body`'s result, and the SQL executions that finish while it runs
+    * and whose plan mentions `marker`. */
+  private def executionsReading[T](marker: String)(body: => T): (T, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) seen.add(f): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        if (qe.analyzed.toString.contains(marker)) seen.add(s"$f (failed)"): Unit
+    }
+    val sc = spark.sparkContext
+    Bridge.drainListeners(sc, 10000)
+    spark.listenerManager.register(listener)
+    val result = try { val r = body; Bridge.drainListeners(sc, 10000); r }
+      finally spark.listenerManager.unregister(listener)
+    (result, seen.asScala.toSeq)
+  }
+
+  private def partFiles(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  test("materialize runs one execution per output: the versioned write, " +
+      "which also counts; staging is a byte copy of that version") {
+    val dir = Files.createTempDirectory("graft_one_exec").toString
+    val cfg = ChannelJobs.JobConfig(outDir = dir, outputFiles = 2)
+    val frame = spark.range(0, 1000, 1, 4)
+      .select(col("id").as("one_exec_marker"), (col("id") % 7).as("k"))
+    val (w, execs) = executionsReading("one_exec_marker") {
+      ChannelJobs.materialize(spark, frame, "probe_t", cfg)
+    }
+    assert(execs.size == 1, s"executions reading the frame: $execs")
+    assert(w == ChannelJobs.TableWrite("probe_t", 1000L, 1L))
+    val staging = spark.read.parquet(s"$dir/probe_t_staging")
+    val version = spark.read.parquet(s"$dir/probe_t_historical")
+      .where(col("version") === 1).drop("version")
+    assert(staging.count() == w.rows && version.count() == w.rows)
+    assert(staging.columns.toSeq == Seq("one_exec_marker", "k"))
+    assert(sameRows(staging, frame))
+    val parts = partFiles(s"$dir/probe_t_staging")
+    assert(parts.nonEmpty && parts == partFiles(s"$dir/probe_t_historical/version=1"))
+
+    // a second run replaces staging whole and appends version 2
+    val w2 = ChannelJobs.materialize(spark, frame.where(col("k") === 0), "probe_t", cfg)
+    assert(w2 == ChannelJobs.TableWrite("probe_t", 143L, 2L))
+    assert(spark.read.parquet(s"$dir/probe_t_staging").count() == 143L)
+    assert(partFiles(s"$dir/probe_t_staging") ==
+      partFiles(s"$dir/probe_t_historical/version=2"))
+  }
+
+  test("an output with 0 rows publishes a schema-only staging table and " +
+      "its own version") {
+    NvsFixtures.registerAll(spark)
+    val dir = Files.createTempDirectory("graft_empty_out").toString
+    val cfg = ChannelJobs.JobConfig(outDir = dir, outputFiles = 2)
+    val tam = NvsPipeline.tamCe(spark)
+    def columns(df: DataFrame) = df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+    val w = ChannelJobs.materialize(spark, tam.where(lit(false)), "tam_nvs", cfg)
+    assert(w == ChannelJobs.TableWrite("tam_nvs", 0L, 1L))
+    val staging = spark.read.parquet(s"$dir/tam_nvs_staging")
+    assert(staging.isEmpty && columns(staging) == columns(tam))
+    val w2 = ChannelJobs.materialize(spark, tam, "tam_nvs", cfg)
+    assert(w2.version == 2L && w2.rows > 0)
+    val hist = spark.read.parquet(s"$dir/tam_nvs_historical")
+    assert(hist.where(col("version") === 1).isEmpty)
+    assert(hist.where(col("version") === 2).count() == w2.rows)
   }
 }
