@@ -602,8 +602,11 @@ object Dedup {
       // write-side repartition, so Spark would elide the exchange and pass
       // multi-file buckets through as several write tasks — the folded
       // table would keep 2+ files per bucket and lose sort propagation.
-      val merged = spark.read.parquet(main.location.toString)
-        .unionByName(spark.read.parquet(meta(l0Of(t)).location.toString))
+      // Each level's files are read with its catalog schema: an index
+      // built over an empty corpus has no parquet files to infer one from.
+      def raw(m: org.apache.spark.sql.catalyst.catalog.CatalogTable) =
+        spark.read.schema(m.schema).parquet(m.location.toString)
+      val merged = raw(main).unionByName(raw(meta(l0Of(t))))
       graft.operators.ScaleOps.writeBucketed(
         merged, tmp, spec.numBuckets, spec.bucketColumnNames)
     } catch {

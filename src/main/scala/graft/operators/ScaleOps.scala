@@ -78,27 +78,12 @@ object ScaleOps {
         .cast("long"), lit(0L)), lit(buckets))
   }
 
-  /** Morton (Z-order) curve value for two numeric columns, each normalized
-    * to `bits` buckets over [lo, hi]: interleaves the bucket bits so nearby
-    * (a, b) points get nearby z-values. Pure built-in arithmetic. Note the
-    * Z-curve has long jumps at quadrant junctions — a clustered write cut
-    * at an arbitrary curve position can catch a full-width file there;
-    * [[hilbertValue]] has no jumps and is what [[writeClustered]] uses. */
-  def zValue(a: Column, aLo: Double, aHi: Double,
-      b: Column, bLo: Double, bHi: Double, bits: Int = 16): Column = {
-    require(bits >= 1 && bits <= 30, "bits in [1, 30]")
-    val ab = bucket(a, aLo, aHi, bits)
-    val bb = bucket(b, bLo, bHi, bits)
-    (0 until bits).map { i =>
-      (shiftright(ab, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i))) +
-        (shiftright(bb, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)))
-    }.reduce(_ + _)
-  }
-
-  /** Hilbert curve value for two numeric columns (bucketed as [[zValue]]) —
-    * continuous, so EVERY contiguous curve range is a spatially local blob:
-    * the property that makes equal-frequency file cuts safe. Backed by the
-    * codegen'd [[graft.functions.HilbertIndex]] expression. */
+  /** Hilbert curve value for two numeric columns, each normalized to
+    * `bits` buckets over [lo, hi] — continuous (no jumps at quadrant
+    * junctions, unlike a Z-order curve), so EVERY contiguous curve range is
+    * a spatially local blob: the property that makes equal-frequency file
+    * cuts safe. Backed by the codegen'd [[graft.functions.HilbertIndex]]
+    * expression. */
   def hilbertValue(a: Column, aLo: Double, aHi: Double,
       b: Column, bLo: Double, bHi: Double, bits: Int = 16): Column =
     graft.functions.HilbertIndex(

@@ -352,8 +352,8 @@ object EventStreams {
     *     by batchId; every `foldEvery`-th append folds L0 into the main
     *     level) so the NEXT batch dedups against them.
     * Same quality/blocklist gates, same metrics rows, same output as the
-    * unindexed sink (property-gated in EventStreamsSpec and by the q226
-    * driver row).
+    * unindexed sink (gated in EventStreamsSpec, property-gated in
+    * IngestAdmissionSpec, and by the q226 catalog row).
     *
     * Crash consistency: the corpus table is the source of truth. A
     * replayed batch whose merge already landed (marker == batchId) may
@@ -437,7 +437,8 @@ object EventStreams {
     *     the batch pipeline, one text scan per doc regardless of list
     *     size. Junk never reaches the dedup join, exactly like
     *     CurationJob's stage order; gated docs count as suppressed.
-    *  2. The drop set: a pair that touches the corpus drops its batch
+    *  2. The drop set, from one pass over the candidate pairs
+    *     ([[droppedIds]]): a pair that touches the corpus drops its batch
     *     side; a both-new pair drops the greater id (id_b).
     *  3. The survivors, passed through `seal`, are swapped into the corpus
     *     by [[mergeSwap]] (effectively-once). When the merge lands,
@@ -479,18 +480,7 @@ object EventStreams {
       val corpus = current.map(_.select(col("doc_id"), col("text")))
         .getOrElse(b.limit(0))
       val cand = candidates(corpus, b).where(col("est_jaccard") >= minJaccard)
-      val oldIds = corpus.select("doc_id")
-      val dropVsOldA = cand.join(
-        oldIds.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_semi")
-        .select(col("id_a").as("doc_id"))
-      val dropVsOldB = cand.join(
-        oldIds.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_semi")
-        .select(col("id_b").as("doc_id"))
-      val dropNewNew = cand
-        .join(oldIds.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_anti")
-        .join(oldIds.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_anti")
-        .select(col("id_b").as("doc_id"))
-      val dropped = dropVsOldA.union(dropVsOldB).union(dropNewNew).distinct()
+      val dropped = droppedIds(cand, corpus.select("doc_id"))
       val keep = seal(b.join(dropped, Seq("doc_id"), "left_anti"))
       admitted = Some(keep)
       corpus.unionByName(keep)
@@ -511,6 +501,33 @@ object EventStreams {
     // the candidate generators persist their signature tables through
     // CacheScope — the sink owns this batch's scope, release it now
     graft.core.CacheScope.drain()
+  }
+
+  /** The batch docs an ingest tick drops, from ONE pass over its
+    * candidate pairs `cand` (id_a, id_b): two left joins flag the
+    * endpoints that are corpus docs (`corpusIds.doc_id`), and a pair drops
+    * id_a when id_b is a corpus doc, and id_b when id_a is a corpus doc or
+    * neither endpoint is. That is the union of the three drop branches
+    * (corpus on the id_b side, corpus on the id_a side, both new → the
+    * greater id) for every input, pairs outside the disjoint-id contract
+    * included, but `cand` — the whole candidate probe — is planned once
+    * instead of once per branch. Returns the distinct dropped `doc_id`s. */
+  private[graft] def droppedIds(cand: DataFrame,
+      corpusIds: DataFrame): DataFrame = {
+    def corpusFlag(id: String, flag: String): DataFrame =
+      corpusIds.select(col("doc_id").as(id), lit(true).as(flag))
+    val aOld = col("a_old").isNotNull
+    val bOld = col("b_old").isNotNull
+    cand.select(col("id_a"), col("id_b"))
+      .join(corpusFlag("id_a", "a_old"), Seq("id_a"), "left")
+      .join(corpusFlag("id_b", "b_old"), Seq("id_b"), "left")
+      .select(explode(array(
+        struct(bOld.as("drop"), col("id_a").as("doc_id")),
+        struct((aOld || !bOld).as("drop"), col("id_b").as("doc_id"))))
+        .as("d"))
+      .where(col("d.drop"))
+      .select(col("d.doc_id").as("doc_id"))
+      .distinct()
   }
 
   /** Driver-gate harness for [[corpusIngestSinkIndexed]]: feeds the

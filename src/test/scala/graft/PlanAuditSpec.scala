@@ -647,6 +647,48 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
+  test("indexed ingest admission probes the main index level once per " +
+      "batch") {
+    // An ingest tick's admitted docs are the batch minus the drop set over
+    // the candidate pairs; the candidate probe must be planned once. The
+    // three-branch drop set it replaced planned the whole probe per
+    // branch: three band probes against the main level, where the
+    // one-pass rule has one.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Dedup, ScaleOps}
+    val sigT = ScaleOps.bucketTableName("graft_bkt_admitpin_sig", sfDir)
+    val bandT = ScaleOps.bucketTableName("graft_bkt_admitpin_band", sfDir)
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select("doc_id", "text")
+      val corpus = docs.where(col("doc_id") % 4 =!= 0)
+      val batch = docs.where(col("doc_id") % 4 === 0)
+      Dedup.buildDedupIndex(corpus, "doc_id", "text", 3, 32, 16, sigT, bandT,
+        buckets = 4)
+      val cand = Dedup.minhashCandidatesIndexedTables(batch, "doc_id", "text",
+        3, 32, 16, sigT, bandT).where(col("est_jaccard") >= 0.8)
+      def bandProbes(dropped: DataFrame): Int = {
+        val admitted = batch.join(dropped, Seq("doc_id"), "left_anti")
+        val out = new ByteArrayOutputStream()
+        Console.withOut(out) { admitted.explain() }
+        "SortMergeJoin \\[bkey#".r.findAllIn(out.toString).size
+      }
+      val ids = corpus.select("doc_id")
+      val onePass = bandProbes(graft.streaming.EventStreams.droppedIds(cand, ids))
+      assert(onePass == 1, s"one band probe against the main level, got $onePass")
+      val threeBranch =
+        bandProbes(graft.streaming.IngestAdmissionSpec.reference(cand, ids))
+      assert(threeBranch == 3,
+        s"the three-branch drop set should plan three band probes, got $threeBranch")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      Dedup.dropDedupIndex(spark, sigT, bandT)
+    }
+  }
+
   test("q222 indexed BM25: bucket-pruned postings scan, exchange-free " +
       "dfreq, heap top-k") {
     // A query batch must read only the buckets its terms hash into (never

@@ -429,9 +429,8 @@ class DedupPropertySpec extends SparkSpec {
   /** [[randomCorpus]]-style docs (8-word vocabulary, empty docs, doubled
     * spaces) with id gaps, dealt to the levels. Two docs in three copy one
     * of four base texts, exactly or with one word changed, so near-dups
-    * cross levels. Every level gets at least one doc: folding an empty
-    * main level is a known defect (UNABLE_TO_INFER_SCHEMA on its raw
-    * parquet) outside this property. */
+    * cross levels. Every level gets at least one doc; folding an empty
+    * main level is covered by IngestAdmissionSpec's empty-corpus case. */
   private val leveledCaseGen: Gen[LeveledCase] = {
     val vocab = Vector("a", "b", "c", "d", "e", "f", "g", "h")
     val fresh = for {
