@@ -20,11 +20,6 @@ import graft.functions.{Hashing, WordShingles}
 object Dedup {
   import Hashing.P
 
-  /** Apply an optional join-strategy hint ("shuffle_hash", "merge", …) to one
-    * side of a self-join; None leaves strategy choice to Catalyst/AQE. */
-  private def hinted(df: DataFrame, hint: Option[String]): DataFrame =
-    hint.fold(df)(df.hint(_))
-
   /** Anti-join `index` against a (small-by-construction) hot-key set.
     * `broadcastHot = true` pins the map-side-lookup plan; on a
     * boilerplate-heavy corpus where the hot set might exceed driver/broadcast
@@ -43,10 +38,10 @@ object Dedup {
     * silently corrupting — valid whenever ids fit [0, 2^31), i.e. any dense
     * doc numbering; pass false for 64-bit id spaces (content-hash ids) to
     * keep the composite-key aggregate. */
-  private def sharedCounts(filtered: DataFrame, joinHint: Option[String],
+  private def sharedCounts(filtered: DataFrame,
       packIds: Boolean): DataFrame = {
-    val joined = hinted(filtered.as("a"), joinHint)
-      .join(hinted(filtered.as("b"), joinHint), "sh")
+    val joined = filtered.as("a").hint("shuffle_hash")
+      .join(filtered.as("b").hint("shuffle_hash"), "sh")
       .where(col("a.id") < col("b.id"))
     if (packIds) {
       def guarded(c: Column): Column =
@@ -160,8 +155,7 @@ object Dedup {
     * of matching signature positions. */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32,
-      bands: Int = 8, maxBucketSize: Option[Int] = None,
-      joinHint: Option[String] = Some("shuffle_hash")): DataFrame = {
+      bands: Int = 8, maxBucketSize: Option[Int] = None): DataFrame = {
     val rowsPerBand = numHashes / bands
     // persist: signatures feed the banding AND the two signature joins at the
     // end. Registered with CacheScope so the session owner releases the
@@ -191,14 +185,12 @@ object Dedup {
         banded.withColumn("_bs", count(lit(1)).over(w))
           .where(col("_bs") <= cap).drop("_bs")
     }
-    // shuffle_hash (default): pins the bucket-join shape (hash-partition on
-    // the band key) — AQE would broadcast the whole banded table at test
-    // scale, which is slower even there and unbuildable at corpus scale.
-    // maxBucketSize is what bounds a bucket partition's hash build; if a
-    // corpus must run uncapped with mega-buckets, pass joinHint = None
-    // (AQE + skew-join) or Some("merge") (sort-merge spills instead of OOM).
-    val pairs = hinted(b.as("l"), joinHint)
-      .join(hinted(b.as("r"), joinHint), Seq("band_idx", "band_hash"))
+    // shuffle_hash pins the bucket-join shape (hash-partition on the band
+    // key) — AQE would broadcast the whole banded table at test scale,
+    // which is slower even there and unbuildable at corpus scale.
+    // maxBucketSize is what bounds a bucket partition's hash build.
+    val pairs = b.as("l").hint("shuffle_hash")
+      .join(b.as("r").hint("shuffle_hash"), Seq("band_idx", "band_hash"))
       .where(col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .distinct()
@@ -302,8 +294,7 @@ object Dedup {
     * reads the standing bucketed sig/band index instead. */
   def minhashCandidatesIncremental(oldDf: DataFrame, newDf: DataFrame,
       idCol: String, textCol: String,
-      shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      joinHint: Option[String] = Some("shuffle_hash")): DataFrame = {
+      shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8): DataFrame = {
     val rowsPerBand = numHashes / bands
     // persist both signature tables: each feeds its band table AND the
     // est-jaccard join-back (CacheScope-registered; owner drains after use)
@@ -318,8 +309,8 @@ object Dedup {
       .unionByName(bandsOf(sigsNew).withColumn("is_new", lit(true)))
     // new side is ALWAYS the left: new-old pairs emit regardless of id
     // order, new-new pairs emit once (l < r); old-old pairs cannot occur
-    val pairs = hinted(bandsOf(sigsNew).as("l"), joinHint)
-      .join(hinted(bAll.as("r"), joinHint), Seq("band_idx", "band_hash"))
+    val pairs = bandsOf(sigsNew).as("l").hint("shuffle_hash")
+      .join(bAll.as("r").hint("shuffle_hash"), Seq("band_idx", "band_hash"))
       .where((!col("r.is_new") && col("l.id") =!= col("r.id")) ||
         (col("r.is_new") && col("l.id") < col("r.id")))
       .select(least(col("l.id"), col("r.id")).as("id_a"),
@@ -724,7 +715,6 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minJaccard: Double = 0.5, maxDocFreq: Long = 100,
       broadcastHot: Boolean = true,
-      joinHint: Option[String] = Some("shuffle_hash"),
       packIds: Boolean = true): DataFrame = {
     // persist the exploded inverted index ONCE: the hot-shingle aggregate,
     // the per-doc size aggregate, and both self-join sides all read it, and
@@ -756,16 +746,14 @@ object Dedup {
     // the hot aggregate ran 3× per query before this)
     val filtered = graft.core.CacheScope.persist(cullHot(sh, hot, broadcastHot))
     val sizes = filtered.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    // shuffle_hash (default), NOT broadcast: AQE sees a sub-threshold build
-    // side at test scale and picks BHJ, but building+shipping the ENTIRE
-    // inverted index as a broadcast relation is 3× slower even here and
-    // impossible at corpus scale — the hint pins the hash-partition-on-
-    // shingle bucket join. The df-cut is what bounds a bucket's in-memory
-    // hash build; running with a huge maxDocFreq (or pathological residual
-    // skew) is what joinHint = None (AQE skew-split) or Some("merge")
-    // (spillable sort-merge) is for. The pair aggregate itself goes through
-    // [[sharedCounts]] (packed single-long key by default).
-    val pairs = sharedCounts(filtered, joinHint, packIds)
+    // shuffle_hash, NOT broadcast: AQE sees a sub-threshold build side at
+    // test scale and picks BHJ, but building+shipping the ENTIRE inverted
+    // index as a broadcast relation is 3× slower even here and impossible
+    // at corpus scale — the hint pins the hash-partition-on-shingle bucket
+    // join. The df-cut is what bounds a bucket's in-memory hash build. The
+    // pair aggregate itself goes through [[sharedCounts]] (packed
+    // single-long key by default).
+    val pairs = sharedCounts(filtered, packIds)
     pairs
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
       .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
@@ -921,10 +909,9 @@ object Dedup {
     * Cheapest of the near-dup pair generators: the signature is one long,
     * so the whole pipeline shuffles (id, long) tuples only. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 1, bands: Int = 2,
-      joinHint: Option[String] = Some("shuffle_hash")): DataFrame =
+      maxHamming: Int = 1, bands: Int = 2): DataFrame =
     bandedHammingPairs(simhashSigs(df, idCol, textCol, "sig"), idCol, "sig",
-      maxHamming, bands, joinHint)
+      maxHamming, bands)
 
   /** Band-bucket candidate pairs over ANY precomputed `bits`-wide signature
     * column (32-bit simhash over text, 64-bit perceptual aHash over
@@ -937,9 +924,7 @@ object Dedup {
     * pairs agreeing only on the banded prefix flood the candidate set.
     * The signature frame shuffles as (id, long) only. */
   def bandedHammingPairs(sigs: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int, bands: Int,
-      joinHint: Option[String] = Some("shuffle_hash"),
-      bits: Int = SimhashBits): DataFrame = {
+      maxHamming: Int, bands: Int, bits: Int = SimhashBits): DataFrame = {
     require(bits % bands == 0, "bands must divide the signature width")
     require(maxHamming < bands,
       s"recall guarantee needs maxHamming < bands (got $maxHamming, $bands)")
@@ -959,12 +944,10 @@ object Dedup {
           shiftright(col("sig"), b * width).bitwiseAND(lit(mask))): _*)))
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_val")
-    // shuffle_hash (default): locally neutral (the cost here is the
-    // signature agg), but pins the bucket-join shape that holds when banded
-    // can't broadcast; joinHint = None / Some("merge") for corpora where a
-    // single band value floods one bucket past what a hash build tolerates
-    hinted(banded.as("l"), joinHint)
-      .join(hinted(banded.as("r"), joinHint), Seq("band_idx", "band_val"))
+    // shuffle_hash: locally neutral (the cost here is the signature agg),
+    // but pins the bucket-join shape that holds when banded can't broadcast
+    banded.as("l").hint("shuffle_hash")
+      .join(banded.as("r").hint("shuffle_hash"), Seq("band_idx", "band_val"))
       .where(col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
         hammingDistance(col("l.sig"), col("r.sig")).as("hamming"))
@@ -1062,7 +1045,6 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minContainment: Double = 0.8, minShared: Long = 2,
       maxDocFreq: Long = 100, broadcastHot: Boolean = true,
-      joinHint: Option[String] = Some("shuffle_hash"),
       packIds: Boolean = true): DataFrame = {
     // one persisted explode feeds the hot-set aggregate, the sizes
     // aggregate, and both self-join sides (see ngramJaccardPairs for why
@@ -1077,7 +1059,7 @@ object Dedup {
     // sizes) would otherwise each replay the hot-set shuffle + anti-join
     val filtered = graft.core.CacheScope.persist(cullHot(sh, hot, broadcastHot))
     val sizes = filtered.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val pairs = sharedCounts(filtered, joinHint, packIds)
+    val pairs = sharedCounts(filtered, packIds)
       .where(col("shared") >= minShared)
     pairs
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
@@ -1251,7 +1233,6 @@ object Dedup {
     * inclusive end of the repeated text itself. */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 8, minCount: Long = 2,
-      joinHint: Option[String] = Some("shuffle_hash"),
       broadcastRepeated: Option[Boolean] = None,
       maxBroadcastHashes: Long = 4000000L): DataFrame = {
     // persisted: the occurrence count and the position mark both read it,
@@ -1280,7 +1261,8 @@ object Dedup {
       repeated.count() <= maxBroadcastHashes)
     val hits =
       if (doBroadcast) grams.join(broadcast(repeated), Seq("h"), "left_semi")
-      else hinted(grams, joinHint).join(hinted(repeated, joinHint), Seq("h"), "left_semi")
+      else grams.hint("shuffle_hash")
+        .join(repeated.hint("shuffle_hash"), Seq("h"), "left_semi")
     // merge adjacent repeated positions into maximal spans: a gap in `pos`
     // starts a new span (standard gaps-and-islands, both windows id-local)
     val byPos = org.apache.spark.sql.expressions.Window

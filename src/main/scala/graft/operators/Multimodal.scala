@@ -325,14 +325,13 @@ object Multimodal {
     * The image twin of text near-dup removal: re-encoded, resized, or
     * lightly edited copies land within `maxHamming` bits. */
   def perceptualDedup(media: Dataset[MediaRow], codec: Codec = StubCodec,
-      maxHamming: Int = 4, bands: Int = 8,
-      joinHint: Option[String] = Some("shuffle_hash")): DataFrame = {
+      maxHamming: Int = 4, bands: Int = 8): DataFrame = {
     import media.sparkSession.implicits._
     val sigs = media.mapPartitions(_.map(r =>
         (r.media_id, averageHash64(codec.grid8(r.payload)))))
       .toDF("media_id", "sig")
     Dedup.bandedHammingPairs(sigs, "media_id", "sig", maxHamming, bands,
-      joinHint, bits = 64)
+      bits = 64)
   }
 
   /** Build a media table from the `documents` fixture (text bytes as payload) —

@@ -922,8 +922,7 @@ object ScaleOps {
     */
   def bloomSemiJoin(fact: DataFrame, factKey: String,
       dim: DataFrame, dimKey: String,
-      expectedDistinct: Long, fpp: Double = 0.01,
-      joinHint: Option[String] = None): DataFrame = {
+      expectedDistinct: Long, fpp: Double = 0.01): DataFrame = {
     // the "no false negatives" contract holds only if the filter build and
     // the probe see the SAME representation: stat.bloomFilter inserts the
     // dim column's native value (a string column inserts string items) while
@@ -941,14 +940,11 @@ object ScaleOps {
     requireIntegral(dim, dimKey)
     val bloom = fact.sparkSession.sparkContext.broadcast(
       dim.stat.bloomFilter(dimKey, expectedDistinct, fpp))
-    // joinHint pins the residual join's strategy ("merge"/"shuffle_hash") —
-    // in the operator's target regime the dim is NOT broadcastable, which
-    // test-scale AQE can't know; None lets AQE choose from measured sizes
+    // the residual join carries no hint: AQE chooses from measured sizes
     val dimKeys = dim.select(col(dimKey).as("_dim_key")).distinct()
     fact
       .where(graft.functions.BloomMightContain(col(factKey).cast("long"), bloom))
-      .join(joinHint.fold(dimKeys)(dimKeys.hint(_)),
-        col(factKey) === col("_dim_key"), "left_semi")
+      .join(dimKeys, col(factKey) === col("_dim_key"), "left_semi")
   }
 
   /** Mergeable distinct-count rollup via HLL sketches

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -433,10 +435,11 @@ object EventStreams {
     * standing corpus and within the batch.
     *
     *  1. Row gates first (per-row, codegen'd, no shuffle): the quality
-    *     floor, then the blocklist — the same fused Aho–Corasick pass as
-    *     the batch pipeline, one text scan per doc regardless of list
-    *     size. Junk never reaches the dedup join, exactly like
-    *     CurationJob's stage order; gated docs count as suppressed.
+    *     floor, then the blocklist (`TextAnalysis.policyFilter`, no hit
+    *     allowed) — the same fused Aho–Corasick pass as the batch
+    *     pipeline, one text scan per doc regardless of list size. Junk
+    *     never reaches the dedup join, exactly like CurationJob's stage
+    *     order; gated docs count as suppressed.
     *  2. The drop set, from one pass over the candidate pairs
     *     ([[droppedIds]]): a pair that touches the corpus drops its batch
     *     side; a both-new pair drops the greater id (id_b).
@@ -461,8 +464,7 @@ object EventStreams {
     }
     val b =
       if (blockedPatterns.isEmpty) b0
-      else b0.where(graft.functions.PolicyHits(col("text"), blockedPatterns)
-        .getField("n_hits") === 0L)
+      else graft.operators.TextAnalysis.policyFilter(b0, "text", blockedPatterns)
     // mirrors mergeSwap's crash recovery: a mid-swap death leaves the
     // table in `_old`, and counting an absent dir as 0 would corrupt the
     // metrics row for the batch that restores it
@@ -691,13 +693,16 @@ object EventStreams {
 
   /** Micro-unit running totals via `transformWithState` (RocksDB store
     * required — set the provider on the session or use
-    * [[runningTotalsReplay]], which scopes it). */
-  def runningTotalsMicro(events: Dataset[Event]): Dataset[UserTotalMicro] = {
+    * [[runningTotalsReplay]], which scopes it). `outputMode` is Update for
+    * the memory sink, Append for the file sink
+    * ([[runningTotalsRestartReplay]]); each emits one cumulative row per
+    * user per batch with events. */
+  def runningTotalsMicro(events: Dataset[Event],
+      outputMode: OutputMode = OutputMode.Update()): Dataset[UserTotalMicro] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
       .transformWithState(new RunningTotalMicroProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
+        org.apache.spark.sql.streaming.TimeMode.None(), outputMode)
   }
 
   /** Driver-gate replay for `transformWithState` + the RocksDB state
@@ -734,14 +739,9 @@ object EventStreams {
   def runningTotalsRestartReplay(spark: SparkSession, events: DataFrame,
       nBatches: Int = 4, killAfter: Int = 2): DataFrame =
     replayGate(spark, events, nBatches, "running_totals_restart",
-        rocksDb = true, killAfter = Some(killAfter)) { (in, _) =>
-      import spark.implicits._
-      in.groupByKey(_.user_id)
-        .transformWithState(new RunningTotalMicroProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append())
-        .toDF()
-    }.select(col("user_id"), col("n_events"), col("total_micro"))
+        rocksDb = true, killAfter = Some(killAfter))(
+      (in, _) => runningTotalsMicro(in, OutputMode.Append()).toDF())
+      .select(col("user_id"), col("n_events"), col("total_micro"))
 
   /** [[funnelReplay]] across a kill-and-resume ([[replayGate]] with
     * `killAfter`): the flatMapGroupsWithState + default-state-provider
@@ -854,39 +854,94 @@ object EventStreams {
     * — a repeat-conversion semantic the batch twin doesn't have (caught by
     * the q202 driver gate). State is one Int per user that ever entered the
     * funnel — bounded by users, not by event volume; add a state timeout
-    * upstream if completed users must eventually evict.
-    *
-    * Ordering contract: rows are time-sorted WITHIN each micro-batch, so the
-    * walk is exactly the batch operator's greedy time-order walk whenever
-    * event disorder is bounded by the batch interval. An earlier-timestamped
-    * stage event that surfaces only AFTER a later one already advanced the
-    * funnel counts at arrival (the stream cannot retro-reorder committed
-    * advances) — the standard at-arrival funnel semantic; run the batch twin
-    * for the retrospective exact answer. */
+    * upstream if completed users must eventually evict. Walked by
+    * [[atArrival]] (its ordering contract). */
   def funnelAdvances(events: Dataset[Event],
       steps: Seq[String]): Dataset[FunnelAdvance] = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    val spark = events.sparkSession
-    import spark.implicits._
     val stepArr = steps.toArray
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[FunnelState]): Iterator[FunnelAdvance] = {
-      var stage = state.getOption.map(_.stage).getOrElse(0)
-      val out = List.newBuilder[FunnelAdvance]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)).foreach { e =>
-        if (stage < stepArr.length && e.event_type == stepArr(stage)) {
-          stage += 1
-          out += FunnelAdvance(userId, stage, stepArr(stage - 1), e.ts)
-        }
-      }
-      state.update(FunnelState(stage)) // terminal stage kept: no restart
-      out.result().iterator
+    atArrival(events, FunnelState(0)) { (user, s, e) =>
+      if (s.stage < stepArr.length && e.event_type == stepArr(s.stage))
+        (FunnelState(s.stage + 1),
+          Seq(FunnelAdvance(user, s.stage + 1, stepArr(s.stage), e.ts)))
+      else (s, Nil)
     }
+  }
 
-    events.groupByKey(_.user_id)
+  /** The at-arrival driver behind [[funnelAdvances]], [[lastTouchAdvances]],
+    * [[linearAdvances]], [[botFlagAdvances]] and [[decayAdvances]]: per
+    * user, a walk of `step` over that user's rows from the carried state
+    * (`init` for a new user), emitting each step's rows at once.
+    *
+    * Ordering contract: each micro-batch's rows sort by full event time
+    * (ts, nanos, event_id) before the walk, so it is exactly the batch
+    * operator's time-order walk whenever event disorder is bounded by the
+    * batch interval. A row that surfaces only AFTER a later one was walked
+    * counts at arrival (the stream cannot retro-reorder committed output) —
+    * the at-arrival semantic; [[watermarkOrdered]] trades `delay` of latency
+    * for exact batch parity under bounded disorder. State is `S` per user,
+    * hash-distributed across the state store by user_id, never event
+    * history. Everything the task closure reads is local here: a member of
+    * this (non-serializable) object would drag the object into the task. */
+  private def atArrival[S: TypeTag, O: TypeTag](events: Dataset[Event],
+      init: S)(step: (Long, S, Event) => (S, Seq[O])): Dataset[O] = {
+    implicit val stateEnc: Encoder[S] = ExpressionEncoder[S]()
+    implicit val outEnc: Encoder[O] = ExpressionEncoder[O]()
+    val byTime = (e: Event) => (e.ts.getTime, e.ts.getNanos, e.event_id)
+    events.groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (user: Long, rows: Iterator[Event], state: GroupState[S]) =>
+          var s = state.getOption.getOrElse(init)
+          val out = rows.toSeq.sortBy(byTime).flatMap { e =>
+            val (next, emitted) = step(user, s, e)
+            s = next
+            emitted
+          }
+          state.update(s)
+          out.iterator
+      }
+  }
+
+  /** The watermark-ordered driver behind [[lastTouchAdvancesOrdered]],
+    * [[linearAdvancesOrdered]] and [[transitionAdvancesOrdered]]: the same
+    * per-user walk as [[atArrival]], but rows buffer in state until the
+    * watermark passes their event time and then replay in full event-time
+    * order (ts, nanos, event_id), so a row arriving LATE (after a later
+    * one, but within `delay`) still walks in its batch-operator position.
+    * Rows finalize strictly below the watermark — a row AT it can still be
+    * joined by an equal-timestamp sibling in a later batch. The group's
+    * event-time timeout is set to the earliest deferred ts + 1, so a user
+    * who never sends another row still flushes. Disorder BEYOND the
+    * watermark is dropped by the framework on arrival, as in
+    * [[windowedAgg]]. State per user = `S` + the events inside the
+    * watermark horizon (bounded by delay × per-user rate, not stream
+    * history). Same closure-locality rule as [[atArrival]]. */
+  private def watermarkOrdered[S: TypeTag, O: TypeTag](events: Dataset[Event],
+      delay: String, init: S)(
+      step: (Long, S, Event) => (S, Seq[O])): Dataset[O] = {
+    implicit val stateEnc: Encoder[(S, Seq[Event])] =
+      ExpressionEncoder[(S, Seq[Event])]()
+    implicit val outEnc: Encoder[O] = ExpressionEncoder[O]()
+    val byTime = (e: Event) => (e.ts.getTime, e.ts.getNanos, e.event_id)
+    events.withWatermark("ts", delay)
+      .groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, rows: Iterator[Event], state: GroupState[(S, Seq[Event])]) =>
+          val wm = state.getCurrentWatermarkMs()
+          val (carried, pending) = state.getOption.getOrElse((init, Nil))
+          val (ready, defer) = (pending ++ rows).partition(_.ts.getTime < wm)
+          var s = carried
+          val out = ready.sortBy(byTime).flatMap { e =>
+            val (next, emitted) = step(user, s, e)
+            s = next
+            emitted
+          }
+          state.update((s, defer))
+          if (defer.nonEmpty)
+            state.setTimeoutTimestamp(defer.map(_.ts.getTime).min + 1)
+          out.iterator
+      }
   }
 
   /** Deterministic micro-batch REPLAY of [[funnelAdvances]] — the
@@ -1156,267 +1211,123 @@ object EventStreams {
       schema)
   }
 
-  /** Per-user last-touch channel (top-level for the state encoder). */
+  /** Per-user last-touch channel (top-level for the state encoder; null
+    * until the first touch). */
   final case class TouchState(channel: String)
 
-  /** Per-user distinct-touch set (bounded by |touchTypes|). */
+  /** Per-user distinct-touch set, sorted (bounded by |touchTypes|). */
   final case class TouchSetState(channels: Seq[String])
 
   /** One equal-split credit from a streaming linear attribution. */
   final case class SplitCredit(user_id: Long, channel: String,
       value: Double, ts: Timestamp)
 
+  /** The linear walk shared by [[linearAdvances]] and
+    * [[linearAdvancesOrdered]]: a touch joins the distinct-channel set; a
+    * conversion emits one credit per channel in the set, value / |set|
+    * each, or the whole value as "direct" when the set is empty. */
+  private def linearWalk(touchTypes: Seq[String], convType: String)
+      : (Long, TouchSetState, Event) => (TouchSetState, Seq[SplitCredit]) = {
+    require(touchTypes.nonEmpty, "touchTypes must be non-empty")
+    require(!touchTypes.contains(convType),
+      "the conversion type cannot also be a touch type")
+    val touches = touchTypes.toSet
+    (user, s, e) =>
+      if (touches.contains(e.event_type)) {
+        if (s.channels.contains(e.event_type)) (s, Nil)
+        else (TouchSetState((s.channels :+ e.event_type).sorted), Nil)
+      } else if (e.event_type != convType) (s, Nil)
+      else if (s.channels.isEmpty)
+        (s, Seq(SplitCredit(user, "direct", e.value, e.ts)))
+      else (s, s.channels.map(ch =>
+        SplitCredit(user, ch, e.value / s.channels.size, e.ts)))
+  }
+
   /** Streaming linear (equal-split) attribution — the live twin of
     * `graft.operators.EventOps.linearAttribution`: per user, the state is
     * the DISTINCT touch-channel set seen so far (bounded by |touchTypes|,
     * a handful of strings); each conversion emits one credit row per
     * participating channel, value / |channels| each ("direct" for the whole
-    * value when the set is empty). Same at-arrival ordering contract as
-    * [[lastTouchAdvances]]. */
+    * value when the set is empty). Walked by [[atArrival]]. */
   def linearAdvances(events: Dataset[Event], touchTypes: Seq[String],
-      convType: String): Dataset[SplitCredit] = {
-    require(touchTypes.nonEmpty, "touchTypes must be non-empty")
-    require(!touchTypes.contains(convType),
-      "the conversion type cannot also be a touch type")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val touches = touchTypes.toSet
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[TouchSetState]): Iterator[SplitCredit] = {
-      var seen = state.getOption.map(_.channels.toSet).getOrElse(Set.empty)
-      val out = List.newBuilder[SplitCredit]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)).foreach { e =>
-        if (touches.contains(e.event_type)) seen += e.event_type
-        else if (e.event_type == convType) {
-          if (seen.isEmpty) out += SplitCredit(userId, "direct", e.value, e.ts)
-          else seen.toSeq.sorted.foreach(ch =>
-            out += SplitCredit(userId, ch, e.value / seen.size, e.ts))
-        }
-      }
-      if (seen.nonEmpty) state.update(TouchSetState(seen.toSeq.sorted))
-      out.result().iterator
-    }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
+      convType: String): Dataset[SplitCredit] =
+    atArrival(events, TouchSetState(Nil))(linearWalk(touchTypes, convType))
 
   /** One attributed conversion, emitted the moment it arrives. */
   final case class Attribution(user_id: Long, channel: String,
       value: Double, ts: Timestamp)
+
+  /** The last-touch walk shared by [[lastTouchAdvances]] and
+    * [[lastTouchAdvancesOrdered]]: a touch replaces the channel; a
+    * conversion emits one credit to it, "direct" before any touch. */
+  private def lastTouchWalk(touchTypes: Seq[String], convType: String)
+      : (Long, TouchState, Event) => (TouchState, Seq[Attribution]) = {
+    require(touchTypes.nonEmpty, "touchTypes must be non-empty")
+    require(!touchTypes.contains(convType),
+      "the conversion type cannot also be a touch type")
+    val touches = touchTypes.toSet
+    (user, s, e) =>
+      if (touches.contains(e.event_type)) (TouchState(e.event_type), Nil)
+      else if (e.event_type != convType) (s, Nil)
+      else (s, Seq(Attribution(user,
+        if (s.channel == null) "direct" else s.channel, e.value, e.ts)))
+  }
 
   /** Streaming last-touch attribution — the live twin of
     * `graft.operators.EventOps.lastTouchAttribution`: per user, ONE small
     * string of state (the most recent touch channel); each conversion event
     * emits an (user, channel, value, ts) credit immediately ("direct" when
     * no touch has been seen), so spend dashboards attribute at event latency
-    * while the batch op remains the retrospective exact answer.
-    *
-    * State is bounded by active users (one channel name each), never by
-    * event volume, and is hash-distributed across the state store by
-    * user_id — the identical scale shape as [[funnelAdvances]]. Ordering
-    * contract is also the same: rows time-sort within each micro-batch, so
-    * attribution matches the batch operator whenever event disorder is
-    * bounded by the batch interval; a touch surfacing after a conversion
-    * already credited cannot retro-reassign it (at-arrival semantics —
-    * spec-pinned; [[lastTouchAdvancesOrdered]] is the watermark-buffered
-    * variant that trades latency for exact batch parity under bounded
-    * disorder). */
+    * while the batch op remains the retrospective exact answer. Walked by
+    * [[atArrival]]: a touch surfacing after a conversion already credited
+    * cannot retro-reassign it ([[lastTouchAdvancesOrdered]] is the
+    * watermark-buffered variant). */
   def lastTouchAdvances(events: Dataset[Event], touchTypes: Seq[String],
-      convType: String): Dataset[Attribution] = {
-    require(touchTypes.nonEmpty, "touchTypes must be non-empty")
-    require(!touchTypes.contains(convType),
-      "the conversion type cannot also be a touch type")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val touches = touchTypes.toSet
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[TouchState]): Iterator[Attribution] = {
-      var channel = state.getOption.map(_.channel).orNull
-      val out = List.newBuilder[Attribution]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)).foreach { e =>
-        if (touches.contains(e.event_type)) channel = e.event_type
-        else if (e.event_type == convType)
-          out += Attribution(userId,
-            if (channel == null) "direct" else channel, e.value, e.ts)
-      }
-      if (channel != null) state.update(TouchState(channel))
-      out.result().iterator
-    }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Watermark-ordered attribution state: the last finalized touch channel
-    * plus the not-yet-finalizable event buffer (top-level for the state
-    * encoder). */
-  final case class OrderedTouchState(channel: String, pending: Seq[Event])
-
-  /** Same, for the linear variant: the finalized distinct-touch set. */
-  final case class OrderedTouchSetState(channels: Seq[String],
-      pending: Seq[Event])
+      convType: String): Dataset[Attribution] =
+    atArrival(events, TouchState(null))(lastTouchWalk(touchTypes, convType))
 
   /** Watermark-ordered last-touch attribution — the EXACT-parity twin of
-    * [[lastTouchAdvances]]: events buffer in state until the watermark
-    * passes their event time, then replay in full event-time order, so a
+    * [[lastTouchAdvances]], the same walk under [[watermarkOrdered]]: a
     * touch arriving LATE (after its conversion, but within `delay`) still
-    * credits that conversion exactly as the batch operator would.
-    * [[lastTouchAdvances]] trades this for zero latency (at-arrival
-    * credits); this variant trades `delay` of latency for batch parity
-    * under any disorder bounded by the watermark. Disorder BEYOND the
-    * watermark is dropped by the framework on arrival — the standard
-    * contract, identical to [[windowedAgg]]'s late-row drop.
-    *
-    * Scale shape: state per user = one channel string + the events inside
-    * the watermark horizon (bounded by delay × per-user rate, NOT stream
-    * history); finalized events leave state the moment the watermark
-    * passes them, via EventTimeTimeout so even a user with no new events
-    * flushes. Same user_id-hashed state-store distribution as the
-    * at-arrival twin. */
+    * credits that conversion exactly as the batch operator would. */
   def lastTouchAdvancesOrdered(events: Dataset[Event],
       touchTypes: Seq[String], convType: String,
-      delay: String = "10 minutes"): Dataset[Attribution] = {
-    require(touchTypes.nonEmpty, "touchTypes must be non-empty")
-    require(!touchTypes.contains(convType),
-      "the conversion type cannot also be a touch type")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val touches = touchTypes.toSet
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[OrderedTouchState]): Iterator[Attribution] = {
-      val wm = state.getCurrentWatermarkMs()
-      val prev = state.getOption.getOrElse(OrderedTouchState(null, Nil))
-      // finalize strictly below the watermark: a row AT the watermark can
-      // still be joined by an equal-timestamp sibling in a later batch
-      val (ready, defer) = (prev.pending ++ rows)
-        .partition(_.ts.getTime < wm)
-      var channel = prev.channel
-      val out = List.newBuilder[Attribution]
-      ready.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)).foreach { e =>
-        if (touches.contains(e.event_type)) channel = e.event_type
-        else if (e.event_type == convType)
-          out += Attribution(userId,
-            if (channel == null) "direct" else channel, e.value, e.ts)
-      }
-      state.update(OrderedTouchState(channel,
-        defer.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))))
-      // wake this group when the watermark passes its earliest buffered
-      // event, even if the user never sends another row
-      if (defer.nonEmpty)
-        state.setTimeoutTimestamp(defer.map(_.ts.getTime).min + 1)
-      out.result().iterator
-    }
-
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
-  }
+      delay: String = "10 minutes"): Dataset[Attribution] =
+    watermarkOrdered(events, delay, TouchState(null))(
+      lastTouchWalk(touchTypes, convType))
 
   /** Watermark-ordered linear (equal-split) attribution — the exact-parity
-    * twin of [[linearAdvances]], with the same buffer-until-watermark
-    * replay as [[lastTouchAdvancesOrdered]]: a late touch inside `delay`
-    * joins the split set of every conversion it event-time-precedes,
-    * matching the batch operator exactly under bounded disorder. */
+    * twin of [[linearAdvances]] under [[watermarkOrdered]]: a late touch
+    * inside `delay` joins the split set of every conversion it
+    * event-time-precedes, matching the batch operator exactly. */
   def linearAdvancesOrdered(events: Dataset[Event],
       touchTypes: Seq[String], convType: String,
-      delay: String = "10 minutes"): Dataset[SplitCredit] = {
-    require(touchTypes.nonEmpty, "touchTypes must be non-empty")
-    require(!touchTypes.contains(convType),
-      "the conversion type cannot also be a touch type")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val touches = touchTypes.toSet
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[OrderedTouchSetState]): Iterator[SplitCredit] = {
-      val wm = state.getCurrentWatermarkMs()
-      val prev = state.getOption.getOrElse(OrderedTouchSetState(Nil, Nil))
-      val (ready, defer) = (prev.pending ++ rows)
-        .partition(_.ts.getTime < wm)
-      var seen = prev.channels.toSet
-      val out = List.newBuilder[SplitCredit]
-      ready.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)).foreach { e =>
-        if (touches.contains(e.event_type)) seen += e.event_type
-        else if (e.event_type == convType) {
-          if (seen.isEmpty) out += SplitCredit(userId, "direct", e.value, e.ts)
-          else seen.toSeq.sorted.foreach(ch =>
-            out += SplitCredit(userId, ch, e.value / seen.size, e.ts))
-        }
-      }
-      state.update(OrderedTouchSetState(seen.toSeq.sorted,
-        defer.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))))
-      if (defer.nonEmpty)
-        state.setTimeoutTimestamp(defer.map(_.ts.getTime).min + 1)
-      out.result().iterator
-    }
-
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
-  }
+      delay: String = "10 minutes"): Dataset[SplitCredit] =
+    watermarkOrdered(events, delay, TouchSetState(Nil))(
+      linearWalk(touchTypes, convType))
 
   /** One (from, to) row per consecutive event pair of a user. */
   final case class TransitionAdvance(user_id: Long, prev_type: String,
       next_type: String, ts: Timestamp)
 
-  /** Watermark-ordered transition state: the last finalized event type
-    * plus the in-horizon buffer (top-level for the state encoder). */
-  final case class OrderedTypeState(lastType: String, pending: Seq[Event])
-
   /** Live first-order transition feed — the streaming twin of
     * [[graft.operators.EventOps.eventTransitions]] (q114): one
     * TransitionAdvance row per consecutive event pair of a user, emitted
-    * once the watermark finalizes the pair's order. A downstream
-    * `groupBy(prev_type, next_type).count()` over the emitted rows equals
-    * the batch adjacency exactly under any disorder bounded by `delay`
-    * (the [[lastTouchAdvancesOrdered]] buffer-replay contract: rows
-    * finalize strictly below the watermark, replay in full
-    * (ts, nanos, event_id) event-time order, and EventTimeTimeout wakes
-    * quiet users).
-    *
-    * Scale shape: state per user = ONE type string + the in-horizon
-    * buffer (bounded by delay × per-user rate); emitted rows are the
-    * event stream's own cardinality minus one per user — the live feed a
-    * session-health monitor folds into its |types|² matrix at bounded
-    * memory. */
+    * once the watermark finalizes the pair's order. Under
+    * [[watermarkOrdered]], a downstream `groupBy(prev_type,
+    * next_type).count()` over the emitted rows equals the batch adjacency
+    * exactly under any disorder bounded by `delay`. State per user = the
+    * last finalized type (null before the first) + the in-horizon buffer;
+    * emitted rows are the event stream's own cardinality minus one per
+    * user — the live feed a session-health monitor folds into its |types|²
+    * matrix at bounded memory. */
   def transitionAdvancesOrdered(events: Dataset[Event],
-      delay: String = "10 minutes"): Dataset[TransitionAdvance] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[OrderedTypeState]): Iterator[TransitionAdvance] = {
-      val wm = state.getCurrentWatermarkMs()
-      val prev = state.getOption.getOrElse(OrderedTypeState(null, Nil))
-      val (ready, defer) = (prev.pending ++ rows)
-        .partition(_.ts.getTime < wm)
-      var last = prev.lastType
-      val out = List.newBuilder[TransitionAdvance]
-      ready.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)).foreach { e =>
-        if (last != null)
-          out += TransitionAdvance(userId, last, e.event_type, e.ts)
-        last = e.event_type
-      }
-      state.update(OrderedTypeState(last,
-        defer.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))))
-      if (defer.nonEmpty)
-        state.setTimeoutTimestamp(defer.map(_.ts.getTime).min + 1)
-      out.result().iterator
+      delay: String = "10 minutes"): Dataset[TransitionAdvance] =
+    watermarkOrdered(events, delay, null: String) { (user, last, e) =>
+      (e.event_type,
+        if (last == null) Nil
+        else Seq(TransitionAdvance(user, last, e.event_type, e.ts)))
     }
-
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
-  }
 
   /** Running inter-arrival moments for [[botFlagAdvances]] (top-level for
     * the state encoder): last event time (nanos) + exact gap sums. */
@@ -1435,47 +1346,31 @@ object EventStreams {
     * firehose — dashboards want admissions, and downstream consumers
     * treat the flag as sticky the way the batch gate does a snapshot).
     *
-    * Ordering contract matches [[funnelAdvances]]: in-batch rows sort by
-    * full event time, so batch parity is scoped to in-order streams (the
-    * same scope [[decayAdvances]] documents) — gaps are computed between
-    * ARRIVAL-adjacent events, so a late cross-batch arrival produces a
-    * negative gap and moment sums that differ from the batch operator's
-    * time-ordered gaps; floor-division keeps even those negative gaps on
-    * the same second grid as the batch twin's SQL `div`. */
+    * Walked by [[atArrival]], so batch parity is scoped to in-order
+    * streams: gaps are computed between ARRIVAL-adjacent events, so a late
+    * cross-batch arrival produces a negative gap and moment sums that
+    * differ from the batch operator's time-ordered gaps; floor-division
+    * keeps even those negative gaps on the same second grid as the batch
+    * twin's SQL `div`. */
   def botFlagAdvances(events: Dataset[Event], minEvents: Long = 10,
       cvNum: Long = 1, cvDen: Long = 20): Dataset[BotFlag] = {
     require(minEvents >= 3 && cvNum >= 1 && cvDen >= 1, "bad thresholds")
-    val spark = events.sparkSession
-    import spark.implicits._
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[GapState]): Iterator[BotFlag] = {
-      var st = state.getOption.getOrElse(GapState(Long.MinValue, 0, 0, 0,
-        flagged = false))
-      val out = List.newBuilder[BotFlag]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-        .foreach { e =>
-          val ns = e.ts.getTime * 1000000L + e.ts.getNanos % 1000000L
-          if (st.lastNs != Long.MinValue) {
-            val g = Math.floorDiv(ns - st.lastNs, 1000000000L)
-            st = st.copy(nGaps = st.nGaps + 1, sumGap = st.sumGap + g,
-              sumGapSq = st.sumGapSq + g * g)
-            val varNum = st.nGaps * st.sumGapSq - st.sumGap * st.sumGap
-            if (!st.flagged && st.nGaps >= minEvents - 1 && st.sumGap > 0 &&
-                varNum * cvDen <= st.sumGap * st.sumGap * cvNum) {
-              st = st.copy(flagged = true)
-              out += BotFlag(userId, e.ts, st.nGaps, st.sumGap, varNum)
-            }
-          }
-          st = st.copy(lastNs = ns)
+    atArrival(events, GapState(Long.MinValue, 0, 0, 0, flagged = false)) {
+      (user, st, e) =>
+        val ns = e.ts.getTime * 1000000L + e.ts.getNanos % 1000000L
+        if (st.lastNs == Long.MinValue) (st.copy(lastNs = ns), Nil)
+        else {
+          val g = Math.floorDiv(ns - st.lastNs, 1000000000L)
+          val s = st.copy(lastNs = ns, nGaps = st.nGaps + 1,
+            sumGap = st.sumGap + g, sumGapSq = st.sumGapSq + g * g)
+          val varNum = s.nGaps * s.sumGapSq - s.sumGap * s.sumGap
+          if (!s.flagged && s.nGaps >= minEvents - 1 && s.sumGap > 0 &&
+              varNum * cvDen <= s.sumGap * s.sumGap * cvNum)
+            (s.copy(flagged = true),
+              Seq(BotFlag(user, e.ts, s.nGaps, s.sumGap, varNum)))
+          else (s, Nil)
         }
-      state.update(st)
-      out.result().iterator
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
   }
 
   /** Trailing value ring for [[decayAdvances]]: newest-first micro-unit
@@ -1493,45 +1388,20 @@ object EventStreams {
     * weights, micro-unit longs, round-half-up cent reduction — so after
     * any prefix of in-order events, the LATEST advance per user equals the
     * batch operator run over that prefix, bit for bit (spec-pinned).
-    *
-    * Ordering contract matches [[funnelAdvances]]: rows sort by full event
-    * time within each micro-batch, so parity holds whenever disorder is
-    * bounded by the batch interval; a cross-batch late event re-scores at
-    * arrival position (at-arrival semantics — the watermark-buffered
-    * pattern of [[lastTouchAdvancesOrdered]] drops in if exact parity
-    * under bounded disorder is needed).
-    *
-    * Scale shape: state is `window` longs per ACTIVE user — no event
-    * history, no timestamps; the state store shards on user_id like every
-    * twin here. */
+    * Walked by [[atArrival]]: a cross-batch late event re-scores at
+    * arrival position. State is `window` longs per ACTIVE user — no event
+    * history, no timestamps. */
   def decayAdvances(events: Dataset[Event], window: Int = 24)
       : Dataset[DecayAdvance] = {
     require(window >= 1 && window <= 24, "window in [1, 24] (overflow bound)")
-    val spark = events.sparkSession
-    import spark.implicits._
     val denom = (1L << (window - 1)) * 10000L
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[DecayState]): Iterator[DecayAdvance] = {
-      var recent = state.getOption.map(_.recent.toList).getOrElse(Nil)
-      val out = List.newBuilder[DecayAdvance]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-        .foreach { e =>
-          recent = (math.floor(e.value * 1e6 + 0.5).toLong :: recent)
-            .take(window)
-          var units = 0L
-          recent.zipWithIndex.foreach { case (v, k) =>
-            units += v << (window - 1 - k)
-          }
-          out += DecayAdvance(userId, e.ts, recent.size,
-            ((units + denom / 2) / denom).toDouble / 100.0)
-        }
-      state.update(DecayState(recent))
-      out.result().iterator
+    atArrival(events, DecayState(Nil)) { (user, s, e) =>
+      val recent = (math.floor(e.value * 1e6 + 0.5).toLong +: s.recent)
+        .take(window)
+      val units = recent.zipWithIndex
+        .map { case (v, k) => v << (window - 1 - k) }.sum
+      (DecayState(recent), Seq(DecayAdvance(user, e.ts, recent.size,
+        ((units + denom / 2) / denom).toDouble / 100.0)))
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
   }
 }
