@@ -1116,7 +1116,7 @@ private[graft] trait CatalogPart6 extends CatalogPart5 {
     * this deliberately disordered feed must STILL equal the batch
     * attribution — which is exactly what the oracle computes (q206's
     * last_value window). Exercises watermark advancement, in-state
-    * buffering, EventTimeTimeout wake, and the two-sentinel flush. */
+    * buffering, EventTimeTimeout wake, and the sentinel flush. */
   private[graft] val q208 = QuerySpec(
     "q208_stream_ordered_touch",
     (s, dir) => {

@@ -430,11 +430,12 @@ object Dedup {
       .join(bandsOld.as("r").hint("merge"), Seq("bkey"))
       .select(least(col("l.id"), col("r.id")).as("id_a"),
         greatest(col("l.id"), col("r.id")).as("id_b"))
-    // new × L0: both sides batch-grain (≤ foldEvery pending batches), any
-    // strategy — this branch exists only between folds
+    // new × L0: both sides batch-grain (≤ foldEvery pending batches), so
+    // the L0 side is broadcast-hinted — pinned, not left to the size
+    // estimate; this branch exists only between folds
     val newL0 = bandsL0.map { b0 =>
       bandsNew.as("l")
-        .join(b0.as("r"), Seq("bkey"))
+        .join(b0.as("r").hint("broadcast"), Seq("bkey"))
         .select(least(col("l.id"), col("r.id")).as("id_a"),
           greatest(col("l.id"), col("r.id")).as("id_b"))
     }
@@ -451,12 +452,13 @@ object Dedup {
     // (small, plain join) when live, OR the batch sigs (left joins +
     // coalesce — a union of the sig frames would re-exchange the corpus
     // side and forfeit the layout). Ids are disjoint across all three by
-    // the maintenance contract, so coalesce order cannot matter.
+    // the maintenance contract, so coalesce order cannot matter. The L0
+    // side is broadcast-hinted, like the new × L0 band join.
     def l0SigJoin(df: DataFrame, idAlias: String, out: String): DataFrame =
       sigsL0 match {
         case None => df // no-L0 plan stays byte-identical to the pre-L0 shape
         case Some(s0) => df.join(
-          s0.select(col("id").as(idAlias), col("sig").as(out)),
+          s0.select(col("id").as(idAlias), col("sig").as(out)).hint("broadcast"),
           Seq(idAlias), "left")
       }
     def sigCoalesce(oldC: String, l0C: String, newC: String): Column =

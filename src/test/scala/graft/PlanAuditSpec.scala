@@ -689,6 +689,61 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("indexed probe with a live L0 broadcasts the L0 side, and the main " +
+      "level's bucketed scans stay exchange-free") {
+    // Between folds the probe joins the batch against main ∪ L0. The L0
+    // side is batch-grain (≤ foldEvery batches), so its three joins (band
+    // probe, two sig join-backs) are broadcast by hint, also with the
+    // size-based broadcast switched off; the main level keeps its three
+    // sort-merge joins fed straight by bucketed scans.
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Dedup, ScaleOps}
+    val sigT = ScaleOps.bucketTableName("graft_bkt_l0pin_sig", sfDir)
+    val bandT = ScaleOps.bucketTableName("graft_bkt_l0pin_band", sfDir)
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select("doc_id", "text")
+      Dedup.buildDedupIndex(docs.where(col("doc_id") % 4 < 2), "doc_id",
+        "text", 3, 32, 16, sigT, bandT, buckets = 4)
+      Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 2), "doc_id",
+        "text", 3, 32, 16, sigT, bandT, batchTag = "l0", foldEvery = 1000)
+      val cand = Dedup.minhashCandidatesIndexedTables(
+        docs.where(col("doc_id") % 4 === 3), "doc_id", "text", 3, 32, 16,
+        sigT, bandT)
+      val out = new ByteArrayOutputStream()
+      Console.withOut(out) { cand.explain() }
+      val p = out.toString
+      assert("BroadcastHashJoin".r.findAllIn(p).size == 3,
+        s"the three L0 joins must broadcast:\n$p")
+      // each main-level scan's path up to its join holds no exchange
+      val lines = p.linesIterator.toIndexedSeq
+      def depth(l: String): Int = l.indexWhere(c => !" :+-|".contains(c))
+      def pathToJoin(i: Int): Seq[String] = {
+        val up = (i - 1 to 0 by -1).find(j => depth(lines(j)) < depth(lines(i)))
+        up.map(j => lines(j) +: (if (lines(j).contains("Join")) Nil
+          else pathToJoin(j))).getOrElse(Nil)
+      }
+      val mainScans = lines.indices.filter(i => Seq(sigT, bandT)
+        .exists(t => lines(i).contains(s".$t[")))
+      assert(mainScans.size == 3, s"three main-level scans:\n$p")
+      mainScans.foreach { i =>
+        val path = pathToJoin(i)
+        assert(path.lastOption.exists(_.contains("SortMergeJoin")) &&
+          !path.exists(_.contains("Exchange")),
+          s"main-level scan '${lines(i).trim.take(80)}' must feed its " +
+            s"sort-merge join with no exchange:\n$p")
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
+      Dedup.dropDedupIndex(spark, sigT, bandT)
+    }
+  }
+
   test("q222 indexed BM25: bucket-pruned postings scan, exchange-free " +
       "dfreq, heap top-k") {
     // A query batch must read only the buckets its terms hash into (never
