@@ -74,12 +74,15 @@ object Bench {
       }
     val oracleMeasuredMs = System.currentTimeMillis()
     // discarded FULL warmup pass: the first executions pay JVM C2/JIT
-    // compilation of the engine's own hot paths, janino codegen, and
-    // per-table scan metadata — costs that otherwise land unevenly on
-    // whichever early queries run first (q04 carried ~1.1s of them through
-    // three rounds of bench history while measuring 0.4s isolated). One
-    // untimed pass puts every timed number at steady-state engine cost —
-    // what a long-lived cluster session actually sees.
+    // compilation of the engine's own hot paths and per-table scan
+    // metadata — costs that otherwise land unevenly on whichever early
+    // queries run first (q04 carried ~1.1s of them through three rounds of
+    // bench history while measuring 0.4s isolated). Janino codegen is not
+    // paid once here: a catalog pass generates about 4,000 classes (a
+    // Verify pass at sf0.01), twice Sessions.CodegenCacheEntries, and the
+    // cache is an LRU. So each query's first timed pass recompiles what the
+    // warmup compiled for it; its second and third passes reuse it (no
+    // query generates more than ~210 classes).
     // A failure is one stderr line (full name, exception class, message);
     // Throwable is caught so one query's OOM can't end the whole bench.
     def failed(phase: String, name: String, e: Throwable): Unit =

@@ -18,8 +18,24 @@ import org.apache.spark.sql.SparkSession
   *     the tuning the reference left entirely to the engine (SURVEY §4).
   *   - shuffle partitions sized to the local core count, not the 200 default; on a
   *     real cluster this would be set per-job from input size.
+  *   - Spark's generated-class cache holds [[CodegenCacheEntries]] classes, not the
+  *     default 100. The cache is an LRU shared by the whole JVM, and a warm
+  *     `ChannelJobs.run` cycles through about 250 generated classes. Under a cyclic
+  *     working set larger than an LRU, every access evicts the entry the next op
+  *     needs, so at 100 entries every warm run recompiled all ~250 classes (about
+  *     2 s of a 7 s op). `spark.sql.codegen.cache.maxEntries` is a static conf: it
+  *     is read once, when `CodeGenerator` first loads, so only a session built here
+  *     before the JVM's first query can size it.
   */
 object Sessions {
+  /** Generated classes Spark keeps compiled, JVM-wide. Working sets, counted
+    * as compilations under an uncapped cache: a `ChannelJobs.run` 251, an
+    * indexed ingest tick at most 83, the largest single catalog query 207. A
+    * whole `graft.Verify` pass at sf0.01 compiles 4,000, so a catalog pass
+    * does not fit (see `Bench`'s warmup); caching it would hold about twice
+    * the Metaspace for classes that one pass never reuses. */
+  val CodegenCacheEntries = 2000
+
   /** Apply engine configs to an existing builder (callers own master/appName). */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.core.GraftExtensions")
@@ -60,6 +76,7 @@ object Sessions {
         sys.props.getOrElse("graft.warehouse.dir",
           java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Local session for tests / ad-hoc runs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

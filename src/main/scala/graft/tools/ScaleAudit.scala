@@ -1,6 +1,7 @@
 package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -59,8 +60,9 @@ object ScaleAudit {
 
   /** Measure one op (`op(rep)` returns its row count): a discarded warmup,
     * `reps` timed passes, then one `SCALEAUDIT` line (median, all passes,
-    * spill and peak memory of the timed passes) and, when `out` is set, the
-    * same figures appended to that path as one JSON line. */
+    * spill and peak memory and codegen compilations of the timed passes)
+    * and, when `out` is set, the same figures appended to that path as one
+    * JSON line. */
   def measure(spark: SparkSession, tag: String, dir: String, reps: Int,
       out: Option[String])(op: String => Long): Unit = {
     val sc = spark.sparkContext
@@ -69,13 +71,20 @@ object ScaleAudit {
     def drainListeners(): Unit = org.apache.spark.sql.graftshim.Bridge
       .drainListeners(sc, timeoutMs = 60000L)
     val c = new MemCounters
+    // Janino compilations are counted JVM-wide: a nonzero figure means the
+    // timed passes paid codegen that the warmup did not leave cached
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var compiles0 = 0L
     sc.addSparkListener(c)
     val (times, rows) = try {
       val r = graft.core.Timing.warmThenTime[Long](reps,
-        after = (rep, _, _) => if (rep == "warm") { drainListeners(); c.reset() })(op)
+        after = (rep, _, _) => if (rep == "warm") {
+          drainListeners(); c.reset(); compiles0 = compiles()
+        })(op)
       drainListeners() // every timed stage has reached the counters
       r
     } finally sc.removeSparkListener(c)
+    val codegen = compiles() - compiles0
     val mb = 1024.0 * 1024.0
     val spillM = c.spillMem.get / mb
     val spillD = c.spillDisk.get / mb
@@ -84,7 +93,7 @@ object ScaleAudit {
     val all = times.map(t => f"$t%.2f").mkString(",")
     println(f"SCALEAUDIT $tag $dir $median%.2f s ($rows rows) all=$all " +
       f"spill_mem_mb=$spillM%.1f spill_disk_mb=$spillD%.1f " +
-      f"peak_exec_mb=$peakM%.1f")
+      f"peak_exec_mb=$peakM%.1f codegen_compiles=$codegen")
     out.foreach { path =>
       // Jsons.str escapes, so a quote/backslash in a data dir path can't
       // produce a line scripts/scale_json.py fails to parse.
@@ -92,7 +101,7 @@ object ScaleAudit {
       val line = f"""{"query":${js(tag)},"dir":${js(dir)},"median_s":$median%.3f,""" +
         s""""rows":$rows,"all_s":[$all],""" +
         f""""spill_mem_mb":$spillM%.1f,"spill_disk_mb":$spillD%.1f,""" +
-        f""""peak_exec_mb":$peakM%.1f}""" + "\n"
+        f""""peak_exec_mb":$peakM%.1f,"codegen_compiles":$codegen}""" + "\n"
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,

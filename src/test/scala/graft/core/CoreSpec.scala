@@ -181,9 +181,12 @@ class TimingSpec extends SparkSpec {
     assert(r.getAs[String]("dir") == dir)
     assert(r.getAs[Long]("rows") == 7L)
     assert(r.getAs[scala.collection.Seq[Double]]("all_s").size == 2)
-    Seq("median_s", "spill_mem_mb", "spill_disk_mb", "peak_exec_mb").foreach { f =>
+    Seq("median_s", "spill_mem_mb", "spill_disk_mb", "peak_exec_mb",
+        "codegen_compiles").foreach { f =>
       assert(!r.isNullAt(r.fieldIndex(f)), s"$f missing")
     }
+    // the warmup compiled the op's classes; the timed passes reuse them
+    assert(r.getAs[Long]("codegen_compiles") == 0L)
   }
 
   test("System.nanoTime appears in exactly one main source file: the shared loop") {
