@@ -78,8 +78,8 @@ object Bench {
     // metadata — costs that otherwise land unevenly on whichever early
     // queries run first (q04 carried ~1.1s of them through three rounds of
     // bench history while measuring 0.4s isolated). Janino codegen is not
-    // paid once here: a catalog pass generates about 4,000 classes (a
-    // Verify pass at sf0.01), twice Sessions.CodegenCacheEntries, and the
+    // paid once here: a catalog pass generates about 3,600 classes (a
+    // Verify pass at sf0.01), more than Sessions.CodegenCacheEntries, and the
     // cache is an LRU. So each query's first timed pass recompiles what the
     // warmup compiled for it; its second and third passes reuse it (no
     // query generates more than ~210 classes).

@@ -26,14 +26,28 @@ import org.apache.spark.sql.SparkSession
   *     2 s of a 7 s op). `spark.sql.codegen.cache.maxEntries` is a static conf: it
   *     is read once, when `CodeGenerator` first loads, so only a session built here
   *     before the JVM's first query can size it.
+  *   - `spark.sql.artifact.isolation.enabled=false`: every session shares one
+  *     executor class loader, so every session shares one codegen cache. The
+  *     cache is keyed by (class loader, generated source). With isolation on
+  *     (Spark's default) each session UUID gets its own executor loader, and
+  *     every `writeStream.start()` runs on a clone of its session with a new
+  *     UUID. Every ingest tick and every slice of a streaming gate would then
+  *     recompile classes whose source is byte-identical to ones already
+  *     compiled, and each dead query's classes would stay pinned in the cache
+  *     and in Metaspace until LRU eviction. Isolation keeps one session's
+  *     added jars, files and archives from the others. This program adds
+  *     none: its UDFs and [[GraftExtensions]] are on the application class
+  *     path. The conf is read once, when a session is created, so it is set
+  *     here, on the builder.
   */
 object Sessions {
   /** Generated classes Spark keeps compiled, JVM-wide. Working sets, counted
-    * as compilations under an uncapped cache: a `ChannelJobs.run` 251, an
-    * indexed ingest tick at most 83, the largest single catalog query 207. A
-    * whole `graft.Verify` pass at sf0.01 compiles 4,000, so a catalog pass
-    * does not fit (see `Bench`'s warmup); caching it would hold about twice
-    * the Metaspace for classes that one pass never reuses. */
+    * as compilations under an uncapped cache: a `ChannelJobs.run` 251; five
+    * indexed ingest ticks 134 (83 on the cold tick, then 38 and 13, and none
+    * on a warm plain tick); the largest single catalog query 207. A whole
+    * `graft.Verify` pass at sf0.01 compiles about 3,600, so a catalog pass
+    * does not fit (see `Bench`'s warmup); caching all of it would add about
+    * 12 MB of Metaspace for classes that one pass never reuses. */
   val CodegenCacheEntries = 2000
 
   /** Apply engine configs to an existing builder (callers own master/appName). */
@@ -77,6 +91,7 @@ object Sessions {
           java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Local session for tests / ad-hoc runs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.io.File
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 
@@ -101,6 +102,24 @@ class IngestPublishSpec extends SparkSpec {
           s"metrics row of batch $k: ${rows(k.toLong)}")
       }
     }
+  }
+
+  test("indexed ingest: a warm plain tick reuses its generated classes, " +
+      "since every query start shares one executor class loader") {
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    withSink(indexed = true) { s =>
+      // tick 0 builds the index, tick 1 folds it, tick 2 is plain
+      val perTick = (0 to 2).map { k =>
+        val c0 = compiles()
+        s.tick(k)
+        compiles() - c0
+      }
+      // with a class loader per session UUID, every query start is a new
+      // loader: ticks compiled 92, 85 and 44 classes; with one loader, 92,
+      // 55 and 0. The bound is a tenth of 44.
+      assert(perTick(2) <= 4, s"classes compiled per tick: $perTick")
+    }
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("corpusIngestSinkIndexed: a first tick into an empty corpus that " +
