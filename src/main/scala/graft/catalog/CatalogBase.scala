@@ -14,7 +14,7 @@ final case class QuerySpec(
   * normalized to epoch-nanos via [[graft.core.EventTs]]). */
 private[graft] trait CatalogBase {
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.core.EventTs.toNanos(s.read.parquet(s"$dir/$name.parquet"))
+    graft.core.EventTs.toNanos(graft.core.Parquet.read(s, s"$dir/$name.parquet"))
 
   // ---- deterministic gate seeds (round-15 verdict item 3) ----
   // Four driver-gate rows were VACUOUS at sf0.01: the synthetic corpus has

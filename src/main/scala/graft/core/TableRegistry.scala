@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`stage_1_hcp_channel_all_hardcode.py:195-210,1097-1108,1131-1224`): instead of a
   * crawler inferring parquet schemas into a remote catalog and a 20s poll loop, we
   * register parquet directories directly as session views (schema-on-read from the
-  * parquet footers, which is what the crawler reproduced remotely).
+  * parquet footer, which is what the crawler reproduced remotely). [[Parquet.read]]
+  * reads that one footer on the driver, so a register starts no Spark job.
   *
   * At cluster scale the same registry fronts object-store paths; views stay lazy so
   * Catalyst sees the full plan (predicate pushdown / partition pruning reach the scan).
@@ -19,12 +20,12 @@ final class TableRegistry(spark: SparkSession) {
   /** Register a parquet path under `name` and expose it as a temp view. */
   def register(name: String, path: String): DataFrame = {
     paths.put(name, path)
-    val df = EventTs.toNanos(spark.read.parquet(path))
+    val df = EventTs.toNanos(Parquet.read(spark, path))
     df.createOrReplaceTempView(name)
     df
   }
 
-  /** Re-read a registered path (the reference's crawler-refresh, S1:1131-1224). */
+  /** Re-read a registered path's footer (the reference's crawler-refresh, S1:1131-1224). */
   def refresh(name: String): DataFrame =
     register(name, paths.getOrElse(name, sys.error(s"unknown table: $name")))
 

@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Components, Dedup, ScaleOps, TextAnalysis}
+import graft.core.Parquet
 
 /** End-to-end training-data curation: the composition the operator library
   * exists for. documents → language/quality gate → PII scrub → exact dedup
@@ -175,7 +176,7 @@ object CurationJob {
           val (t, _) = graft.core.Timing.seconds(
             df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p))
           profile(s"stage$stageN $label", t)
-          docs.sparkSession.read.parquet(p)
+          Parquet.read(docs.sparkSession, p)
       }
     def timedCount(label: String, df: DataFrame): Long = {
       val (t, n) = graft.core.Timing.seconds(df.count())
@@ -405,7 +406,7 @@ object CurationJob {
         case Some(_) => w.partitionBy("shard").parquet(dir)
         case None => w.parquet(dir)
       }
-      docs.sparkSession.read.parquet(dir)
+      Parquet.read(docs.sparkSession, dir)
     }.getOrElse(out)
 
     // the job ran its terminal actions (the funnel counts and the optional

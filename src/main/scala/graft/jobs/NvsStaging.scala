@@ -1,6 +1,7 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Parquet
 
 /** Deterministic staging-table derivation for the driver's oracle gate over
   * the eight composed §2.11 reference queries (q161–q168).
@@ -50,9 +51,9 @@ object NvsStaging {
     // owner's drain releases it after the action. Values are unchanged by
     // construction — the cache stores exactly the rows the scan produced.
     graft.core.CacheScope.persist(
-      s.read.parquet(s"$dir/customer.parquet").selectExpr("c_custkey AS k"))
+      Parquet.read(s, s"$dir/customer.parquet").selectExpr("c_custkey AS k"))
       .createOrReplaceTempView("nvs_src_k")
-    s.read.parquet(s"$dir/nation.parquet")
+    Parquet.read(s, s"$dir/nation.parquet")
       .createOrReplaceTempView("nvs_src_nation")
 
     // A.4 demographics: one DMA per nation row (dma_code 100..124)

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Parquet
 
 /** Deterministic N× corpus replication for scale-exponent measurement
   * (`ScaleGen <srcDir> <outDir> [factor]`): every TESTDATA table rewritten
@@ -73,7 +74,7 @@ object ScaleGen {
           transform(sequence(lit(0), lit(7)), w =>
             concat_ws("_", lit("bp"), col("_g").cast("string"),
               j.cast("string"), w.cast("string"))))), " ")
-      write("documents")(reps(s.read.parquet(s"$src/documents.parquet"))
+      write("documents")(reps(Parquet.read(s, s"$src/documents.parquet"))
         .withColumn("_g", (did / 3).cast("long"))
         .select(did.as("doc_id"),
           concat(block, lit(" "),
@@ -89,20 +90,20 @@ object ScaleGen {
 
     // dims: copy unchanged (facts grow, dims don't)
     Seq("region", "nation", "part", "supplier").foreach { name =>
-      write(name)(s.read.parquet(s"$src/$name.parquet"))
+      write(name)(Parquet.read(s, s"$src/$name.parquet"))
     }
 
     val custShift = 10000000L
     val orderShift = 100000000L
-    write("customer")(reps(s.read.parquet(s"$src/customer.parquet"))
+    write("customer")(reps(Parquet.read(s, s"$src/customer.parquet"))
       .select((col("c_custkey") + col("rep") * custShift).as("c_custkey"),
         col("c_name"), col("c_nationkey"), col("c_acctbal"), col("c_mktsegment")))
-    write("orders")(reps(s.read.parquet(s"$src/orders.parquet"))
+    write("orders")(reps(Parquet.read(s, s"$src/orders.parquet"))
       .select((col("o_orderkey") + col("rep") * orderShift).as("o_orderkey"),
         (col("o_custkey") + col("rep") * custShift).as("o_custkey"),
         col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
         col("o_orderpriority")))
-    write("lineitem")(reps(s.read.parquet(s"$src/lineitem.parquet"))
+    write("lineitem")(reps(Parquet.read(s, s"$src/lineitem.parquet"))
       .select((col("l_orderkey") + col("rep") * orderShift).as("l_orderkey"),
         col("l_partkey"), col("l_suppkey"), col("l_linenumber"),
         col("l_quantity"), col("l_extendedprice"), col("l_discount"),
@@ -111,7 +112,7 @@ object ScaleGen {
 
     // events: ts stays (N× traffic density in the same window — the real
     // growth mode); user shift keeps every journey's internal shape
-    write("events")(reps(s.read.parquet(s"$src/events.parquet"))
+    write("events")(reps(Parquet.read(s, s"$src/events.parquet"))
       .select((col("event_id") + col("rep") * 1000000000L).as("event_id"),
         col("ts"),
         (col("user_id") + col("rep") * custShift).as("user_id"),
@@ -119,7 +120,7 @@ object ScaleGen {
 
     // documents: per-token replica suffix → replicas shingle-disjoint
     val sfx = concat(lit("r"), col("rep").cast("string"))
-    write("documents")(reps(s.read.parquet(s"$src/documents.parquet"))
+    write("documents")(reps(Parquet.read(s, s"$src/documents.parquet"))
       .select((col("doc_id") + col("rep") * 1000000L).as("doc_id"),
         when(col("rep") === 0, col("text"))
           .otherwise(concat_ws(" ",
@@ -129,7 +130,7 @@ object ScaleGen {
       .withColumn("n_chars", length(col("text")).cast("long")))
 
     // embeddings: deterministic per-(rep, dim) perturbation, ±0.1
-    write("embeddings")(reps(s.read.parquet(s"$src/embeddings.parquet"))
+    write("embeddings")(reps(Parquet.read(s, s"$src/embeddings.parquet"))
       .select((col("vec_id") + col("rep") * 1000000L).as("vec_id"),
         when(col("rep") === 0, col("embedding"))
           .otherwise(zip_with(col("embedding"),

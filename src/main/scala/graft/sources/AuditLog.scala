@@ -2,6 +2,7 @@ package graft.sources
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.core.Parquet
 
 /** Job audit trail: INITIATED / COMPLETED rows appended to a parquet log.
   *
@@ -42,5 +43,5 @@ object AuditLog {
     rows.toDF().coalesce(1).write.mode(SaveMode.Append).parquet(path)
   }
 
-  def read(spark: SparkSession, path: String) = spark.read.parquet(path)
+  def read(spark: SparkSession, path: String) = Parquet.read(spark, path)
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Parquet
 
 /** Small-file compaction for a parquet table directory — the operational
   * counterpart of the streaming sinks: micro-batch appends and per-version
@@ -115,7 +116,7 @@ object Compaction {
     val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val tmp = path + "__compact"
     val old = path + "__old"
-    spark.read.parquet(path).repartition(parts)
+    Parquet.read(spark, path).repartition(parts)
       .write.mode(SaveMode.Overwrite).parquet(tmp)
     val (fs, dir) = fsFor(spark, path)
     val oldDir = new Path(old)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.core.Parquet
 
 /** CSV → Parquet ingestion (the reference's `Python_Scripts/csv_to_parquet.py`).
   *
@@ -23,7 +24,7 @@ object CsvToParquet {
     try {
       val df = read(spark, csvPath)
       df.write.mode(SaveMode.Overwrite).parquet(parquetPath)
-      Some(spark.read.parquet(parquetPath).count())
+      Some(Parquet.read(spark, parquetPath).count())
     } catch {
       case e: Exception =>
         System.err.println(s"[csv_to_parquet] $csvPath failed: ${e.getMessage}")

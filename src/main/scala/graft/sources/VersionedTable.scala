@@ -4,6 +4,7 @@ import java.io.FileNotFoundException
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Parquet
 
 /** Append-only versioned snapshots, one `version=<n>` directory per snapshot.
   *
@@ -74,9 +75,11 @@ final class VersionedTable(spark: SparkSession, path: String, outputFiles: Int =
     v
   }
 
-  /** Read one snapshot (partition-pruned scan). */
+  /** Read one snapshot (partition-pruned scan). The schema is one footer's,
+    * read on the driver by [[graft.core.Parquet.read]]; `version` comes from
+    * the directory names, so the read starts no Spark job. */
   def at(version: Long): DataFrame =
-    spark.read.parquet(path).where(col("version") === version)
+    Parquet.read(spark, path).where(col("version") === version)
 
   def latest: DataFrame =
     latestVersion.map(at).getOrElse(spark.emptyDataFrame)

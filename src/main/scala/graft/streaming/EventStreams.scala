@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.core.Parquet
 
 /** Structured Streaming over the `events` table shape (TESTDATA.md).
   *
@@ -231,7 +232,7 @@ object EventStreams {
     // normal applied path and the replay-repair path below
     def appendGeneration(spark: SparkSession, batchId: Long): Unit = {
       val merged = graft.core.CacheScope.persist(
-        spark.read.parquet(countsDir))
+        Parquet.read(spark, countsDir))
       graft.operators.ScaleOps.psiFromCounts(merged, smoothing)
         .withColumn("batch_id", lit(batchId))
         // the conventional gates, pre-derived so a consumer filters on
@@ -291,7 +292,7 @@ object EventStreams {
             java.nio.file.Files.readString(marker.toPath).trim.toLong == batchId
           val generationMissing = countsAreThisBatch && {
             val m = new java.io.File(metricsDir)
-            !m.exists() || spark.read.parquet(metricsDir)
+            !m.exists() || Parquet.read(spark, metricsDir)
               .where(col("batch_id") === batchId).isEmpty
           }
           if (generationMissing) appendGeneration(spark, batchId)
@@ -471,7 +472,7 @@ object EventStreams {
     if (batchId > lastApplied(tableDir)) {
       val current =
         if (hasTable(tableDir))
-          Some(spark.read.parquet(tableDir).select(col("doc_id"), col("text")))
+          Some(Parquet.read(spark, tableDir).select(col("doc_id"), col("text")))
         else None
       val sizeBefore = if (metricsDir.isEmpty) 0L else current.fold(0L)(_.count())
       val corpus = current.getOrElse(b.limit(0))
@@ -574,7 +575,7 @@ object EventStreams {
         }
         val ids: Seq[Long] =
           if (!new java.io.File(corpusDir).exists()) Seq.empty
-          else spark.read.parquet(corpusDir).select("doc_id")
+          else Parquet.read(spark, corpusDir).select("doc_id")
             .collect().map(_.getLong(0)).toSeq
         ids.toDF("doc_id")
       } finally {
@@ -618,7 +619,7 @@ object EventStreams {
     val backup = new java.io.File(s"${tableDir}_old")
     if (batchId > lastApplied(tableDir)) {
       val merged = merge(
-        if (hasTable(tableDir)) Some(spark.read.parquet(tableDir)) else None)
+        if (hasTable(tableDir)) Some(Parquet.read(spark, tableDir)) else None)
       // write-new-then-swap; the marker is written into the NEW table
       // before the swap so it becomes visible atomically with the data
       val tmp = new java.io.File(s"${tableDir}_b$batchId")
@@ -685,7 +686,7 @@ object EventStreams {
     * file listings skip it, and it never reads as a partition column),
     * and one Hadoop `FileSystem` rename moves that file to the table root
     * as `part-b<batchId>-….parquet`. The rename is the commit: a plain
-    * `spark.read.parquet(tableDir)` reads the file from then on, and
+    * parquet read of `tableDir` reads the file from then on, and
     * [[lastApplied]] reads the batch id off its name. A leftover pending
     * directory from a crash before the rename is deleted first. Root-level
     * files, not subdirectories: a reader of a directory with root-level

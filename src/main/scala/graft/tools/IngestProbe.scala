@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions.col
+import graft.core.Parquet
 
 /** Dev tool: the fixed-batch ingest-cost probe behind the
   * [[graft.operators.Dedup.minhashCandidatesIndexed]] scale claim. The
@@ -30,9 +31,9 @@ object IngestProbe {
     val spark = graft.core.Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val out = sys.env.get("SPARK_GRAFT_SCALE_OUT")
-    val corpus = spark.read.parquet(s"$corpusDir/documents.parquet")
+    val corpus = Parquet.read(spark, s"$corpusDir/documents.parquet")
       .where(col("doc_id") % 4 =!= 0)
-    val batch = spark.read.parquet(s"$batchDir/documents.parquet")
+    val batch = Parquet.read(spark, s"$batchDir/documents.parquet")
       .where(col("doc_id") % 4 === 0)
     // one ScaleAudit measurement per tag; `op` gets the rep label ("warm",
     // "1", ...) and returns its row count
@@ -61,7 +62,7 @@ object IngestProbe {
     // across tiers is that this stays as flat as the no-L0 probe. All
     // appends are idempotent per tag, so reps after the first re-pay only
     // the probe (exactly like the indexed run re-pays only the scans).
-    val corpusMain = spark.read.parquet(s"$corpusDir/documents.parquet")
+    val corpusMain = Parquet.read(spark, s"$corpusDir/documents.parquet")
       .where(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2)
     val lvSig = graft.operators.ScaleOps
       .bucketTableName("graft_probe_lvsig", corpusDir)
@@ -72,7 +73,7 @@ object IngestProbe {
         shingleSize = 3, numHashes = 32, bands = 16, lvSig, lvBand)
       Seq(3L, 7L, 11L, 15L).foreach { r =>
         graft.operators.Dedup.indexAppendLeveled(
-          spark.read.parquet(s"$corpusDir/documents.parquet")
+          Parquet.read(spark, s"$corpusDir/documents.parquet")
             .where(col("doc_id") % 16 === r),
           "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
           lvSig, lvBand, batchTag = s"gen$r", foldEvery = Int.MaxValue)

@@ -2,7 +2,8 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: the second-decade scale audit (BASELINE.md "100× spot check",
@@ -44,9 +45,12 @@ object ScaleAudit {
   // sums over stages (well-defined totals); peak_exec_mb is the MAX over
   // stages of the stage's task-summed peak execution memory — an upper
   // bound on the query's concurrent execution-memory footprint, the
-  // right shape for "does memory grow faster than data".
+  // right shape for "does memory grow faster than data". jobs counts the
+  // Spark jobs the timed passes started.
   private final class MemCounters extends SparkListener {
-    val spillMem, spillDisk, peakExec = new AtomicLong
+    val spillMem, spillDisk, peakExec, jobs = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet(): Unit
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       val m = s.stageInfo.taskMetrics
       if (m != null) {
@@ -55,14 +59,16 @@ object ScaleAudit {
         peakExec.getAndUpdate(p => math.max(p, m.peakExecutionMemory)): Unit
       }
     }
-    def reset(): Unit = { spillMem.set(0); spillDisk.set(0); peakExec.set(0) }
+    def reset(): Unit = {
+      spillMem.set(0); spillDisk.set(0); peakExec.set(0); jobs.set(0)
+    }
   }
 
   /** Measure one op (`op(rep)` returns its row count): a discarded warmup,
     * `reps` timed passes, then one `SCALEAUDIT` line (median, all passes,
-    * spill and peak memory and codegen compilations of the timed passes)
-    * and, when `out` is set, the same figures appended to that path as one
-    * JSON line. */
+    * spill and peak memory, codegen compilations and Spark jobs of the
+    * timed passes) and, when `out` is set, the same figures appended to
+    * that path as one JSON line. */
   def measure(spark: SparkSession, tag: String, dir: String, reps: Int,
       out: Option[String])(op: String => Long): Unit = {
     val sc = spark.sparkContext
@@ -89,11 +95,12 @@ object ScaleAudit {
     val spillM = c.spillMem.get / mb
     val spillD = c.spillDisk.get / mb
     val peakM = c.peakExec.get / mb
+    val jobs = c.jobs.get
     val median = times(times.size / 2)
     val all = times.map(t => f"$t%.2f").mkString(",")
     println(f"SCALEAUDIT $tag $dir $median%.2f s ($rows rows) all=$all " +
       f"spill_mem_mb=$spillM%.1f spill_disk_mb=$spillD%.1f " +
-      f"peak_exec_mb=$peakM%.1f codegen_compiles=$codegen")
+      f"peak_exec_mb=$peakM%.1f codegen_compiles=$codegen jobs=$jobs")
     out.foreach { path =>
       // Jsons.str escapes, so a quote/backslash in a data dir path can't
       // produce a line scripts/scale_json.py fails to parse.
@@ -101,7 +108,8 @@ object ScaleAudit {
       val line = f"""{"query":${js(tag)},"dir":${js(dir)},"median_s":$median%.3f,""" +
         s""""rows":$rows,"all_s":[$all],""" +
         f""""spill_mem_mb":$spillM%.1f,"spill_disk_mb":$spillD%.1f,""" +
-        f""""peak_exec_mb":$peakM%.1f,"codegen_compiles":$codegen}""" + "\n"
+        f""""peak_exec_mb":$peakM%.1f,"codegen_compiles":$codegen,""" +
+        s""""jobs":$jobs}""" + "\n"
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,

@@ -21,6 +21,143 @@ class TableRegistrySpec extends SparkSpec {
     assert(reg.refresh("region").count() == before)
     intercept[RuntimeException](reg.refresh("no_such_table"))
   }
+
+  test("register of a written table starts 0 Spark jobs") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_reg_jobs").toString + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(path)
+    val reg = new TableRegistry(spark)
+    val jobs = SparkJobs.during(spark)(reg.register("t", path))
+    assert(jobs == 0, s"register started $jobs Spark job(s)")
+    assert(reg.table("t").count() == 2)
+  }
+}
+
+/** Spark jobs started while `f` runs, counted by a listener. */
+object SparkJobs {
+  def during(spark: org.apache.spark.sql.SparkSession)(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    Bridge.drainListeners(sc, 10000)
+    sc.addSparkListener(counter)
+    try {
+      f
+      Bridge.drainListeners(sc, 10000)
+    } finally sc.removeSparkListener(counter)
+    jobs.get
+  }
+}
+
+/** `Parquet.read` must type a path exactly as Spark's own inference does,
+  * over every layout the program reads. */
+class ParquetSpec extends SparkSpec {
+  import org.apache.spark.sql.DataFrame
+
+  private def tmp(tag: String): String = Files.createTempDirectory(tag).toString
+
+  private def assertParity(path: String): Unit = {
+    val inferred = spark.read.parquet(path)
+    val footer = Parquet.read(spark, path)
+    assert(footer.schema == inferred.schema, path)
+    assert(footer.count() == inferred.count(), path)
+  }
+
+  /** Writes `df` as one parquet file and moves it to `target`. */
+  private def writeFile(df: DataFrame, target: String): Unit = {
+    val staged = tmp("graft_pq_file") + "/t"
+    df.coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, java.nio.file.Paths.get(target)): Unit
+  }
+
+  test("a StressGen-shaped channel table") {
+    graft.jobs.StressGen.registerAll(spark, factor = 0.001)
+    Seq("nvs_calls_v1", "hcp_org_map", "dtc_display_v1").foreach { t =>
+      val path = s"${tmp("graft_pq_stress")}/$t"
+      spark.table(t).write.parquet(path)
+      assertParity(path)
+    }
+  }
+
+  test("the events table in both ts encodings") {
+    // testdata: TIMESTAMP(MICROS), no Spark schema in the footer
+    assertParity(s"$sfDir/events.parquet")
+    // Spark-written: the Spark schema rides in the footer
+    val rewritten = s"${tmp("graft_pq_ev")}/events"
+    spark.read.parquet(s"$sfDir/events.parquet").write.parquet(rewritten)
+    assertParity(rewritten)
+    // TIMESTAMP(NANOS), which nanosAsLong reads as a long
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val nanos = s"${tmp("graft_pq_nanos")}/events"
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$nanos/part-0.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456789L))
+    finally w.close()
+    assertParity(nanos)
+    assert(EventTs.toNanos(Parquet.read(spark, nanos)).collect()
+      .map(_.getLong(1)).toSeq == Seq(1700000000123456789L))
+  }
+
+  test("a versioned table: version keeps its type and position, pending is hidden") {
+    import spark.implicits._
+    val path = s"${tmp("graft_pq_vt")}/t"
+    val vt = new VersionedTable(spark, path, outputFiles = 1)
+    vt.snapshot(Seq((1L, "a")).toDF("id", "v"))
+    vt.snapshot(Seq((2L, "b"), (3L, "c")).toDF("id", "v"))
+    // a crashed third snapshot, whose file would sort first if it were listed
+    Seq((9L, "z", 0.5)).toDF("id", "v", "junk").write.parquet(s"$path/_pending_version_3")
+    assertParity(path)
+    assert(Parquet.read(spark, path).schema.fields.last.toString ==
+      "StructField(version,IntegerType,true)")
+    assert(vt.at(2).count() == 2)
+  }
+
+  test("an ingest corpus root: generations, an empty tick, marker and pending dir") {
+    import spark.implicits._
+    val root = s"${tmp("graft_pq_corpus")}/corpus"
+    new java.io.File(root).mkdirs()
+    val docs = Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id", "text")
+    writeFile(docs.limit(0), s"$root/part-b1-00000-empty.c000.snappy.parquet")
+    writeFile(docs, s"$root/part-b2-00000-docs.c000.snappy.parquet")
+    Files.writeString(java.nio.file.Paths.get(s"$root/_last_batch"), "2")
+    docs.withColumn("junk", lit(1)).write.parquet(s"$root/_pending_b3")
+    assertParity(root)
+  }
+
+  test("a path with nothing to read fails as Spark's own read does") {
+    val hidden = tmp("graft_pq_hidden")
+    Files.createFile(java.nio.file.Paths.get(s"$hidden/_SUCCESS"))
+    spark.range(3).write.parquet(s"$hidden/_pending_b1")
+    Seq(hidden, s"$hidden/missing").foreach { p =>
+      def condition(e: Throwable) =
+        (e.getClass, e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition)
+      val inferred = intercept[Exception](spark.read.parquet(p))
+      val footer = intercept[Exception](Parquet.read(spark, p))
+      assert(condition(footer) == condition(inferred), p)
+    }
+  }
+
+  test(".read.parquet( appears in exactly one main source file: the footer reader") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val hits = scala.util.Using.resource(Files.walk(root)) { paths =>
+      paths.iterator.asScala
+        .filter(p => Files.isRegularFile(p) &&
+          Files.readString(p).contains(".read.parquet("))
+        .map(root.relativize(_).toString).toList
+    }
+    assert(hits == List("graft/core/Parquet.scala"))
+  }
 }
 
 class VersionedTableSpec extends SparkSpec {
@@ -56,19 +193,8 @@ class VersionedTableSpec extends SparkSpec {
     assert(!new VersionedTable(spark, empty).exists)
 
     // ... and it starts no Spark job
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    Bridge.drainListeners(sc, 10000)
-    sc.addSparkListener(counter)
-    try {
-      assert(vt.latestVersion.contains(2L))
-      Bridge.drainListeners(sc, 10000)
-    } finally sc.removeSparkListener(counter)
-    assert(jobs.get == 0, s"latestVersion started ${jobs.get} Spark job(s)")
+    val jobs = SparkJobs.during(spark)(assert(vt.latestVersion.contains(2L)))
+    assert(jobs == 0, s"latestVersion started $jobs Spark job(s)")
   }
 
   test("an empty snapshot is stored: v1 holds 0 rows and the columns, the next is v2") {
@@ -182,9 +308,10 @@ class TimingSpec extends SparkSpec {
     assert(r.getAs[Long]("rows") == 7L)
     assert(r.getAs[scala.collection.Seq[Double]]("all_s").size == 2)
     Seq("median_s", "spill_mem_mb", "spill_disk_mb", "peak_exec_mb",
-        "codegen_compiles").foreach { f =>
+        "codegen_compiles", "jobs").foreach { f =>
       assert(!r.isNullAt(r.fieldIndex(f)), s"$f missing")
     }
+    assert(r.getAs[Long]("jobs") > 0L)
     // the warmup compiled the op's classes; the timed passes reuse them
     assert(r.getAs[Long]("codegen_compiles") == 0L)
   }
