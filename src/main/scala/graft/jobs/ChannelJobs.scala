@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import graft.core.TableRegistry
-import graft.sources.{AuditLog, VersionedTable}
+import graft.sources.{AuditLog, Commit, VersionedTable}
 
 /** Job driver sequencing — the reference's `__main__` lifecycle
   * (`S1:1261-1304` = `/root/reference/PySpark_Scripts/
@@ -29,6 +29,8 @@ import graft.sources.{AuditLog, VersionedTable}
   * of the plan's last stage. The versioned append touches only the new
   * `version=` directory; the staging copy moves bytes on the driver, not in
   * Spark tasks, so it costs one read and one write of the output files.
+  * Both publish through [[graft.sources.Commit]], whose crash contract
+  * covers them; a rerun after a crash publishes the next version.
   * Running the jobs side by side fills the cores one job alone leaves idle
   * on plan building and small stages.
   */
@@ -80,7 +82,13 @@ object ChannelJobs {
       // write has returned, as a failed write never completes the observation
       val v = hist.snapshot(df.observe(rows, count(lit(1)).as("rows")))
       val n = rows.get("rows").asInstanceOf[Long] // the count of S1:188
-      publish(s, hist.dirOf(v), new Path(s"${cfg.outDir}/${table}_staging")) // S1:191
+      val staging = new Path(s"${cfg.outDir}/${table}_staging") // S1:191
+      val conf = s.sparkContext.hadoopConfiguration
+      val fs = staging.getFileSystem(conf)
+      Commit.replace(fs, staging) { tmp =>
+        if (!FileUtil.copy(fs, hist.dirOf(v), fs, tmp, false, conf))
+          throw new IllegalStateException(s"could not copy version $v to $tmp")
+      }
       TableWrite(table, n, v)
     } finally {
       // materialize runs the job's terminal actions, so it is the session
@@ -89,18 +97,6 @@ object ChannelJobs {
       // identical plan trips CacheManager's "already cached" plan-match
       graft.core.CacheScope.drain()
     }
-  }
-
-  /** Overwrites directory `to` with a copy of directory `from`: the copy is
-    * made in an `_`-prefixed sibling, then swapped in. */
-  private def publish(s: SparkSession, from: Path, to: Path): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = to.getFileSystem(conf)
-    val tmp = new Path(to.getParent, s"_${to.getName}")
-    fs.delete(tmp, true)
-    if (!FileUtil.copy(fs, from, fs, tmp, false, conf) ||
-        (fs.exists(to) && !fs.delete(to, true)) || !fs.rename(tmp, to))
-      throw new IllegalStateException(s"could not publish $from as $to")
   }
 
   /** `nvs_tam` (S1:93-225). */

@@ -550,6 +550,8 @@ object Dedup {
     val rowsPerBand = numHashes / bands
     val sigs = graft.core.CacheScope.persist(
       minhashSigs(batch, idCol, textCol, shingleSize, numHashes))
+    Seq(sigTable, bandTable).foreach(t =>
+      graft.operators.ScaleOps.dropOrphanLocation(batch.sparkSession, l0Of(t)))
     sigs.write.mode("append").format("parquet").saveAsTable(l0Of(sigTable))
     lshBands(sigs, "id", "sig", bands, rowsPerBand)
       .select(fusedBandKey.as("bkey"), col("id"))

@@ -119,7 +119,8 @@ object ScaleOps {
     * query. Requires a catalog table (bucket metadata lives in the
     * metastore), hence saveAsTable rather than a path write. */
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
-      bucketCols: Seq[String]): Unit =
+      bucketCols: Seq[String]): Unit = {
+    dropOrphanLocation(df.sparkSession, table)
     // repartition on the bucket columns with numPartitions = buckets: the
     // repartition hash family matches the bucket assignment, so each write
     // task holds exactly one bucket's rows → ONE file per bucket. Spark
@@ -136,6 +137,21 @@ object ScaleOps {
       .mode("overwrite")
       .format("parquet")
       .saveAsTable(table)
+  }
+
+  /** Deletes managed table `table`'s warehouse directory when the catalog
+    * holds no such table: a crash inside the write that creates the table
+    * leaves files there, and every later create of the name would fail
+    * with LOCATION_ALREADY_EXISTS. */
+  private[operators] def dropOrphanLocation(spark: org.apache.spark.sql.SparkSession,
+      table: String): Unit = {
+    val cat = spark.sessionState.catalog
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
+    if (!cat.tableExists(id)) {
+      val dir = new org.apache.hadoop.fs.Path(cat.defaultTablePath(id))
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true): Unit
+    }
+  }
 
   /** [[writeBucketed]] once per (session, table name), then read back: the
     * idempotent fixture form — callers derive `table` from the source path

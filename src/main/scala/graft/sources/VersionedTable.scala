@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.FileNotFoundException
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Parquet
 
@@ -13,9 +13,9 @@ import graft.core.Parquet
   * `max(version)` from the existing table, stamp `version = max+1` on the new
   * snapshot, append it as the `version=<max+1>` partition. The reference
   * appends with `partitionBy("version")`; here the frame is written whole
-  * into a hidden pending directory and renamed to `version=<v>`, which is
-  * the same on-disk layout (the `version` value lives in the directory name,
-  * not in the files), so a version appears whole or not at all, and an
+  * and published as `version=<v>` through [[Commit.add]] (its crash
+  * contract is stated there), which is the same on-disk layout (the
+  * `version` value lives in the directory name, not in the files), and an
   * empty frame still stores a schema-only file. Not concurrent-write safe —
   * faithful to the reference by design (SURVEY §7.3.5); a production
   * deployment would swap the path for a transactional table format without
@@ -57,21 +57,15 @@ final class VersionedTable(spark: SparkSession, path: String, outputFiles: Int =
     }).maxOption
   }
 
-  /** Stamp version = max+1 and append (S1:212-222): one write of `df` into
-    * a pending directory, then one rename publishes it. A failed write
-    * removes the pending directory and leaves no version behind. Returns
-    * the written version. */
+  /** Stamp version = max+1 and append (S1:212-222): one write of `df`,
+    * published as `version=<v>` by [[Commit.add]]. Returns the written
+    * version. */
   def snapshot(df: DataFrame): Long = {
     val v = latestVersion.map(_ + 1).getOrElse(1L)
-    // no '=' in the name: Spark's file listing skips '_'-prefixed names
-    // only when they do not look like a partition directory
-    val pending = new Path(path, s"_pending_version_$v")
-    val target = dirOf(v)
-    try df.coalesce(outputFiles).write.mode(SaveMode.Overwrite).parquet(pending.toString)
-    catch { case e: Throwable => fs.delete(pending, true); throw e }
-    if (fs.exists(target) || !fs.rename(pending, target))
-      throw new IllegalStateException(s"snapshot $v of $path was not published: " +
-        s"renaming $pending to $target failed")
+    Commit.add(fs, new Path(path, s"_pending_version_$v")) { pending =>
+      df.coalesce(outputFiles).write.parquet(pending.toString)
+      pending
+    }(_ => dirOf(v))
     v
   }
 

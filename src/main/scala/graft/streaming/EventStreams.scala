@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import scala.reflect.runtime.universe.TypeTag
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
@@ -168,21 +169,10 @@ object EventStreams {
     * table (count + sum per key) across micro-batches — the "upsert into a
     * serving table" pattern for sinks with no native streaming support.
     * Each batch: aggregate the delta, full-outer-merge with the current
-    * table, swap in the replacement.
-    *
-    * Failure semantics: foreachBatch alone is AT-LEAST-once — a batch whose
-    * swap landed but whose checkpoint commit didn't is REPLAYED on restart,
-    * and re-merging it would double-count. The table therefore records the
-    * last merged batchId in a `_last_batch` marker (underscore-prefixed, so
-    * parquet readers skip it; it travels with the swap, so table and marker
-    * commit together) and replayed batchIds are skipped — that marker is
-    * what upgrades the sink to effectively-once. The table and its
-    * checkpoint form a unit: restarting with a fresh checkpoint against an
-    * existing table restarts batch numbering and is undefined. Single
-    * writer; both renames are checked, and a failed swap throws so the
-    * batch retries rather than silently dropping the merge. At warehouse
-    * scale the same shape targets a transactional table format; the
-    * parquet-swap keeps it dependency-free here. */
+    * table, swap in the replacement ([[mergeSwap]]: effectively-once by
+    * batch id, crash-safe by [[graft.sources.Commit]]'s contract). At
+    * warehouse scale the same shape targets a transactional table format;
+    * the parquet-swap keeps it dependency-free here. */
   def runningAggSink(events: DataFrame, keyCol: String, valueCol: String,
       tableDir: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     events.writeStream
@@ -287,13 +277,12 @@ object EventStreams {
           }
           appendGeneration(spark, batchId)
         } else {
-          val marker = new java.io.File(countsDir, "_last_batch")
-          val countsAreThisBatch = marker.exists() &&
-            java.nio.file.Files.readString(marker.toPath).trim.toLong == batchId
+          val countsAreThisBatch =
+            marker(fsOf(spark, countsDir), countsDir) == batchId
           val generationMissing = countsAreThisBatch && {
-            val m = new java.io.File(metricsDir)
-            !m.exists() || Parquet.read(spark, metricsDir)
-              .where(col("batch_id") === batchId).isEmpty
+            !fsOf(spark, metricsDir).exists(new Path(metricsDir)) ||
+              Parquet.read(spark, metricsDir)
+                .where(col("batch_id") === batchId).isEmpty
           }
           if (generationMissing) appendGeneration(spark, batchId)
         }
@@ -370,10 +359,10 @@ object EventStreams {
     * torn mid-append — so the replay branch DROPS the index and lets the
     * next probe rebuild it from the standing corpus
     * ([[graft.operators.Dedup.dropDedupIndex]]; O(corpus) once, on the
-    * rare crash-replay path only). A crash before the publish leaves only
-    * a hidden pending directory or a `_old` backup, which the replay
-    * deletes or restores. A whole-JVM death loses the session-scoped index
-    * tables entirely and the same rebuild runs on resume — consistent by
+    * rare crash-replay path only). A crash before or inside the publish is
+    * [[graft.sources.Commit]]'s to repair, and the replay publishes the
+    * batch again. A whole-JVM death loses the session-scoped index tables
+    * entirely and the same rebuild runs on resume — consistent by
     * construction. */
   def corpusIngestSinkIndexed(docs: DataFrame, tableDir: String,
       checkpointDir: String, minJaccard: Double = 0.8,
@@ -396,7 +385,7 @@ object EventStreams {
         // window includes the index append — drop the index now;
         // admitBatch below will skip the publish and the next batch's
         // probe rebuilds the index from the published corpus
-        if (lastApplied(tableDir) == batchId)
+        if (lastApplied(fsOf(batch.sparkSession, tableDir), tableDir) == batchId)
           graft.operators.Dedup.dropDedupIndex(batch.sparkSession, sigT, bandT)
         admitBatch(batch, batchId, tableDir, minJaccard, metricsDir,
             minQuality, blockedPatterns, compactEvery = foldEvery,
@@ -469,9 +458,10 @@ object EventStreams {
       else graft.operators.TextAnalysis.policyFilter(b0, "text", blockedPatterns)
     // lastApplied restores a compaction's crash backup first, so the
     // corpus read below is the whole accumulated table
-    if (batchId > lastApplied(tableDir)) {
+    val fs = fsOf(spark, tableDir)
+    if (batchId > lastApplied(fs, tableDir)) {
       val current =
-        if (hasTable(tableDir))
+        if (hasTable(fs, tableDir))
           Some(Parquet.read(spark, tableDir).select(col("doc_id"), col("text")))
         else None
       val sizeBefore = if (metricsDir.isEmpty) 0L else current.fold(0L)(_.count())
@@ -483,7 +473,7 @@ object EventStreams {
       // FILE_NOT_EXIST). Checkpoint blocks bypass the CacheManager;
       // ContextCleaner frees them when the batch's reference drops.
       val keep = b.join(dropped, Seq("doc_id"), "left_anti").localCheckpoint(true)
-      if (generations(tableDir).size + 1 >= compactEvery)
+      if (generations(fs, tableDir).size + 1 >= compactEvery)
         mergeSwap(spark, tableDir, batchId)(_ => corpus.unionByName(keep))
       else publishGeneration(keep, tableDir, batchId)
       onApplied(keep)
@@ -563,8 +553,8 @@ object EventStreams {
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     withGateScope(spark, "ingest_gate") { base =>
-      val corpusDir = new java.io.File(base, "corpus").getAbsolutePath
-      val ckptDir = new java.io.File(base, "ckpt").getAbsolutePath
+      val corpusDir = s"$base/corpus"
+      val ckptDir = s"$base/ckpt"
       try {
         (0 until nSlices).foreach { k =>
           in.addData(rows.filter(_._1 % nSlices == k).toSeq: _*)
@@ -574,7 +564,7 @@ object EventStreams {
           q.awaitTermination()
         }
         val ids: Seq[Long] =
-          if (!new java.io.File(corpusDir).exists()) Seq.empty
+          if (!fsOf(spark, corpusDir).exists(new Path(corpusDir))) Seq.empty
           else Parquet.read(spark, corpusDir).select("doc_id")
             .collect().map(_.getLong(0)).toSeq
         ids.toDF("doc_id")
@@ -594,124 +584,96 @@ object EventStreams {
   }
 
   /** Shared effectively-once parquet-swap harness for foreachBatch sinks:
-    * crash-restore, replayed-batch skip ([[lastApplied]]),
-    * write-new-then-swap publication. `merge` maps the current table (None
-    * before the first batch) to its full replacement; the helper
-    * MATERIALIZES the replacement before touching the current dir. The
-    * aggregate upserts ([[runningAggSink]], [[driftMonitorSink]]) run it
-    * every batch; for the ingest sinks it is the compaction path, which
-    * folds the table's generation files back into one rewritten table
-    * ([[admitBatch]]).
+    * replayed-batch skip ([[lastApplied]]), then the replacement published
+    * by [[graft.sources.Commit.replace]], whose crash contract covers it.
+    * `merge` maps the current table (None before the first batch) to its
+    * full replacement, which is written before the current table is
+    * touched. The aggregate upserts ([[runningAggSink]],
+    * [[driftMonitorSink]]) run it every batch; for the ingest sinks it is
+    * the compaction path, which folds the table's generation files back
+    * into one rewritten table ([[admitBatch]]).
     *
-    * Failure semantics (lifted verbatim from the original runningAggSink):
-    * foreachBatch alone is AT-LEAST-once — a batch whose swap landed but
+    * foreachBatch alone is AT-LEAST-once: a batch whose swap landed but
     * whose checkpoint commit didn't is REPLAYED on restart, and re-merging
-    * would double-apply it. The `_last_batch` marker is underscore-prefixed
-    * (parquet readers skip it) and travels with the swap, so table and
-    * marker commit together; replayed batchIds are skipped. The table and
-    * its checkpoint form a unit: restarting with a fresh checkpoint against
-    * an existing table restarts batch numbering and is undefined. Single
-    * writer; both renames are checked, and a failed swap throws so the
-    * batch retries rather than silently dropping the merge. */
+    * would double-apply it. The batch id is written as a `_last_batch`
+    * marker into the replacement before the swap (underscore-prefixed, so
+    * parquet readers skip it), so table and marker commit together, and
+    * replayed batch ids are skipped. The table and its checkpoint form a
+    * unit: restarting with a fresh checkpoint against an existing table
+    * restarts batch numbering and is undefined. Returns whether this call
+    * merged the batch. */
   private def mergeSwap(spark: SparkSession, tableDir: String, batchId: Long)
       (merge: Option[DataFrame] => DataFrame): Boolean = {
-    val dir = new java.io.File(tableDir)
-    val backup = new java.io.File(s"${tableDir}_old")
-    if (batchId > lastApplied(tableDir)) {
+    val fs = fsOf(spark, tableDir)
+    if (batchId > lastApplied(fs, tableDir)) {
       val merged = merge(
-        if (hasTable(tableDir)) Some(Parquet.read(spark, tableDir)) else None)
-      // write-new-then-swap; the marker is written into the NEW table
-      // before the swap so it becomes visible atomically with the data
-      val tmp = new java.io.File(s"${tableDir}_b$batchId")
-      deleteRecursively(tmp)
-      merged.write.mode("overwrite").parquet(tmp.getPath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_last_batch").toPath, batchId.toString)
-      // any backup still present here is a post-swap leftover (the table
-      // dir exists — the dangerous absent-table case was restored by
-      // lastApplied), so deleting it is safe
-      deleteRecursively(backup)
-      if (dir.exists() && !dir.renameTo(backup))
-        throw new IllegalStateException(s"cannot move $tableDir aside")
-      if (!tmp.renameTo(dir)) {
-        backup.renameTo(dir) // restore, then fail the batch for retry
-        throw new IllegalStateException(s"cannot publish $tmp to $tableDir")
+        if (hasTable(fs, tableDir)) Some(Parquet.read(spark, tableDir)) else None)
+      graft.sources.Commit.replace(fs, new Path(tableDir)) { tmp =>
+        merged.write.parquet(tmp.toString)
+        scala.util.Using.resource(fs.create(new Path(tmp, "_last_batch")))(
+          _.write(batchId.toString.getBytes("UTF-8")))
       }
-      deleteRecursively(backup) // only after a fully successful swap
       true
     } else false // replayed batch: the table already holds this batch
   }
 
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** The largest batch id the table at `tableDir` already holds: the
     * greater of its `_last_batch` marker (written by [[mergeSwap]]) and the
     * batch ids of its generation files ([[generations]]); -1 for none.
-    * Crash recovery runs FIRST: a death between [[mergeSwap]]'s two
-    * renames leaves the table dir absent and `_old` holding the ENTIRE
-    * accumulated history. It is restored before the read — otherwise the
-    * batch id resets to -1 and the replayed batch rebuilds the table from
-    * its own delta alone (and an unconditional stale-backup delete would
-    * destroy the only surviving copy). Marker and generations travel
-    * inside the dir, so the restore brings the right answer with it. */
-  private def lastApplied(tableDir: String): Long = {
-    val dir = new java.io.File(tableDir)
-    val backup = new java.io.File(s"${tableDir}_old")
-    if (!dir.exists() && backup.exists() && !backup.renameTo(dir))
-      throw new IllegalStateException(
-        s"cannot restore crash backup $backup to $tableDir")
-    val marker = new java.io.File(dir, "_last_batch")
-    val merged =
-      if (marker.exists()) java.nio.file.Files.readString(marker.toPath).trim.toLong
-      else -1L
-    (merged +: generations(tableDir)).max
+    * [[graft.sources.Commit.recover]] runs first, so a table a crashed
+    * swap left at `_old` is back before the read; otherwise the batch id
+    * would reset to -1 and the replayed batch would rebuild the table from
+    * its own delta alone. Marker and generations travel inside the dir. */
+  private def lastApplied(fs: FileSystem, tableDir: String): Long = {
+    graft.sources.Commit.recover(fs, new Path(tableDir))
+    (marker(fs, tableDir) +: generations(fs, tableDir)).max
   }
+
+  /** The batch id in `tableDir`'s `_last_batch` marker; -1 for none. */
+  private def marker(fs: FileSystem, tableDir: String): Long =
+    try scala.util.Using.resource(fs.open(new Path(tableDir, "_last_batch")))(
+      in => new String(in.readAllBytes(), "UTF-8").trim.toLong)
+    catch { case _: java.io.FileNotFoundException => -1L }
+
+  /** The names at the root of `dir`; none if it does not exist. */
+  private def names(fs: FileSystem, dir: String): Seq[String] =
+    try fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** Whether `tableDir` holds a table yet: any entry a parquet read lists.
     * A first tick that died before its publish leaves only hidden ones. */
-  private def hasTable(tableDir: String): Boolean =
-    Option(new java.io.File(tableDir).list())
-      .exists(_.exists(n => !n.startsWith("_") && !n.startsWith(".")))
+  private def hasTable(fs: FileSystem, tableDir: String): Boolean =
+    names(fs, tableDir).exists(n => !n.startsWith("_") && !n.startsWith("."))
 
   /** A generation file's name at the table root: `part-b<batchId>-….parquet`. */
   private val GenerationFile = "part-b(\\d+)-.*\\.parquet".r
 
   /** Batch ids of the generation files at the root of `tableDir`. */
-  private def generations(tableDir: String): Seq[Long] =
-    Option(new java.io.File(tableDir).list()).toSeq.flatten.collect {
-      case GenerationFile(id) => id.toLong
-    }
+  private def generations(fs: FileSystem, tableDir: String): Seq[Long] =
+    names(fs, tableDir).collect { case GenerationFile(id) => id.toLong }
 
   /** Publishes `rows` as one immutable generation of the parquet table at
     * `tableDir`, O(rows) bytes: Spark tasks write them as ONE parquet file
-    * into the hidden `_pending_b<batchId>/` directory (underscore, no `=`:
-    * file listings skip it, and it never reads as a partition column),
-    * and one Hadoop `FileSystem` rename moves that file to the table root
-    * as `part-b<batchId>-….parquet`. The rename is the commit: a plain
-    * parquet read of `tableDir` reads the file from then on, and
-    * [[lastApplied]] reads the batch id off its name. A leftover pending
-    * directory from a crash before the rename is deleted first. Root-level
-    * files, not subdirectories: a reader of a directory with root-level
-    * parquet files skips a plain subdirectory, and reads a `k=v` one as a
-    * partition column. */
+    * into the hidden `_pending_b<batchId>/` directory, and
+    * [[graft.sources.Commit.add]] moves that file to the table root as
+    * `part-b<batchId>-….parquet`. From then on a plain parquet read of
+    * `tableDir` reads the file, and [[lastApplied]] reads the batch id off
+    * its name. Root-level files, not subdirectories: a reader of a
+    * directory with root-level parquet files skips a plain subdirectory,
+    * and reads a `k=v` one as a partition column. */
   private def publishGeneration(rows: DataFrame, tableDir: String,
       batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(tableDir)
-    val fs = root.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
-    val pending = new Path(root, s"_pending_b$batchId")
-    fs.delete(pending, true)
-    rows.coalesce(1).write.parquet(pending.toString)
-    val part = fs.listStatus(pending).map(_.getPath)
-      .find(_.getName.startsWith("part-")).getOrElse(
-        throw new IllegalStateException(s"no parquet file written to $pending"))
-    val gen = new Path(root, part.getName.replaceFirst("^part-\\d+", s"part-b$batchId"))
-    if (!fs.rename(part, gen))
-      throw new IllegalStateException(s"cannot publish $part as $gen")
-    fs.delete(pending, true): Unit
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+    val fs = fsOf(rows.sparkSession, tableDir)
+    graft.sources.Commit.add(fs, new Path(root, s"_pending_b$batchId")) { pending =>
+      rows.coalesce(1).write.parquet(pending.toString)
+      fs.listStatus(pending).map(_.getPath)
+        .find(_.getName.startsWith("part-")).getOrElse(
+          throw new IllegalStateException(s"no parquet file written to $pending"))
+    }(part => new Path(root, part.getName.replaceFirst("^part-\\d+", s"part-b$batchId")))
   }
 
   final case class UserTotalMicro(user_id: Long, n_events: Long,
@@ -866,9 +828,9 @@ object EventStreams {
       StructField("g", in.toDF().select(col(groupCol)).schema.head.dataType),
       StructField("psi_micro", LongType), StructField("flag", StringType)))
     withGateScope(spark, "drift_restart") { base =>
-      val countsDir = new java.io.File(base, "counts").getAbsolutePath
-      val metricsDir = new java.io.File(base, "metrics").getAbsolutePath
-      val ckptDir = new java.io.File(base, "ckpt").getAbsolutePath
+      val countsDir = s"$base/counts"
+      val metricsDir = s"$base/metrics"
+      val ckptDir = s"$base/ckpt"
       // one AvailableNow run = one micro-batch of everything fed since
       // the last run; only the deliberately-crashed run may swallow the
       // injected failure — a genuine error elsewhere must propagate
@@ -1167,11 +1129,10 @@ object EventStreams {
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
     withGateScope(spark, name, rocksDb) { base =>
       val table = s"${name}_${replaySeq.incrementAndGet()}"
-      val outDir = new java.io.File(base, "out").getAbsolutePath
+      val outDir = s"$base/out"
       def run(feed: Seq[Seq[Event]]): Unit = {
         val w = build(in.toDS(), delay).writeStream
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").getAbsolutePath)
+          .option("checkpointLocation", s"$base/ckpt")
           .outputMode(outputMode)
         val q =
           if (killAfter.isEmpty) w.format("memory").queryName(table).start()
@@ -1230,13 +1191,13 @@ object EventStreams {
     * which keeps state off-heap at scale. The gates are synchronous, so
     * nothing else plans under the temporary values. */
   private def withGateScope[T](spark: SparkSession, name: String,
-      rocksDb: Boolean = false)(body: java.io.File => T): T =
+      rocksDb: Boolean = false)(body: String => T): T =
     withConf(spark, Map("spark.sql.shuffle.partitions" -> "2") ++
         Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
       val base = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
-        .toFile
-      try body(base) finally deleteRecursively(base)
+        .toString
+      try body(base) finally fsOf(spark, base).delete(new Path(base), true): Unit
     }
 
   /** Runs `body` with `overrides` set on the session, then restores every
@@ -1261,7 +1222,7 @@ object EventStreams {
   private def readBackEagerly(spark: SparkSession, dir: String,
       schema: StructType): DataFrame = {
     val sunk: Seq[org.apache.spark.sql.Row] =
-      if (!new java.io.File(dir).exists()) Seq.empty
+      if (!fsOf(spark, dir).exists(new Path(dir))) Seq.empty
       else spark.read.schema(schema).parquet(dir).collect().toSeq
     spark.createDataFrame(
       spark.sparkContext.parallelize(sunk, math.max(1, sunk.size min 2)),

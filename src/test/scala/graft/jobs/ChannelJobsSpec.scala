@@ -259,4 +259,29 @@ class ChannelJobsSpec extends SparkSpec {
     assert(hist.where(col("version") === 1).isEmpty)
     assert(hist.where(col("version") === 2).count() == w2.rows)
   }
+
+  test("staging left at _old by a publish that died between its renames: " +
+      "recover restores it, and the next run publishes whole") {
+    NvsFixtures.registerAll(spark)
+    val dir = Files.createTempDirectory("graft_staging_old").toString
+    val cfg = ChannelJobs.JobConfig(outDir = dir, batchId = "r1", outputFiles = 2)
+    ChannelJobs.run(spark, cfg)
+    val staging = s"$dir/tam_nvs_staging"
+    val backup = new java.io.File(s"${staging}_old")
+    // the state a crash between Commit.replace's two renames leaves
+    assert(new java.io.File(staging).renameTo(backup))
+    graft.sources.Commit.recover(
+      org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(staging))
+    assert(!backup.exists())
+    assert(partFiles(staging) == partFiles(s"$dir/tam_nvs_historical/version=1"))
+    assert(sameRows(spark.read.parquet(staging), NvsPipeline.tamCe(spark)))
+
+    val w2 = ChannelJobs.run(spark, cfg.copy(batchId = "r2"))
+    assert(w2.map(_.version) == Seq(2L, 2L))
+    assert(partFiles(staging) == partFiles(s"$dir/tam_nvs_historical/version=2"))
+    assert(new java.io.File(dir).list().sorted.toSeq == Seq("audit_log",
+      "digital_nvs_historical", "digital_nvs_staging", "tam_nvs_historical",
+      "tam_nvs_staging"))
+  }
 }

@@ -1,53 +1,13 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Compaction must preserve content exactly, cut the file count to the
-  * byte-target arithmetic, and leave no swap debris behind. */
+/** The compaction planner must keep every file once, leave oversize files
+  * alone, and bound each bin's bytes. */
 class CompactionSpec extends SparkSpec {
 
-  private def fragmented(): String = {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .repartition(64)
-      .write.parquet(dir)
-    dir
-  }
-
-  test("compact: content identical, file count at the byte target, no debris") {
-    val dir = fragmented()
-    val before = spark.read.parquet(dir)
-    val wantRows = before.count()
-    val wantSum = before.agg(sum("l_quantity")).head.getDouble(0)
-    val bytes = Compaction.tableBytes(spark, dir)
-
-    val (nBefore, nAfter) = Compaction.compact(spark, dir,
-      targetBytes = bytes / 4 + 1) // → exactly 4 output partitions
-    assert(nBefore == 64)
-    assert(nAfter == 4, s"expected 4 files, got $nAfter")
-
-    val after = spark.read.parquet(dir)
-    assert(after.count() == wantRows)
-    assert(after.agg(sum("l_quantity")).head.getDouble(0) == wantSum)
-    assert(after.schema == before.schema)
-    // swap left neither the temp nor the old directory behind
-    assert(!new java.io.File(dir + "__compact").exists())
-    assert(!new java.io.File(dir + "__old").exists())
-  }
-
-  test("compact: a table already under one target file stays one file") {
-    val dir = fragmented()
-    val (_, nAfter) = Compaction.compact(spark, dir,
-      targetBytes = Long.MaxValue)
-    assert(nAfter == 1)
-    assert(spark.read.parquet(dir).count() ==
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count())
-  }
-
   test("planBins: conservation, oversize singletons, bounded bin waste") {
-    import org.apache.spark.sql.functions._
     val target = 1000L
     // deterministic mixed fixture: sizes cycle through small and oversize
     val files = spark.range(200).select(
