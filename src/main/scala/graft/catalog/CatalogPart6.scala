@@ -1652,10 +1652,10 @@ private[graft] trait CatalogPart6 extends CatalogPart5 {
     * ([[graft.operators.Dedup.indexAppendLeveled]] /
     * [[graft.operators.Dedup.foldDedupIndexL0]]): generation 1 of the
     * index is built from the doc_id % 4 ∈ {1, 2} slices, generation 2 (the
-    * % 4 == 3 slice) is APPENDED — O(batch) writes into the unbucketed L0
-    * side tables — and, at `foldEvery = 1`, immediately FOLDED into the
-    * main level as one sorted file per bucket (O(corpus) parquet IO, zero
-    * recompute); the % 4 == 0 ingest batch probes the result. The corpus
+    * % 4 == 3 slice) is APPENDED — one O(batch) write into the unbucketed
+    * L0 signature table — and, at `foldEvery = 1`, immediately FOLDED into
+    * the main levels as one sorted file per bucket (O(corpus) parquet IO,
+    * no re-signing); the % 4 == 0 ingest batch probes the result. The corpus
     * seen by the probe is exactly q221's (% 4 != 0), so the output — and
     * the oracle — is identical to q221's: a lost or doubled generation, a
     * bucket-spec drift, or a fold that corrupts rows all diverge. The
@@ -1690,7 +1690,7 @@ private[graft] trait CatalogPart6 extends CatalogPart5 {
     * ingest ticks (doc_id % 3 slices), each a checkpointed AvailableNow
     * run that probes the STANDING bucketed dedup index, admits survivors
     * through the corpusIngestSink drop semantics, swaps the corpus table
-    * effectively-once, and APPENDS the admitted docs' sigs/bands to the
+    * effectively-once, and APPENDS the admitted docs' signatures to the
     * index — the corpus is never re-shingled. The oracle walks the same
     * greedy batch-sequential admission in SQL over the q19 candidate-pair
     * CTEs: batch k drops a doc paired (est ≥ 0.8) with any earlier

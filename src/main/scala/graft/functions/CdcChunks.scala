@@ -36,8 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * position (O(n·window) interpreted higher-order calls); this maintains a
   * true O(n) rolling window (subtract the outgoing hash's `257^window mod P`
   * term) in one JIT-compiled pass. The declarative twin
-  * ([[graft.operators.Dedup.cdcChunksDeclarative]]) is property-tested
-  * equal; the DuckDB oracle replays the fold form exactly.
+  * (`graft.operators.DedupTwins.cdcChunksDeclarative`, test code) is
+  * property-tested equal; the DuckDB oracle replays the fold form exactly.
   */
 final case class CdcChunks(child: Expression, window: Int, divisor: Int)
     extends UnaryExpression {

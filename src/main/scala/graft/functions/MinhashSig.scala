@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `minhash_sig(text, n, numHashes)` → `array<long>`.
   *
   * Semantics identical to the explode → stableHash31 → 32-way min-aggregate
-  * pipeline ([[graft.operators.Dedup.minhashSigsAgg]], property-tested) and
-  * to the per-row higher-order form ([[graft.operators.Dedup.withMinhash]]):
+  * pipeline (`graft.operators.DedupTwins.minhashSigsAgg`, test code,
+  * property-tested) and to the per-row higher-order form
+  * (`graft.operators.DedupTwins.withMinhash`, test code):
   * for each word `n`-gram shingle (via [[WordShingles.shingle]] — a doc
   * shorter than n yields its whole text), h = md5-derived 60-bit
   * [[Hashing.stableHash]] mod P, and sig_k = min over shingles of

@@ -12,8 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `simhash_sig(text)` → long ([[graft.operators.Dedup.SimhashBits]]-bit).
   *
   * Semantics identical to the explode → stableHash → 32 bit-sum aggregates
-  * pipeline ([[graft.operators.Dedup.simhashSigsAgg]], property-tested) and
-  * the per-row higher-order fold ([[graft.operators.Dedup.withSimhash]]):
+  * pipeline (`graft.operators.DedupTwins.simhashSigsAgg`, test code,
+  * property-tested) and the per-row higher-order fold
+  * (`graft.operators.DedupTwins.withSimhash`, test code):
   * tokens are single-space splits (empty tokens from doubled spaces
   * included, matching `split(text, ' ')`), each hashed with the md5-derived
   * 60-bit [[Hashing.stableHash]]; bit b of the signature is set iff

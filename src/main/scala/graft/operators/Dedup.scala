@@ -18,7 +18,6 @@ import graft.functions.{Hashing, WordShingles}
   * Hashes are [[Hashing.stableHash]]-based so the DuckDB oracle reproduces them.
   */
 object Dedup {
-  import Hashing.P
 
   /** Anti-join `index` against a (small-by-construction) hot-key set.
     * `broadcastHot = true` pins the map-side-lookup plan; on a
@@ -66,18 +65,9 @@ object Dedup {
 
   /** Word n-gram shingles (a doc shorter than n yields its full token string
     * as the single shingle). Backed by the codegen'd [[WordShingles]]
-    * expression; [[shinglesDeclarative]] is the built-in-only twin it must
-    * always agree with (property-tested). */
+    * expression; the test-side `DedupTwins.shinglesDeclarative` is the
+    * built-in-only twin it must always agree with (property-tested). */
   def shingles(text: Column, n: Int): Column = WordShingles(text, n)
-
-  /** The same shingling expressed purely with built-in higher-order functions
-    * (interpreted → ~30× slower per shingle; kept as the semantic oracle). */
-  def shinglesDeclarative(text: Column, n: Int): Column = {
-    val t = tokens(text)
-    transform(
-      sequence(lit(1), greatest(size(t) - (n - 1), lit(1))),
-      i => concat_ws(" ", slice(t, i, lit(n))))
-  }
 
   /** Exact dedup: group identical content by md5, keep the smallest id as the
     * canonical copy. One hash-shuffle; at 100 TB the md5 is computed map-side
@@ -85,25 +75,6 @@ object Dedup {
   def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"))
-
-  /** MinHash signature over an already-hashed shingle array:
-    * sig_i = min over shingles of (a_i * h + b_i) mod P. Keep the md5-based
-    * shingle hashing in a separate materialized column ([[withMinhash]]) —
-    * inlining it here would recompute every md5 numHashes times. */
-  def minhashOfHashes(shingleHashes: Column, numHashes: Int): Column =
-    array(Hashing.minhashCoeffs(numHashes).map { case (a, b) =>
-      array_min(transform(shingleHashes, h => (lit(a) * h + lit(b)) % lit(P)))
-    }: _*)
-
-  /** Adds a MinHash signature column — entirely within the row via higher-order
-    * functions: NO explode, NO shuffle. The shingle-hash array is materialized
-    * once per row (`_hs`) so each of the numHashes permutations reuses it. */
-  def withMinhash(df: DataFrame, textCol: String, out: String,
-      shingleSize: Int, numHashes: Int): DataFrame =
-    df.withColumn("_hs",
-        transform(shingles(col(textCol), shingleSize), s => Hashing.stableHash31(s)))
-      .withColumn(out, minhashOfHashes(col("_hs"), numHashes))
-      .drop("_hs")
 
   /** LSH banding: split the signature into `bands` bands of `rowsPerBand` and
     * hash each band; docs sharing any band hash are near-dup candidates.
@@ -124,30 +95,12 @@ object Dedup {
     * ([[graft.functions.MinhashSig]]) — shingle, md5, and all numHashes
     * permutation-mins inside a single JIT-compiled call. A NARROW map with
     * zero shuffle: the signature step costs exactly one corpus scan at any
-    * size. Values identical to [[withMinhash]] and [[minhashSigsAgg]]
-    * (property-tested). */
+    * size. Values identical to the test-side twins `DedupTwins.withMinhash`
+    * and `minhashSigsAgg` (property-tested). */
   def minhashSigs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int): DataFrame =
     df.select(col(idCol).as("id"),
       graft.functions.MinhashSig(col(textCol), shingleSize, numHashes).as("sig"))
-
-  /** The same signatures via explode → codegen'd hash → numHashes-way min
-    * aggregate — the built-in-operator twin [[minhashSigs]] must always agree
-    * with (property-tested). Costs an exchange + two HashAggregate levels;
-    * kept as the semantic oracle and as the fallback shape for engines
-    * without expression extension points. */
-  def minhashSigsAgg(df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, numHashes: Int): DataFrame = {
-    val aggs = Hashing.minhashCoeffs(numHashes).zipWithIndex.map {
-      case ((a, b), i) => min((lit(a) * col("h") + lit(b)) % lit(P)).as(s"_s$i")
-    }
-    df.select(col(idCol).as("id"),
-        explode(shingles(col(textCol), shingleSize)).as("sh"))
-      .select(col("id"), Hashing.stableHash31(col("sh")).as("h"))
-      .groupBy(col("id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until numHashes).map(i => col(s"_s$i")): _*).as("sig"))
-  }
 
   /** Candidate near-dup pairs via LSH: self-join on (band_idx, band_hash) —
     * the shuffle key is the band hash, so comparisons happen only within
@@ -227,14 +180,11 @@ object Dedup {
   def minhashCandidatesBucketed(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
       sigTable: String, bandTable: String, buckets: Int = 32): DataFrame = {
-    val rowsPerBand = numHashes / bands
     val sigs = graft.operators.ScaleOps.ensureBucketed(
       minhashSigs(df, idCol, textCol, shingleSize, numHashes),
       sigTable, buckets, Seq("id"))
     val banded = graft.operators.ScaleOps.ensureBucketed(
-      lshBands(sigs, "id", "sig", bands, rowsPerBand)
-        .select(fusedBandKey.as("bkey"), col("id")),
-      bandTable, buckets, Seq("bkey"))
+      bandKeys(sigs, numHashes, bands), bandTable, buckets, Seq("bkey"))
     // bucketed + sorted on bkey: the self-join sort-merges over co-located
     // scans — zero exchange, zero sort (asserted in PlanAuditSpec). The
     // merge hint pins that shape: left alone, AQE broadcasts the whole
@@ -271,6 +221,13 @@ object Dedup {
     * always a non-null md5, so values are unchanged.) */
   private def fusedBandKey: Column =
     md5(concat(col("band_idx").cast("string"), lit("|"), col("band_hash")))
+
+  /** The (bkey, id) band-key rows of an (id, sig) signature frame: the
+    * layout of every band level, and what the probe and the fold derive
+    * from L0 signatures. */
+  private def bandKeys(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    lshBands(sigs, "id", "sig", bands, numHashes / bands)
+      .select(fusedBandKey.as("bkey"), col("id"))
 
   /** Incremental LSH dedup — candidate near-dup pairs for a NEW batch of
     * documents against an existing corpus and within the batch itself,
@@ -348,10 +305,10 @@ object Dedup {
     *
     * Ids must be disjoint across corpus and batch (the caller's identity
     * contract, as in the unindexed form). After admission, a production
-    * job appends the admitted batch's sigs/bands to the standing index —
-    * a compaction-style per-bucket rewrite keeps the one-file-per-bucket
-    * sort guarantee (see [[graft.sources.Compaction]]); this function is
-    * the per-batch READ path that makes that index pay. */
+    * job appends the admitted batch's signatures to the index's L0 level
+    * ([[indexAppendLeveled]]), and the fold's per-bucket rewrite keeps the
+    * one-file-per-bucket sort guarantee; this function is the per-batch
+    * READ path that makes that index pay. */
   def minhashCandidatesIndexed(oldDf: DataFrame, newDf: DataFrame,
       idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8,
@@ -374,14 +331,11 @@ object Dedup {
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
       sigTable: String, bandTable: String, buckets: Int = 32): Unit = {
-    val rowsPerBand = numHashes / bands
     val sigs = graft.operators.ScaleOps.ensureBucketed(
       minhashSigs(corpus, idCol, textCol, shingleSize, numHashes),
       sigTable, buckets, Seq("id"))
     graft.operators.ScaleOps.ensureBucketed(
-      lshBands(sigs, "id", "sig", bands, rowsPerBand)
-        .select(fusedBandKey.as("bkey"), col("id")),
-      bandTable, buckets, Seq("bkey"))
+      bandKeys(sigs, numHashes, bands), bandTable, buckets, Seq("bkey"))
     ()
   }
 
@@ -389,38 +343,30 @@ object Dedup {
     * the standing index TABLES directly (whatever built or appended them —
     * [[buildDedupIndex]], [[indexAppendLeveled]], or a prior
     * [[minhashCandidatesIndexed]] call). Same output contract and scale
-    * shape as [[minhashCandidatesIndexed]]. Throws if only one of the two
-    * L0 side tables exists (a torn index: see [[dropDedupIndex]]). */
+    * shape as [[minhashCandidatesIndexed]]. The L0 level holds signatures
+    * only; its band keys are derived here, batch-grain, on every read. */
   def minhashCandidatesIndexedTables(newDf: DataFrame,
       idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
       sigTable: String, bandTable: String): DataFrame = {
-    val rowsPerBand = numHashes / bands
     val spark = newDf.sparkSession
     val sigsOld = spark.table(sigTable)
     val bandsOld = spark.table(bandTable)
     // leveled appends ([[indexAppendLeveled]]) park recent generations in
-    // unbucketed L0 side tables until the next fold; a probe between folds
-    // must see corpus = main ∪ L0. Auto-detected so the no-L0 plan (a
+    // an unbucketed L0 signature table until the next fold; a probe between
+    // folds must see corpus = main ∪ L0. Auto-detected so the no-L0 plan (a
     // freshly built or folded index, e.g. q221/q225) is byte-identical to
     // the pre-L0 shape; when L0 is live its rows join as SEPARATE small
     // branches — the main level's exchange-free bucketed scans are never
     // unioned into (a union would re-exchange the corpus side and forfeit
-    // the layout). Sig and band L0 live and die together; one without the
-    // other would silently drop generations from the candidate set.
+    // the layout).
     val hasL0 = spark.catalog.tableExists(l0Of(sigTable))
-    if (hasL0 != spark.catalog.tableExists(l0Of(bandTable)))
-      throw new IllegalStateException(s"torn dedup index: only one of " +
-        s"${l0Of(sigTable)} and ${l0Of(bandTable)} exists; drop the index " +
-        "(dropDedupIndex) and rebuild it from the corpus")
     val sigsL0 = if (hasL0) Some(spark.table(l0Of(sigTable))) else None
-    val bandsL0 = if (hasL0) Some(spark.table(l0Of(bandTable))) else None
     // the batch side: |new| signatures, persisted because they feed the
     // band probe AND the est-jaccard join-backs
     val sigsNew = graft.core.CacheScope.persist(
       minhashSigs(newDf, idCol, textCol, shingleSize, numHashes))
-    val bandsNew = lshBands(sigsNew, "id", "sig", bands, rowsPerBand)
-      .select(fusedBandKey.as("bkey"), col("id"))
+    val bandsNew = bandKeys(sigsNew, numHashes, bands)
     // new × old: the batch probes the corpus buckets; merge-hinted so the
     // corpus side keeps its exchange-free bucketed-scan shape (AQE would
     // broadcast the CORPUS band table at test scale — unbuildable at
@@ -431,11 +377,13 @@ object Dedup {
       .select(least(col("l.id"), col("r.id")).as("id_a"),
         greatest(col("l.id"), col("r.id")).as("id_b"))
     // new × L0: both sides batch-grain (≤ foldEvery pending batches), so
-    // the L0 side is broadcast-hinted — pinned, not left to the size
-    // estimate; this branch exists only between folds
-    val newL0 = bandsL0.map { b0 =>
+    // the L0 side — its band keys derived from its signatures — is
+    // broadcast-hinted, pinned, not left to the size estimate; this branch
+    // exists only between folds
+    val newL0 = sigsL0.map { s0 =>
       bandsNew.as("l")
-        .join(b0.as("r").hint("broadcast"), Seq("bkey"))
+        .join(bandKeys(s0, numHashes, bands).as("r").hint("broadcast"),
+          Seq("bkey"))
         .select(least(col("l.id"), col("r.id")).as("id_a"),
           greatest(col("l.id"), col("r.id")).as("id_b"))
     }
@@ -506,25 +454,28 @@ object Dedup {
   private def pendingKeys(sigTable: String, bandTable: String): Seq[String] =
     indexKeys(sigTable, bandTable).filter(_.startsWith("pendingL0|"))
 
-  /** L0 side-table name for a standing index table (leveled appends). */
+  /** L0 level name of a standing signature table (leveled appends). */
   private def l0Of(table: String): String = table + "_l0"
 
-  /** Append one ingest batch's signatures and band keys to the STANDING
-    * dedup index — the maintenance half of the production loop whose read
-    * half is [[minhashCandidatesIndexedTables]]: admit a batch against
-    * the index, then append the admitted docs so the NEXT batch dedups
-    * against them too, never recomputing the corpus. LEVELED (L0→L1, the
-    * LSM shape): each batch lands in PLAIN unbucketed L0 side tables
-    * (`<table>_l0`, one append of batch-partition-many files — no bucket
-    * fan-out, no bucket-spec shuffle; a bucketed per-batch append would
-    * dirty every bucket and tie the O(corpus) rewrite cadence to the
-    * batch cadence), and every `foldEvery`-th pending generation is FOLDED
-    * into the main bucketed level ([[foldDedupIndexL0]]). Probe-side,
-    * [[minhashCandidatesIndexedTables]] auto-detects a live L0 and unions
+  /** Append one ingest batch's signatures to the STANDING dedup index — the
+    * maintenance half of the production loop whose read half is
+    * [[minhashCandidatesIndexedTables]]: admit a batch against the index,
+    * then append the admitted docs so the NEXT batch dedups against them
+    * too, never recomputing the corpus. LEVELED (L0→L1, the LSM shape):
+    * each batch lands in ONE plain unbucketed L0 table, `<sigTable>_l0`
+    * (one append of batch-partition-many files — no bucket fan-out, no
+    * bucket-spec shuffle; a bucketed per-batch append would dirty every
+    * bucket and tie the O(corpus) rewrite cadence to the batch cadence),
+    * and every `foldEvery`-th pending generation is FOLDED into the main
+    * bucketed level ([[foldDedupIndexL0]]). L0 holds signatures only: its
+    * band keys are a pure, batch-grain function of them, so the probe and
+    * the fold derive them on read — one Spark write per append, and no
+    * state in which half of an L0 generation exists. Probe-side,
+    * [[minhashCandidatesIndexedTables]] auto-detects a live L0 and joins
     * its (small, batch-grain) rows into the candidate and signature
     * lookups WITHOUT touching the main level's exchange-free bucketed
-    * scans — the trade is a bounded extra join against ≤ foldEvery
-    * batches of rows, and the payoff is a compaction cadence chosen by
+    * scans — the trade is a bounded extra join against ≤ foldEvery batches
+    * of rows, and the payoff is a compaction cadence chosen by
     * `foldEvery`, decoupled from how often batches arrive.
     *
     * Idempotent per (session, tables, batchTag): a replayed call with the
@@ -538,27 +489,20 @@ object Dedup {
       sigTable: String, bandTable: String, batchTag: String,
       foldEvery: Int = 8): Unit = appliedIndexOps.synchronized {
     require(foldEvery >= 1, "foldEvery must be >= 1")
-    // the guard key is recorded only AFTER both L0 writes succeed: a crash
-    // between the sig and band appends must leave the op re-runnable
-    // (torn-index repair is the caller's job — [[dropDedupIndex]], see the
-    // replay-repair branch in corpusIngestSinkIndexed — but the registry
-    // must never claim an append that didn't finish). Serialized on the
+    // the guard key is recorded only AFTER the L0 write succeeds: the
+    // registry must never claim an append that didn't finish (repairing a
+    // crash inside it is the caller's job — [[dropDedupIndex]], see the
+    // replay-repair branch in corpusIngestSinkIndexed). Serialized on the
     // registry: maintenance ops are rare and short relative to what they
     // guard.
     val key = s"appendL0|$sigTable|$bandTable|$batchTag"
     if (appliedIndexOps.contains(key)) return
-    val rowsPerBand = numHashes / bands
-    val sigs = graft.core.CacheScope.persist(
-      minhashSigs(batch, idCol, textCol, shingleSize, numHashes))
-    Seq(sigTable, bandTable).foreach(t =>
-      graft.operators.ScaleOps.dropOrphanLocation(batch.sparkSession, l0Of(t)))
-    sigs.write.mode("append").format("parquet").saveAsTable(l0Of(sigTable))
-    lshBands(sigs, "id", "sig", bands, rowsPerBand)
-      .select(fusedBandKey.as("bkey"), col("id"))
-      .write.mode("append").format("parquet").saveAsTable(l0Of(bandTable))
+    graft.operators.ScaleOps.dropOrphanLocation(batch.sparkSession, l0Of(sigTable))
+    minhashSigs(batch, idCol, textCol, shingleSize, numHashes)
+      .write.mode("append").format("parquet").saveAsTable(l0Of(sigTable))
     appliedIndexOps.add(key)
     // fold cadence: count this session's pending L0 generations from the
-    // registry (zero IO; registry and L0 tables are both session-scoped).
+    // registry (zero IO; registry and L0 table are both session-scoped).
     // Pending markers are a SEPARATE namespace from the idempotence keys:
     // folds clear pending markers (folded generations no longer count
     // toward the next fold) but must never clear the append keys — a
@@ -566,53 +510,59 @@ object Dedup {
     // fold already moved into the main level.
     appliedIndexOps.add(s"pendingL0|$sigTable|$bandTable|$batchTag")
     if (pendingKeys(sigTable, bandTable).size >= foldEvery)
-      foldDedupIndexL0(batch.sparkSession, sigTable, bandTable)
+      foldDedupIndexL0(batch.sparkSession, sigTable, bandTable, numHashes, bands)
     ()
   }
 
-  /** Fold the L0 side tables into the main bucketed level: each table's
-    * main level plus its L0 is rewritten as one sorted file per bucket
-    * into a `_folding` sibling, and only when BOTH siblings are written is
-    * the fold published (drop main, rename sibling, drop L0, per table).
-    * A failed write drops the siblings and leaves the old index — main
-    * level and L0 — as it was; only a crash inside the publish's catalog
-    * calls can still tear it. O(main + L0) parquet IO, zero recompute (no
-    * shingling, no signing); after the fold the probe's no-L0 fast path
-    * and full sort-elision are restored. Safe to call with no pending L0
-    * (no-op). */
+  /** Fold the L0 signature table into the main bucketed levels: the sig
+    * level is rewritten from its main level ∪ L0, the band level from its
+    * main level ∪ the band keys of the L0 signatures (derived under the
+    * caller's `(numHashes, bands)` layout, as the probe derives them),
+    * each as one sorted file per bucket into a `_folding` sibling. Only
+    * when BOTH siblings are written is the fold published (drop main,
+    * rename sibling, per table), and the L0 table is dropped after both
+    * renames. A failed write drops the siblings and leaves the old index —
+    * main levels and L0 — as it was; only a crash inside the publish's
+    * catalog calls can still tear it. O(main + L0) parquet IO; the only
+    * recompute is the batch-grain banding of L0 (no shingling, no
+    * signing). After the fold the probe's no-L0 fast path and full
+    * sort-elision are restored. Safe to call with no pending L0 (no-op). */
   def foldDedupIndexL0(spark: org.apache.spark.sql.SparkSession,
-      sigTable: String, bandTable: String): Unit = {
+      sigTable: String, bandTable: String, numHashes: Int, bands: Int): Unit = {
     val cat = spark.sessionState.catalog
     def meta(t: String) = cat.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val folds = Seq(sigTable, bandTable)
-      .filter(t => spark.catalog.tableExists(l0Of(t)))
-      .map(t => t -> (t + "_folding"))
-    try folds.foreach { case (t, tmp) =>
-      val main = meta(t)
-      val spec = main.bucketSpec.getOrElse(
-        sys.error(s"foldDedupIndexL0('$t'): not a bucketed table"))
-      // Read the main level's RAW parquet files, not the catalog table: a
-      // bucketed scan reports a hash partitioning that can satisfy the
-      // write-side repartition, so Spark would elide the exchange and pass
-      // multi-file buckets through as several write tasks — the folded
-      // table would keep 2+ files per bucket and lose sort propagation.
-      // Each level's files are read with its catalog schema: an index
-      // built over an empty corpus has no parquet files to infer one from.
-      def raw(m: org.apache.spark.sql.catalyst.catalog.CatalogTable) =
-        spark.read.schema(m.schema).parquet(m.location.toString)
-      val merged = raw(main).unionByName(raw(meta(l0Of(t))))
-      graft.operators.ScaleOps.writeBucketed(
-        merged, tmp, spec.numBuckets, spec.bucketColumnNames)
-    } catch {
-      case e: Throwable =>
-        folds.foreach { case (_, tmp) => spark.sql(s"DROP TABLE IF EXISTS $tmp") }
-        throw e
+    // Read each level's RAW parquet files, not the catalog table: a
+    // bucketed scan reports a hash partitioning that can satisfy the
+    // write-side repartition, so Spark would elide the exchange and pass
+    // multi-file buckets through as several write tasks — the folded table
+    // would keep 2+ files per bucket and lose sort propagation. Each level's
+    // files are read with its catalog schema: an index built over an empty
+    // corpus has no parquet files to infer one from.
+    def raw(t: String) = {
+      val m = meta(t)
+      spark.read.schema(m.schema).parquet(m.location.toString)
     }
-    folds.foreach { case (t, tmp) =>
-      spark.sql(s"DROP TABLE $t")
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $t")
-      spark.sql(s"DROP TABLE ${l0Of(t)}")
+    if (spark.catalog.tableExists(l0Of(sigTable))) {
+      val l0 = raw(l0Of(sigTable))
+      val folds = Seq(sigTable -> l0, bandTable -> bandKeys(l0, numHashes, bands))
+      try folds.foreach { case (t, l0Rows) =>
+        val spec = meta(t).bucketSpec.getOrElse(
+          sys.error(s"foldDedupIndexL0('$t'): not a bucketed table"))
+        graft.operators.ScaleOps.writeBucketed(raw(t).unionByName(l0Rows),
+          t + "_folding", spec.numBuckets, spec.bucketColumnNames)
+      } catch {
+        case e: Throwable =>
+          folds.foreach { case (t, _) =>
+            spark.sql(s"DROP TABLE IF EXISTS ${t}_folding")
+          }
+          throw e
+      }
+      folds.foreach { case (t, _) =>
+        spark.sql(s"DROP TABLE $t")
+        spark.sql(s"ALTER TABLE ${t}_folding RENAME TO $t")
+      }
+      spark.sql(s"DROP TABLE ${l0Of(sigTable)}")
     }
     // folded generations are no longer pending: clear their PENDING markers
     // so the next fold counts only new generations. The appendL0 idempotence
@@ -621,17 +571,16 @@ object Dedup {
     pendingKeys(sigTable, bandTable).foreach(appliedIndexOps.remove)
   }
 
-  /** Drop both halves of a standing dedup index (and forget their
-    * maintenance guards) so the next [[buildDedupIndex]] rebuilds from
-    * scratch — the torn-index repair path: after a crash that may have
+  /** Drop a standing dedup index — both main levels and the L0 level — and
+    * forget its maintenance guards, so the next [[buildDedupIndex]]
+    * rebuilds from scratch: the repair path after a crash that may have
     * landed between a corpus swap and the matching [[indexAppendLeveled]]
-    * (or mid-append), the CORPUS TABLE is the source of truth and an
-    * O(corpus) rebuild on the rare replay is the honest recovery.
-    * Leveled L0 side tables are part of the index and drop with it. */
+    * (or mid-append), where the CORPUS TABLE is the source of truth and an
+    * O(corpus) rebuild on the rare replay is the honest recovery. */
   def dropDedupIndex(spark: org.apache.spark.sql.SparkSession,
       sigTable: String, bandTable: String): Unit =
     appliedIndexOps.synchronized {
-      Seq(sigTable, bandTable, l0Of(sigTable), l0Of(bandTable)).foreach { t =>
+      Seq(sigTable, bandTable, l0Of(sigTable)).foreach { t =>
         if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE $t")
       }
       indexKeys(sigTable, bandTable).foreach(appliedIndexOps.remove)
@@ -662,50 +611,15 @@ object Dedup {
     * compact while preserving near-dup recall on word unigrams). */
   val SimhashBits = 32
 
-  /** SimHash over word unigrams: bit b of the signature is the sign of
-    * Σ_tokens (2*bit_b(h(token)) - 1). Per-row higher-order fold — narrow, no
-    * shuffle, token hashes materialized once in `_th`. Interpreted eval; for
-    * corpora where that dominates use [[simhashSigs]]. */
-  def withSimhash(df: DataFrame, textCol: String, out: String): DataFrame = {
-    val hashed = df.withColumn("_th",
-      transform(tokens(col(textCol)), t => Hashing.stableHash(t)))
-    val sig = (0 until SimhashBits).map { b =>
-      val bitSum = aggregate(col("_th"), lit(0L),
-        (s, h) => s + shiftright(h, b).bitwiseAND(lit(1L)) * 2 - 1)
-      when(bitSum > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    hashed.withColumn(out, sig).drop("_th")
-  }
-
   /** SimHash signatures: one fused codegen'd loop per row
     * ([[graft.functions.SimhashSig]]) — tokenize, md5, per-bit ±1 counts,
     * sign-pack, all in a single JIT-compiled call. Zero shuffle. Values
-    * identical to [[withSimhash]] and [[simhashSigsAgg]] (property-tested).
-    * Returns (idCol, out). */
+    * identical to the test-side twins `DedupTwins.withSimhash` and
+    * `simhashSigsAgg` (property-tested). Returns (idCol, out). */
   def simhashSigs(df: DataFrame, idCol: String, textCol: String,
       out: String = "simhash"): DataFrame =
     df.select(col(idCol),
       graft.functions.SimhashSig(col(textCol), SimhashBits).as(out))
-
-  /** The same signatures via explode → codegen'd md5 → 32 bit-sum
-    * aggregates — the built-in-operator twin [[simhashSigs]] must always
-    * agree with (property-tested). The shuffle carries ONLY (id, 32 longs)
-    * per doc with map-side partial aggregation; kept as the semantic oracle
-    * / no-extension-point fallback. Returns (idCol, out). */
-  def simhashSigsAgg(df: DataFrame, idCol: String, textCol: String,
-      out: String = "simhash"): DataFrame = {
-    val bitAggs = (0 until SimhashBits).map { b =>
-      sum(shiftright(col("_h"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"_b$b")
-    }
-    val packed = (0 until SimhashBits).map { b =>
-      when(col(s"_b$b") > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    df.select(col(idCol), explode(tokens(col(textCol))).as("_t"))
-      .select(col(idCol), Hashing.stableHash(col("_t")).as("_h"))
-      .groupBy(col(idCol))
-      .agg(bitAggs.head, bitAggs.tail: _*)
-      .select(col(idCol), packed.as(out))
-  }
 
   /** Hamming distance between two simhash signatures (near-dup if small). */
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -1100,44 +1014,6 @@ object Dedup {
       .select(col("id"), col("pos").cast("long").as("chunk_idx"),
         col("col.start_tok").as("start_tok"), col("col.end_tok").as("end_tok"),
         col("col.chunk_hash").as("chunk_hash"))
-
-  /** The same chunking expressed with built-in higher-order functions — the
-    * O(n·window) interpreted twin [[cdcChunks]] must always agree with
-    * (property-tested); kept as the semantic oracle and the
-    * no-extension-point fallback shape. */
-  def cdcChunksDeclarative(df: DataFrame, idCol: String, textCol: String,
-      window: Int = 8, divisor: Int = 16): DataFrame = {
-    import Hashing.P
-    val B = 257L
-    val toks = tokens(col("_text"))
-    val hs = transform(toks, t => Hashing.stableHash31(t))
-    // fold over the w-token window ending at 1-based position i
-    def roll(i: Column) = aggregate(
-      slice(hs, (i - window + 1).cast("int"), lit(window)), lit(0L),
-      (acc, h) => (acc * B + h) % P)
-    // guard: Spark's sequence(a, b) runs DESCENDING when b < a (DuckDB's
-    // range is empty) — a doc shorter than the window has no boundary slots
-    val positions = when(size(toks) >= window,
-      sequence(lit(window.toLong), size(toks).cast("long")))
-      .otherwise(array().cast("array<long>"))
-    val bpos = filter(positions, i => roll(i) % divisor === 0)
-    val ends = when(
-      coalesce(element_at(bpos, -1), lit(-1L)) === size(toks).cast("long"),
-      bpos).otherwise(concat(bpos, array(size(toks).cast("long"))))
-    df.select(col(idCol).as("id"), col(textCol).as("_text"))
-      .withColumn("_ends", ends)
-      .select(col("id"), col("_text"),
-        posexplode(transform(col("_ends"), (e, k) => struct(
-          when(k === 0, lit(1L))
-            .otherwise(element_at(col("_ends"), k) + 1).as("start_tok"),
-          e.as("end_tok")))))
-      .select(col("id"), col("pos").cast("long").as("chunk_idx"),
-        col("col.start_tok").as("start_tok"), col("col.end_tok").as("end_tok"),
-        Hashing.stableHash31(concat_ws(" ",
-          slice(tokens(col("_text")), col("col.start_tok").cast("int"),
-            (col("col.end_tok") - col("col.start_tok") + 1).cast("int"))))
-          .as("chunk_hash"))
-  }
 
   /** Chunks appearing in more than one DISTINCT document — the dup-chunk
     * report CDC exists for (embedded quotes, shifted boilerplate, licensed

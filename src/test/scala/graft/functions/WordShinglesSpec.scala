@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{Dedup, DedupTwins}
 
 /** The native WordShingles expression must agree with the declarative
   * built-in composition on every input (including empty strings, doubled
@@ -13,7 +13,7 @@ class WordShinglesSpec extends SparkSpec {
     import spark.implicits._
     val df = texts.toDF("text")
     val got = df.select(Dedup.shingles(col("text"), n)).collect().map(_.getSeq[String](0))
-    val want = df.select(Dedup.shinglesDeclarative(col("text"), n)).collect()
+    val want = df.select(DedupTwins.shinglesDeclarative(col("text"), n)).collect()
       .map(_.getSeq[String](0))
     assert(got.toSeq == want.toSeq)
   }

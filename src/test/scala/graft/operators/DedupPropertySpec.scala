@@ -339,9 +339,10 @@ class DedupPropertySpec extends SparkSpec {
     Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 3), "doc_id",
       "text", shingleSize = 3, numHashes = 32, bands = 16,
       sigTable = sigT, bandTable = bandT, batchTag = "g3", foldEvery = 3)
-    assert(spark.catalog.tableExists(sigT + "_l0") &&
-      spark.catalog.tableExists(bandT + "_l0"),
+    assert(spark.catalog.tableExists(sigT + "_l0"),
       "two pending generations under foldEvery=3 must sit in L0")
+    assert(!spark.catalog.tableExists(bandT + "_l0"),
+      "L0 holds signatures only: no band L0 table")
     val gotPending = canon(probe())
     graft.core.CacheScope.drain()
     assert(gotPending == want,
@@ -352,7 +353,7 @@ class DedupPropertySpec extends SparkSpec {
       // explicit fold: L0 gone, main level back to one sorted file per
       // bucket — the no-L0 plan shape (corpus co-located, sort elision
       // live; the q221 pins) must come back, output unchanged
-      Dedup.foldDedupIndexL0(spark, sigT, bandT)
+      Dedup.foldDedupIndexL0(spark, sigT, bandT, 32, 16)
       assert(!spark.catalog.tableExists(sigT + "_l0") &&
         !spark.catalog.tableExists(bandT + "_l0"), "fold must drop L0")
       val pFolded = planOf(probe())
@@ -500,23 +501,6 @@ class DedupPropertySpec extends SparkSpec {
       s"the cases missed candidate pairs, a live L0 or a fold: $seen")
   }
 
-  test("a probe refuses a torn L0: only the band L0, or only the sig L0, " +
-      "dropped after a leveled append") {
-    val corpus = randomCorpus(3)
-    val (sigT, bandT) = ("graft_test_tornsig", "graft_test_tornband")
-    Seq(bandT, sigT).foreach { dropped =>
-      try {
-        leveledIndex(corpus.filter(_._1 % 3 == 0),
-          Seq(corpus.filter(_._1 % 3 == 1)), Int.MaxValue, sigT, bandT)
-        spark.sql(s"DROP TABLE ${dropped}_l0")
-        val e = intercept[IllegalStateException] {
-          probe(corpus.filter(_._1 % 3 == 2), sigT, bandT)
-        }
-        assert(e.getMessage.contains("torn dedup index"), s"$dropped: $e")
-      } finally Dedup.dropDedupIndex(spark, sigT, bandT)
-    }
-  }
-
   test("a fold whose band rewrite fails publishes nothing: the sig main " +
       "level and its L0 keep their rows, and no _folding sibling is left") {
     val corpus = randomCorpus(5)
@@ -525,20 +509,87 @@ class DedupPropertySpec extends SparkSpec {
       leveledIndex(corpus.filter(_._1 % 3 == 0),
         Seq(corpus.filter(_._1 % 3 == 1), corpus.filter(_._1 % 3 == 2)),
         foldEvery = 3, sigT, bandT)
-      // a band L0 without an `id` column: the band sibling's unionByName
-      // fails after the sig sibling was written
-      spark.sql(s"DROP TABLE ${bandT}_l0")
-      spark.range(3).select(col("id").as("bkey"))
-        .write.format("parquet").saveAsTable(s"${bandT}_l0")
+      // a band main level without an `id` column: the band sibling's
+      // unionByName fails after the sig sibling was written
+      spark.sql(s"DROP TABLE $bandT")
+      spark.range(3).select(col("id").as("bkey")).write.format("parquet")
+        .bucketBy(4, "bkey").sortBy("bkey").saveAsTable(bandT)
       def counts() = (spark.table(sigT).count(), spark.table(s"${sigT}_l0").count())
       val before = counts()
       intercept[org.apache.spark.sql.AnalysisException] {
-        Dedup.foldDedupIndexL0(spark, sigT, bandT)
+        Dedup.foldDedupIndexL0(spark, sigT, bandT, 32, 16)
       }
       assert(counts() == before, "a failed fold published the sig table")
       val folding = spark.catalog.listTables().collect().map(_.name)
         .filter(_.endsWith("_folding"))
       assert(folding.isEmpty, s"a failed fold left ${folding.mkString(", ")}")
+    } finally Dedup.dropDedupIndex(spark, sigT, bandT)
+  }
+
+  test("a fold over 1-3 L0 generations leaves the same main levels as " +
+      "buildDedupIndex over the same docs") {
+    // per case: (L0 generations, L0 live before the explicit fold, a fold
+    // ran inside the appends)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Boolean, Boolean)]
+    val gen = leveledCaseGen.map(c =>
+      if (c.gens.isEmpty) c.copy(gens = Seq(c.batch)) else c)
+    def rows(t: String, cols: String*) = spark.table(t).select(cols.map(col): _*)
+      .collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }.mkString("|")).sorted.toSeq
+    val prop = Prop.forAllNoShrink(gen) { c =>
+      val (sigT, bandT) = (s"graft_test_fdsig_${seen.size}",
+        s"graft_test_fdband_${seen.size}")
+      val (sigB, bandB) = (s"graft_test_fbsig_${seen.size}",
+        s"graft_test_fbband_${seen.size}")
+      try {
+        leveledIndex(c.main, c.gens, c.foldEvery, sigT, bandT)
+        val live = spark.catalog.tableExists(s"${sigT}_l0")
+        Dedup.foldDedupIndexL0(spark, sigT, bandT, 32, 16)
+        seen += ((c.gens.size, live, c.foldEvery <= c.gens.size))
+        Dedup.buildDedupIndex(docsDf(c.main ++ c.gens.flatten), "doc_id",
+          "text", shingleSize = 3, numHashes = 32, bands = 16, sigB, bandB,
+          buckets = 4)
+        // evaluated here: `&&` takes its right side by name, which would
+        // run after the finally below dropped the tables
+        val l0Left = spark.catalog.tableExists(s"${sigT}_l0")
+        val sameBands = rows(bandT, "bkey", "id") == rows(bandB, "bkey", "id")
+        val sameSigs = rows(sigT, "id", "sig") == rows(sigB, "id", "sig")
+        Prop(!l0Left) :| "L0 left after the fold" &&
+          Prop(sameBands) :|
+            s"${c.gens.size} generations: folded (bkey, id) rows differ" &&
+          Prop(sameSigs) :|
+            s"${c.gens.size} generations: folded (id, sig) rows differ"
+      } finally {
+        Dedup.dropDedupIndex(spark, sigT, bandT)
+        Dedup.dropDedupIndex(spark, sigB, bandB)
+      }
+    }
+    val params = Test.Parameters.default.withMinSuccessfulTests(4)
+      .withWorkers(1).withInitialSeed(Seed(20261020L))
+    val res = Test.check(params, prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(seen.forall(c => c._2 || c._3) && seen.exists(_._1 > 1),
+      s"the cases missed a fold, or never folded 2+ generations: $seen")
+  }
+
+  test("a leveled append runs one Spark write job and writes no band L0") {
+    val corpus = randomCorpus(7)
+    val (sigT, bandT) = ("graft_test_apsig", "graft_test_apband")
+    try {
+      leveledIndex(corpus.filter(_._1 % 3 == 0), Nil, Int.MaxValue, sigT, bandT)
+      Seq(1, 2).foreach { r =>
+        val jobs = graft.core.SparkJobs.during(spark) {
+          Dedup.indexAppendLeveled(docsDf(corpus.filter(_._1 % 3 == r)),
+            "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
+            sigT, bandT, batchTag = s"g$r", foldEvery = Int.MaxValue)
+        }
+        assert(jobs == 1, s"append g$r started $jobs Spark jobs")
+      }
+      assert(spark.catalog.tableExists(s"${sigT}_l0"))
+      assert(!spark.catalog.tableExists(s"${bandT}_l0"),
+        "a leveled append wrote a band L0 table")
     } finally Dedup.dropDedupIndex(spark, sigT, bandT)
   }
 }

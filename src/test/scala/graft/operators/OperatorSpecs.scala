@@ -37,9 +37,9 @@ class DedupSpec extends SparkSpec {
     val d = docs(1L -> "a b c d e f g", 2L -> "x", 3L -> "p q r")
     val fast = Dedup.minhashSigs(d, "doc_id", "text", 3, 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val agg = Dedup.minhashSigsAgg(d, "doc_id", "text", 3, 16)
+    val agg = DedupTwins.minhashSigsAgg(d, "doc_id", "text", 3, 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val slow = Dedup.withMinhash(d.select(col("doc_id").as("id"), col("text")),
+    val slow = DedupTwins.withMinhash(d.select(col("doc_id").as("id"), col("text")),
         "text", "sig", 3, 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](2)).toMap
     assert(fast == slow)
@@ -48,7 +48,7 @@ class DedupSpec extends SparkSpec {
     val real = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
     val fastR = Dedup.minhashSigs(real, "doc_id", "text", 3, 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val aggR = Dedup.minhashSigsAgg(real, "doc_id", "text", 3, 32)
+    val aggR = DedupTwins.minhashSigsAgg(real, "doc_id", "text", 3, 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(fastR == aggR)
   }
@@ -58,7 +58,7 @@ class DedupSpec extends SparkSpec {
       1L -> "the quick brown fox jumps over the lazy dog today",
       2L -> "the quick brown fox jumps over the lazy cat today",
       3L -> "zzz yyy xxx www vvv uuu ttt sss rrr qqq")
-    val sigs = Dedup.withSimhash(d, "text", "sh").collect()
+    val sigs = DedupTwins.withSimhash(d, "text", "sh").collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sigs(1L), sigs(2L)) < ham(sigs(1L), sigs(3L)))
@@ -91,11 +91,11 @@ class DedupSpec extends SparkSpec {
 
   test("simhashSigs (fused expr) = explode-agg twin = higher-order twin") {
     val real = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
-    val slow = Dedup.withSimhash(real, "text", "sh")
+    val slow = DedupTwins.withSimhash(real, "text", "sh")
       .select("doc_id", "sh").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fast = Dedup.simhashSigs(real, "doc_id", "text", "sh")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val agg = Dedup.simhashSigsAgg(real, "doc_id", "text", "sh")
+    val agg = DedupTwins.simhashSigsAgg(real, "doc_id", "text", "sh")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == slow)
     assert(agg == slow)
@@ -104,7 +104,7 @@ class DedupSpec extends SparkSpec {
     val tricky = docs(1L -> "a  b", 2L -> " lead", 3L -> "trail ")
     val f2 = Dedup.simhashSigs(tricky, "doc_id", "text", "sh")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val a2 = Dedup.simhashSigsAgg(tricky, "doc_id", "text", "sh")
+    val a2 = DedupTwins.simhashSigsAgg(tricky, "doc_id", "text", "sh")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(f2 == a2)
   }
@@ -164,7 +164,7 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSet
     val fused = canon(Dedup.cdcChunks(corpus, "doc_id", "text"))
-    val slow = canon(Dedup.cdcChunksDeclarative(corpus, "doc_id", "text"))
+    val slow = canon(DedupTwins.cdcChunksDeclarative(corpus, "doc_id", "text"))
     assert(fused == slow)
     assert(fused.nonEmpty)
     // chunks tile each doc exactly: starts = 1, prev_end + 1; final end = n

@@ -168,11 +168,10 @@ class IngestPublishSpec extends SparkSpec {
           assert(s.generations.exists(_.startsWith("part-b2-")),
             s"batch 2 should be a generation file: ${s.root.map(_.getName)}")
           // the tick died after its rename, before its index append: the
-          // index's L0 level (batch 2 alone, the fold ran on tick 1) is lost
-          Seq("graft_bkt_ingsig", "graft_bkt_ingband").foreach { p =>
-            spark.sql("DROP TABLE " +
-              graft.operators.ScaleOps.bucketTableName(p, s.corpus) + "_l0")
-          }
+          // index's L0 level (batch 2 alone, the fold ran on tick 1), one
+          // signature table, is lost
+          spark.sql("DROP TABLE " + graft.operators.ScaleOps
+            .bucketTableName("graft_bkt_ingsig", s.corpus) + "_l0")
         }
         // the checkpoint never recorded batch 2: a fresh checkpoint whose
         // numbering lands on 0, 1, 2 again replays them against the table
