@@ -1649,19 +1649,19 @@ private[graft] trait CatalogPart6 extends CatalogPart5 {
     q191.oracle)
 
   /** The standing dedup index through its FULL maintenance lifecycle
-    * ([[graft.operators.Dedup.indexAppendLeveled]] /
-    * [[graft.operators.Dedup.foldDedupIndexL0]]): generation 1 of the
-    * index is built from the doc_id % 4 ∈ {1, 2} slices, generation 2 (the
-    * % 4 == 3 slice) is APPENDED — one O(batch) write into the unbucketed
-    * L0 signature table — and, at `foldEvery = 1`, immediately FOLDED into
-    * the main levels as one sorted file per bucket (O(corpus) parquet IO,
-    * no re-signing); the % 4 == 0 ingest batch probes the result. The corpus
-    * seen by the probe is exactly q221's (% 4 != 0), so the output — and
-    * the oracle — is identical to q221's: a lost or doubled generation, a
-    * bucket-spec drift, or a fold that corrupts rows all diverge. The
-    * build and the tagged append are idempotent per session (one-shot
-    * guards), so repeated runs (bench passes, verify re-runs) read the
-    * same two-generation index. */
+    * ([[graft.operators.Dedup.buildDedupIndex]] →
+    * [[graft.operators.Dedup.foldDedupIndexL0]] →
+    * [[graft.operators.Dedup.minhashCandidatesIndexedTables]]): the main
+    * level is built from the doc_id % 4 ∈ {1, 2} slices, the % 4 == 3
+    * slice is FOLDED into it as one sorted file per bucket (O(corpus)
+    * parquet IO; only the folded docs are signed), and the % 4 == 0
+    * ingest batch probes the result. The corpus seen by the probe is
+    * exactly q221's (% 4 != 0), so the output — and the oracle — is
+    * identical to q221's: a lost or doubled fold, a bucket-spec drift, or
+    * a fold that corrupts rows all diverge. The build is write-once per
+    * session and the fold signs only docs the main level lacks, so a
+    * repeated run (bench passes, verify re-runs) folds nothing and reads
+    * the same index. */
   private[graft] val q225 = QuerySpec(
     "q225_dedup_index_lifecycle",
     (s, dir) => {
@@ -1673,9 +1673,9 @@ private[graft] trait CatalogPart6 extends CatalogPart5 {
         docs.where(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2),
         "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
         sigTable = sigT, bandTable = bandT)
-      Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 3),
+      Dedup.foldDedupIndexL0(docs.where(col("doc_id") % 4 === 3),
         "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
-        sigTable = sigT, bandTable = bandT, batchTag = "gen2", foldEvery = 1)
+        sigTable = sigT, bandTable = bandT)
       Dedup.minhashCandidatesIndexedTables(
           docs.where(col("doc_id") % 4 === 0),
           "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
@@ -1688,16 +1688,18 @@ private[graft] trait CatalogPart6 extends CatalogPart5 {
     * ([[graft.streaming.EventStreams.corpusIngestSinkIndexed]] via
     * [[graft.streaming.EventStreams.corpusIngestReplayIndexed]]): three
     * ingest ticks (doc_id % 3 slices), each a checkpointed AvailableNow
-    * run that probes the STANDING bucketed dedup index, admits survivors
-    * through the corpusIngestSink drop semantics, swaps the corpus table
-    * effectively-once, and APPENDS the admitted docs' signatures to the
-    * index — the corpus is never re-shingled. The oracle walks the same
+    * run that probes the STANDING bucketed dedup index (its main level
+    * plus the earlier ticks' generation files as L0), admits survivors
+    * through the corpusIngestSink drop semantics and publishes them as
+    * one generation file of the corpus table, effectively-once — the
+    * corpus is never re-shingled. The oracle walks the same
     * greedy batch-sequential admission in SQL over the q19 candidate-pair
     * CTEs: batch k drops a doc paired (est ≥ 0.8) with any earlier
     * survivor, plus the greater id of each in-batch pair; pairs with
     * non-admitted earlier docs are ignored (they are not in the corpus,
     * exactly as the sink's index never saw them). A wrong drop set, a
-    * stale index (missing append), or a lost batch all diverge. */
+    * stale index (a generation the probe missed), or a lost batch all
+    * diverge. */
   private[graft] val q226 = QuerySpec(
     "q226_stream_ingest_indexed",
     (s, dir) => graft.streaming.EventStreams.corpusIngestReplayIndexed(

@@ -304,9 +304,9 @@ object Dedup {
     * — same oracle, property-tested equality.
     *
     * Ids must be disjoint across corpus and batch (the caller's identity
-    * contract, as in the unindexed form). After admission, a production
-    * job appends the admitted batch's signatures to the index's L0 level
-    * ([[indexAppendLeveled]]), and the fold's per-bucket rewrite keeps the
+    * contract, as in the unindexed form). Docs admitted after the build
+    * reach the probe as its `l0Docs` until [[foldDedupIndexL0]] moves them
+    * into the main level, whose per-bucket rewrite keeps the
     * one-file-per-bucket sort guarantee; this function is the per-batch
     * READ path that makes that index pay. */
   def minhashCandidatesIndexed(oldDf: DataFrame, newDf: DataFrame,
@@ -326,8 +326,7 @@ object Dedup {
     * corpus: signatures bucketed+sorted on id, band keys bucketed+sorted
     * on the fused [[fusedBandKey]]. The write pays the corpus shuffle
     * exactly once; [[minhashCandidatesIndexedTables]] is the per-batch
-    * read path, [[indexAppendLeveled]]/[[foldDedupIndexL0]] the
-    * maintenance path. */
+    * read path, [[foldDedupIndexL0]] the maintenance path. */
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
       sigTable: String, bandTable: String, buckets: Int = 32): Unit = {
@@ -340,32 +339,39 @@ object Dedup {
   }
 
   /** The per-ingest-batch probe of [[minhashCandidatesIndexed]], reading
-    * the standing index TABLES directly (whatever built or appended them —
-    * [[buildDedupIndex]], [[indexAppendLeveled]], or a prior
-    * [[minhashCandidatesIndexed]] call). Same output contract and scale
-    * shape as [[minhashCandidatesIndexed]]. The L0 level holds signatures
-    * only; its band keys are derived here, batch-grain, on every read. */
+    * the standing index's main level TABLES directly (whatever built or
+    * folded them — [[buildDedupIndex]], [[foldDedupIndexL0]], or a prior
+    * [[minhashCandidatesIndexed]] call) plus the index's L0 level,
+    * `l0Docs`: the corpus docs admitted since the main level was built or
+    * last folded (the ingest sink passes its generation files). L0 is
+    * batch-grain, so the probe signs it on every call, as it signs the
+    * batch, and derives its band keys; nothing of it is stored. Same
+    * output contract and scale shape as [[minhashCandidatesIndexed]] over
+    * corpus = main ∪ L0. */
   def minhashCandidatesIndexedTables(newDf: DataFrame,
       idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
-      sigTable: String, bandTable: String): DataFrame = {
+      sigTable: String, bandTable: String,
+      l0Docs: Option[DataFrame] = None): DataFrame = {
     val spark = newDf.sparkSession
     val sigsOld = spark.table(sigTable)
     val bandsOld = spark.table(bandTable)
-    // leveled appends ([[indexAppendLeveled]]) park recent generations in
-    // an unbucketed L0 signature table until the next fold; a probe between
-    // folds must see corpus = main ∪ L0. Auto-detected so the no-L0 plan (a
-    // freshly built or folded index, e.g. q221/q225) is byte-identical to
-    // the pre-L0 shape; when L0 is live its rows join as SEPARATE small
-    // branches — the main level's exchange-free bucketed scans are never
-    // unioned into (a union would re-exchange the corpus side and forfeit
-    // the layout).
-    val hasL0 = spark.catalog.tableExists(l0Of(sigTable))
-    val sigsL0 = if (hasL0) Some(spark.table(l0Of(sigTable))) else None
-    // the batch side: |new| signatures, persisted because they feed the
-    // band probe AND the est-jaccard join-backs
-    val sigsNew = graft.core.CacheScope.persist(
-      minhashSigs(newDf, idCol, textCol, shingleSize, numHashes))
+    // The batch and L0 signatures each feed a band probe AND the
+    // est-jaccard join-backs, so each is signed once and sealed
+    // (`localCheckpoint`, eager), not persisted: under AQE every scan of a
+    // persisted frame is its own table-cache stage, and the batch band-key
+    // exchange above those scans was sometimes run twice, concurrently,
+    // in one tick. A sealed frame is a plain RDD scan, so the three uses
+    // of that exchange are one reused stage.
+    def signed(df: DataFrame): DataFrame =
+      minhashSigs(df, idCol, textCol, shingleSize, numHashes).localCheckpoint(true)
+    // with no L0 (a freshly built or folded index, e.g. q221/q225) the plan
+    // has no L0 branch; with one, its rows join as SEPARATE small branches
+    // — the main level's exchange-free bucketed scans are never unioned
+    // into (a union would re-exchange the corpus side and forfeit the
+    // layout)
+    val sigsL0 = l0Docs.map(signed)
+    val sigsNew = signed(newDf)
     val bandsNew = bandKeys(sigsNew, numHashes, bands)
     // new × old: the batch probes the corpus buckets; merge-hinted so the
     // corpus side keeps its exchange-free bucketed-scan shape (AQE would
@@ -376,10 +382,8 @@ object Dedup {
       .join(bandsOld.as("r").hint("merge"), Seq("bkey"))
       .select(least(col("l.id"), col("r.id")).as("id_a"),
         greatest(col("l.id"), col("r.id")).as("id_b"))
-    // new × L0: both sides batch-grain (≤ foldEvery pending batches), so
-    // the L0 side — its band keys derived from its signatures — is
-    // broadcast-hinted, pinned, not left to the size estimate; this branch
-    // exists only between folds
+    // new × L0: both sides batch-grain (≤ foldEvery batches), so the L0
+    // side is broadcast-hinted, pinned, not left to the size estimate
     val newL0 = sigsL0.map { s0 =>
       bandsNew.as("l")
         .join(bandKeys(s0, numHashes, bands).as("r").hint("broadcast"),
@@ -396,21 +400,21 @@ object Dedup {
       .distinct()
     // est-jaccard join-backs: each pair endpoint's signature comes from
     // the bucketed corpus table (merge-hinted: sigs side pre-sorted and
-    // co-located, only the pair-grain side exchanges), the L0 side table
-    // (small, plain join) when live, OR the batch sigs (left joins +
-    // coalesce — a union of the sig frames would re-exchange the corpus
-    // side and forfeit the layout). Ids are disjoint across all three by
-    // the maintenance contract, so coalesce order cannot matter. The L0
-    // side is broadcast-hinted, like the new × L0 band join.
+    // co-located, only the pair-grain side exchanges), the L0 signatures
+    // when given, OR the batch sigs (left joins + coalesce — a union of
+    // the sig frames would re-exchange the corpus side and forfeit the
+    // layout). Ids are disjoint across all three by the caller's contract,
+    // so coalesce order cannot matter. The L0 side is broadcast-hinted,
+    // like the new × L0 band join.
     def l0SigJoin(df: DataFrame, idAlias: String, out: String): DataFrame =
       sigsL0 match {
-        case None => df // no-L0 plan stays byte-identical to the pre-L0 shape
+        case None => df
         case Some(s0) => df.join(
           s0.select(col("id").as(idAlias), col("sig").as(out)).hint("broadcast"),
           Seq(idAlias), "left")
       }
     def sigCoalesce(oldC: String, l0C: String, newC: String): Column =
-      if (hasL0) coalesce(col(oldC), col(l0C), col(newC))
+      if (sigsL0.isDefined) coalesce(col(oldC), col(l0C), col(newC))
       else coalesce(col(oldC), col(newC))
     val withA = l0SigJoin(pairs
       .join(sigsOld.select(col("id").as("id_a"), col("sig").as("_sa_old"))
@@ -430,105 +434,29 @@ object Dedup {
           .cast("double") / lit(numHashes)).as("est_jaccard"))
   }
 
-  /** One-shot guard registry for index maintenance: a leveled append
-    * tagged (tables, tag) runs once per JVM session — the same idempotence
-    * contract as [[graft.operators.ScaleOps.ensureBucketed]]'s write-once,
-    * extended to MUTATIONS so a repeated caller (bench warmup + timed
-    * passes, verify re-runs, sweep specs) cannot double-append a
-    * generation. Session-scoped is the right scope: the metastore is
-    * in-memory and the warehouse a per-JVM temp dir, so the tables
-    * themselves are session-scoped too. Keys are
-    * `<ns>|<sigTable>|<bandTable>|<batchTag>` in two namespaces:
-    * `appendL0` (applied appends) and `pendingL0` (generations not yet
-    * folded). */
-  private val appliedIndexOps =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Every registry key of one index, in both namespaces. */
-  private def indexKeys(sigTable: String, bandTable: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val tables = s"|$sigTable|$bandTable|"
-    appliedIndexOps.asScala.filter(_.contains(tables)).toSeq
-  }
-
-  private def pendingKeys(sigTable: String, bandTable: String): Seq[String] =
-    indexKeys(sigTable, bandTable).filter(_.startsWith("pendingL0|"))
-
-  /** L0 level name of a standing signature table (leveled appends). */
-  private def l0Of(table: String): String = table + "_l0"
-
-  /** Append one ingest batch's signatures to the STANDING dedup index — the
-    * maintenance half of the production loop whose read half is
-    * [[minhashCandidatesIndexedTables]]: admit a batch against the index,
-    * then append the admitted docs so the NEXT batch dedups against them
-    * too, never recomputing the corpus. LEVELED (L0→L1, the LSM shape):
-    * each batch lands in ONE plain unbucketed L0 table, `<sigTable>_l0`
-    * (one append of batch-partition-many files — no bucket fan-out, no
-    * bucket-spec shuffle; a bucketed per-batch append would dirty every
-    * bucket and tie the O(corpus) rewrite cadence to the batch cadence),
-    * and every `foldEvery`-th pending generation is FOLDED into the main
-    * bucketed level ([[foldDedupIndexL0]]). L0 holds signatures only: its
-    * band keys are a pure, batch-grain function of them, so the probe and
-    * the fold derive them on read — one Spark write per append, and no
-    * state in which half of an L0 generation exists. Probe-side,
-    * [[minhashCandidatesIndexedTables]] auto-detects a live L0 and joins
-    * its (small, batch-grain) rows into the candidate and signature
-    * lookups WITHOUT touching the main level's exchange-free bucketed
-    * scans — the trade is a bounded extra join against ≤ foldEvery batches
-    * of rows, and the payoff is a compaction cadence chosen by
-    * `foldEvery`, decoupled from how often batches arrive.
-    *
-    * Idempotent per (session, tables, batchTag): a replayed call with the
-    * same tag is a no-op, also after its generation was folded, so
-    * foreachBatch replays after a crash cannot double a generation. The
-    * fold count is tracked by the same session-scoped registry
-    * (consistent: tables live in the in-memory metastore, so registry and
-    * tables die together). */
-  def indexAppendLeveled(batch: DataFrame, idCol: String, textCol: String,
+  /** Fold docs into the main bucketed levels — the maintenance half of
+    * the production loop whose read half is
+    * [[minhashCandidatesIndexedTables]]. LEVELED (L0→L1, the LSM shape):
+    * admitted docs wait in the caller's L0 (the ingest sink's generation
+    * files), which the probe signs per call, and every so often the
+    * caller folds them in here, at a cadence decoupled from how often
+    * batches arrive. Only the `docs` whose id the main sig level lacks are
+    * signed; the sig level is rewritten from its main level ∪ their
+    * signatures, the band level from its main level ∪ their band keys
+    * (under the caller's `(numHashes, bands)` layout, as the probe derives
+    * them), each as one sorted file per bucket into a `_folding` sibling.
+    * Only when BOTH siblings are written is the fold published (drop main,
+    * rename sibling, per table); a failed write drops the siblings and
+    * leaves the main levels as they were, and only a crash inside the
+    * publish's catalog calls can still tear them. Idempotent by content:
+    * folding docs the main level already holds writes nothing, so a
+    * repeated fold needs no registry. O(main + docs) parquet IO; after
+    * the fold the probe's no-L0 plan and full sort-elision apply to the
+    * folded docs. */
+  def foldDedupIndexL0(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,
-      sigTable: String, bandTable: String, batchTag: String,
-      foldEvery: Int = 8): Unit = appliedIndexOps.synchronized {
-    require(foldEvery >= 1, "foldEvery must be >= 1")
-    // the guard key is recorded only AFTER the L0 write succeeds: the
-    // registry must never claim an append that didn't finish (repairing a
-    // crash inside it is the caller's job — [[dropDedupIndex]], see the
-    // replay-repair branch in corpusIngestSinkIndexed). Serialized on the
-    // registry: maintenance ops are rare and short relative to what they
-    // guard.
-    val key = s"appendL0|$sigTable|$bandTable|$batchTag"
-    if (appliedIndexOps.contains(key)) return
-    graft.operators.ScaleOps.dropOrphanLocation(batch.sparkSession, l0Of(sigTable))
-    minhashSigs(batch, idCol, textCol, shingleSize, numHashes)
-      .write.mode("append").format("parquet").saveAsTable(l0Of(sigTable))
-    appliedIndexOps.add(key)
-    // fold cadence: count this session's pending L0 generations from the
-    // registry (zero IO; registry and L0 table are both session-scoped).
-    // Pending markers are a SEPARATE namespace from the idempotence keys:
-    // folds clear pending markers (folded generations no longer count
-    // toward the next fold) but must never clear the append keys — a
-    // replayed batchTag after a fold would otherwise re-append rows the
-    // fold already moved into the main level.
-    appliedIndexOps.add(s"pendingL0|$sigTable|$bandTable|$batchTag")
-    if (pendingKeys(sigTable, bandTable).size >= foldEvery)
-      foldDedupIndexL0(batch.sparkSession, sigTable, bandTable, numHashes, bands)
-    ()
-  }
-
-  /** Fold the L0 signature table into the main bucketed levels: the sig
-    * level is rewritten from its main level ∪ L0, the band level from its
-    * main level ∪ the band keys of the L0 signatures (derived under the
-    * caller's `(numHashes, bands)` layout, as the probe derives them),
-    * each as one sorted file per bucket into a `_folding` sibling. Only
-    * when BOTH siblings are written is the fold published (drop main,
-    * rename sibling, per table), and the L0 table is dropped after both
-    * renames. A failed write drops the siblings and leaves the old index —
-    * main levels and L0 — as it was; only a crash inside the publish's
-    * catalog calls can still tear it. O(main + L0) parquet IO; the only
-    * recompute is the batch-grain banding of L0 (no shingling, no
-    * signing). After the fold the probe's no-L0 fast path and full
-    * sort-elision are restored. Safe to call with no pending L0 (no-op). */
-  def foldDedupIndexL0(spark: org.apache.spark.sql.SparkSession,
-      sigTable: String, bandTable: String, numHashes: Int, bands: Int): Unit = {
+      sigTable: String, bandTable: String): Unit = {
+    val spark = docs.sparkSession
     val cat = spark.sessionState.catalog
     def meta(t: String) = cat.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(t))
@@ -543,47 +471,41 @@ object Dedup {
       val m = meta(t)
       spark.read.schema(m.schema).parquet(m.location.toString)
     }
-    if (spark.catalog.tableExists(l0Of(sigTable))) {
-      val l0 = raw(l0Of(sigTable))
-      val folds = Seq(sigTable -> l0, bandTable -> bandKeys(l0, numHashes, bands))
-      try folds.foreach { case (t, l0Rows) =>
-        val spec = meta(t).bucketSpec.getOrElse(
-          sys.error(s"foldDedupIndexL0('$t'): not a bucketed table"))
-        graft.operators.ScaleOps.writeBucketed(raw(t).unionByName(l0Rows),
-          t + "_folding", spec.numBuckets, spec.bucketColumnNames)
-      } catch {
-        case e: Throwable =>
-          folds.foreach { case (t, _) =>
-            spark.sql(s"DROP TABLE IF EXISTS ${t}_folding")
-          }
-          throw e
-      }
-      folds.foreach { case (t, _) =>
-        spark.sql(s"DROP TABLE $t")
-        spark.sql(s"ALTER TABLE ${t}_folding RENAME TO $t")
-      }
-      spark.sql(s"DROP TABLE ${l0Of(sigTable)}")
+    // sealed: both siblings read the new signatures, and the emptiness
+    // check below must not sign them a third time
+    val fresh = minhashSigs(
+      docs.join(raw(sigTable).select(col("id").as(idCol)), Seq(idCol), "left_anti"),
+      idCol, textCol, shingleSize, numHashes).localCheckpoint(true)
+    if (fresh.isEmpty) return
+    val folds = Seq(sigTable -> fresh, bandTable -> bandKeys(fresh, numHashes, bands))
+    try folds.foreach { case (t, rows) =>
+      val spec = meta(t).bucketSpec.getOrElse(
+        sys.error(s"foldDedupIndexL0('$t'): not a bucketed table"))
+      graft.operators.ScaleOps.writeBucketed(raw(t).unionByName(rows),
+        t + "_folding", spec.numBuckets, spec.bucketColumnNames)
+    } catch {
+      case e: Throwable =>
+        folds.foreach { case (t, _) =>
+          spark.sql(s"DROP TABLE IF EXISTS ${t}_folding")
+        }
+        throw e
     }
-    // folded generations are no longer pending: clear their PENDING markers
-    // so the next fold counts only new generations. The appendL0 idempotence
-    // keys stay — a replayed batchTag must remain a no-op after its rows
-    // were folded into the main level.
-    pendingKeys(sigTable, bandTable).foreach(appliedIndexOps.remove)
+    folds.foreach { case (t, _) =>
+      spark.sql(s"DROP TABLE $t")
+      spark.sql(s"ALTER TABLE ${t}_folding RENAME TO $t")
+    }
   }
 
-  /** Drop a standing dedup index — both main levels and the L0 level — and
-    * forget its maintenance guards, so the next [[buildDedupIndex]]
-    * rebuilds from scratch: the repair path after a crash that may have
-    * landed between a corpus swap and the matching [[indexAppendLeveled]]
-    * (or mid-append), where the CORPUS TABLE is the source of truth and an
-    * O(corpus) rebuild on the rare replay is the honest recovery. */
+  /** Drop a standing dedup index — both main levels — so the next
+    * [[buildDedupIndex]] rebuilds from scratch: the repair path after a
+    * crash that may have landed between a corpus compaction and the
+    * matching [[foldDedupIndexL0]] (or mid-fold), where the CORPUS TABLE is
+    * the source of truth and an O(corpus) rebuild on the rare replay is
+    * the honest recovery. */
   def dropDedupIndex(spark: org.apache.spark.sql.SparkSession,
       sigTable: String, bandTable: String): Unit =
-    appliedIndexOps.synchronized {
-      Seq(sigTable, bandTable, l0Of(sigTable)).foreach { t =>
-        if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE $t")
-      }
-      indexKeys(sigTable, bandTable).foreach(appliedIndexOps.remove)
+    Seq(sigTable, bandTable).foreach { t =>
+      if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE $t")
     }
 
   /** Corpus version diff: per-doc status between two snapshots of a

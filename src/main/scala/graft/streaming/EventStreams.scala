@@ -307,7 +307,7 @@ object EventStreams {
     * Scale shape: per-batch cost is |batch| signatures + a band join
     * against the corpus index, plus the O(corpus) rewrite — the indexed
     * twin [[corpusIngestSinkIndexed]] keeps the band table standing and
-    * appends one generation file per tick instead. */
+    * publishes one generation file per plain tick instead. */
   def corpusIngestSink(docs: DataFrame, tableDir: String,
       checkpointDir: String, minJaccard: Double = 0.8,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
@@ -331,22 +331,27 @@ object EventStreams {
 
   /** [[corpusIngestSink]] with the STANDING dedup index in the loop — the
     * composed production form of the whole round-16/17 amortization
-    * program: per ingest batch, the corpus is never re-shingled or
-    * re-signed. The standing bucketed sig/band index
-    * ([[graft.operators.Dedup.buildDedupIndex]], table names derived from
-    * `tableDir`) is built once per (session, corpus); each batch
-    *  1. probes it ([[graft.operators.Dedup
-    *     .minhashCandidatesIndexedTables]] — batch-grain work only),
+    * program: per ingest batch, the standing corpus is never re-shingled
+    * or re-signed. The index is leveled, and both levels come from the
+    * table ([[tableFiles]]): the main level is the bucketed sig/band index
+    * over its base files ([[graft.operators.Dedup.buildDedupIndex]], table
+    * names derived from `tableDir`, built once per (session, corpus)), and
+    * L0 is its generation files themselves. Each batch
+    *  1. probes both levels ([[graft.operators.Dedup
+    *     .minhashCandidatesIndexedTables]] with the generation files as
+    *     `l0Docs` — batch-grain work only: the batch and at most
+    *     `foldEvery` - 1 generations are signed),
     *  2. admits survivors through the same drop semantics as
     *     [[corpusIngestSink]] (pair touches corpus → batch side drops;
-    *     both-new pair → greater id drops),
+    *     both-new pair → greater id drops), and
     *  3. publishes the survivors as one immutable generation file of the
-    *     corpus table, and every `foldEvery`-th tick compacts the table
-    *     instead ([[admitBatch]]; effectively-once either way), and
-    *  4. APPENDS the admitted docs' signatures to the index's L0 level
-    *     ([[graft.operators.Dedup.indexAppendLeveled]], O(batch), tagged
-    *     by batchId; every `foldEvery`-th append folds L0 into the main
-    *     level) so the NEXT batch dedups against them.
+    *     corpus table, which is also their L0 append: a plain tick writes
+    *     no index data. Every `foldEvery`-th tick compacts the table
+    *     instead ([[admitBatch]]; effectively-once either way) and then
+    *     folds the compacted table into the main level
+    *     ([[graft.operators.Dedup.foldDedupIndexL0]], which signs only the
+    *     docs the main level lacks: the folded generations and the
+    *     survivors), so the main level again covers every base file.
     * Same quality/blocklist gates, same metrics rows, same output as the
     * unindexed sink (gated in EventStreamsSpec, property-gated in
     * IngestAdmissionSpec, and by the q226 catalog row).
@@ -354,16 +359,16 @@ object EventStreams {
     * Crash consistency: the corpus table is the source of truth. A
     * replayed batch the table already holds ([[lastApplied]] == batchId:
     * its generation file was renamed in, or its compaction swapped in)
-    * may have died anywhere between that publish and the end of the index
-    * append — the index could be missing the batch's generation or be
-    * torn mid-append — so the replay branch DROPS the index and lets the
-    * next probe rebuild it from the standing corpus
+    * may have died anywhere between a compaction and the end of its fold
+    * — the main level could lack the compacted docs or be torn
+    * mid-publish — so the replay branch DROPS the index and lets the next
+    * probe rebuild it from the base files
     * ([[graft.operators.Dedup.dropDedupIndex]]; O(corpus) once, on the
     * rare crash-replay path only). A crash before or inside the publish is
     * [[graft.sources.Commit]]'s to repair, and the replay publishes the
-    * batch again. A whole-JVM death loses the session-scoped index tables
-    * entirely and the same rebuild runs on resume — consistent by
-    * construction. */
+    * batch again. A whole-JVM death loses the session-scoped main level
+    * and the same rebuild runs on resume; L0 lives in the table and needs
+    * no repair. */
   def corpusIngestSinkIndexed(docs: DataFrame, tableDir: String,
       checkpointDir: String, minJaccard: Double = 0.8,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 16,
@@ -381,33 +386,34 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
+        val fs = fsOf(spark, tableDir)
         // replay repair: if the table already holds THIS batch, the crash
-        // window includes the index append — drop the index now;
-        // admitBatch below will skip the publish and the next batch's
-        // probe rebuilds the index from the published corpus
-        if (lastApplied(fsOf(batch.sparkSession, tableDir), tableDir) == batchId)
-          graft.operators.Dedup.dropDedupIndex(batch.sparkSession, sigT, bandT)
+        // window includes the fold — drop the index now; admitBatch below
+        // will skip the publish and the next batch's probe rebuilds the
+        // index from the published corpus
+        if (lastApplied(fs, tableDir) == batchId)
+          graft.operators.Dedup.dropDedupIndex(spark, sigT, bandT)
         admitBatch(batch, batchId, tableDir, minJaccard, metricsDir,
             minQuality, blockedPatterns, compactEvery = foldEvery,
-            // O(batch) index maintenance: the admitted docs join the index
-            // so the NEXT batch's probe sees them; idempotent per batchId.
-            // LEVELED (round-17 verdict item 3): the batch lands in plain
-            // L0 signature table — no per-batch fan-out of `buckets` files,
-            // no bucket-spec shuffle — and every foldEvery-th batch
-            // folds L0 into the main bucketed level (O(corpus) IO at a
-            // cadence the caller chooses, decoupled from batch cadence).
-            // The probe reads main ∪ L0 automatically between folds.
-            onApplied = keep => graft.operators.Dedup.indexAppendLeveled(
-              keep, "doc_id", "text", shingleSize, numHashes, bands, sigT,
-              bandT, batchTag = batchId.toString, foldEvery = foldEvery)) {
+            // the swap deleted the generation files: the fold reads the
+            // compacted table, and signs only what the main level lacks
+            onCompacted = () => graft.operators.Dedup.foldDedupIndexL0(
+              Parquet.read(spark, tableDir), "doc_id", "text", shingleSize,
+              numHashes, bands, sigT, bandT)) {
           (corpus, b) =>
+            val (base, gens) = tableFiles(fs, tableDir)
+            def read(files: Seq[Path]) = spark.read.schema(corpus.schema)
+              .parquet(files.map(_.toString): _*)
             // once per (session, corpus): pays the index build; every
             // later batch in the session skips straight to the bucketed
             // scans
-            graft.operators.Dedup.buildDedupIndex(corpus, "doc_id", "text",
-              shingleSize, numHashes, bands, sigT, bandT, buckets)
+            graft.operators.Dedup.buildDedupIndex(
+              if (base.isEmpty) corpus.limit(0) else read(base), "doc_id",
+              "text", shingleSize, numHashes, bands, sigT, bandT, buckets)
             graft.operators.Dedup.minhashCandidatesIndexedTables(
-              b, "doc_id", "text", shingleSize, numHashes, bands, sigT, bandT)
+              b, "doc_id", "text", shingleSize, numHashes, bands, sigT, bandT,
+              l0Docs = Option.when(gens.nonEmpty)(read(gens)))
         }
       }
       .start()
@@ -436,8 +442,8 @@ object EventStreams {
     *     generation file of the table ([[publishGeneration]], O(batch)
     *     bytes). When the table would reach `compactEvery` generations,
     *     the tick compacts instead: [[mergeSwap]] rewrites corpus ∪
-    *     survivors as one table. Then `onApplied` gets the survivors, and
-    *     the batch's crawl-health metrics row is appended (`corpus_size` =
+    *     survivors as one table, and then runs `onCompacted`. Last, the
+    *     batch's crawl-health metrics row is appended (`corpus_size` =
     *     the corpus before the tick + the survivors).
     *
     * The metrics are at-MOST-once observability: a replayed batch writes
@@ -446,7 +452,7 @@ object EventStreams {
   private def admitBatch(batch: DataFrame, batchId: Long, tableDir: String,
       minJaccard: Double, metricsDir: Option[String],
       minQuality: Option[Double], blockedPatterns: Seq[String],
-      compactEvery: Int, onApplied: DataFrame => Unit = _ => ())(
+      compactEvery: Int, onCompacted: () => Unit = () => ())(
       candidates: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
     val b0 = minQuality.foldLeft(batch.select(col("doc_id"), col("text"))) {
@@ -473,10 +479,10 @@ object EventStreams {
       // FILE_NOT_EXIST). Checkpoint blocks bypass the CacheManager;
       // ContextCleaner frees them when the batch's reference drops.
       val keep = b.join(dropped, Seq("doc_id"), "left_anti").localCheckpoint(true)
-      if (generations(fs, tableDir).size + 1 >= compactEvery)
+      if (generations(fs, tableDir).size + 1 >= compactEvery) {
         mergeSwap(spark, tableDir, batchId)(_ => corpus.unionByName(keep))
-      else publishGeneration(keep, tableDir, batchId)
-      onApplied(keep)
+        onCompacted()
+      } else publishGeneration(keep, tableDir, batchId)
       metricsDir.foreach { mDir =>
         val nBatch = batch.count() // pre-gate: gated docs count as suppressed
         val nAdmitted = keep.count()
@@ -525,15 +531,15 @@ object EventStreams {
     * AvailableNow query per slice against the same checkpoint — the
     * production shape: a scheduled ingest tick per crawl drop, each run
     * recovering offsets from the checkpoint, the standing dedup index
-    * carried across ticks and APPENDED per admitted batch (never a corpus
-    * recompute). Returns the final corpus ids; the oracle models the
-    * greedy batch-sequential admission in SQL, so a wrong drop set, a
-    * stale index (missing append), or a lost batch all diverge. Runs in
-    * the gates' [[withGateScope]].
+    * carried across ticks and each admitted batch's generation file read
+    * as its L0 level (never a corpus recompute). Returns the final corpus
+    * ids; the oracle models the greedy batch-sequential admission in SQL,
+    * so a wrong drop set, a stale index (a generation the probe missed),
+    * or a lost batch all diverge. Runs in the gates' [[withGateScope]].
     *
     * `buckets` is the GATE's index width, defaulted narrow (4): what this
     * gate verifies is the lifecycle contract (build → probe → admit →
-    * swap → append → next-tick probe, crash-repair on replay), and the
+    * publish → next-tick probe, crash-repair on replay), and the
     * admission output is invariant to the bucket count — it is a layout
     * parameter, not a semantics one (same invariance ensureBucketed's spec
     * check enforces). At 32 buckets the gate paid 3 ticks × 2 tables ×
@@ -643,10 +649,14 @@ object EventStreams {
     try fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
     catch { case _: java.io.FileNotFoundException => Nil }
 
+  /** Whether a parquet read of a directory lists its entry `name`. */
+  private def visible(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
   /** Whether `tableDir` holds a table yet: any entry a parquet read lists.
     * A first tick that died before its publish leaves only hidden ones. */
   private def hasTable(fs: FileSystem, tableDir: String): Boolean =
-    names(fs, tableDir).exists(n => !n.startsWith("_") && !n.startsWith("."))
+    names(fs, tableDir).exists(visible)
 
   /** A generation file's name at the table root: `part-b<batchId>-….parquet`. */
   private val GenerationFile = "part-b(\\d+)-.*\\.parquet".r
@@ -654,6 +664,13 @@ object EventStreams {
   /** Batch ids of the generation files at the root of `tableDir`. */
   private def generations(fs: FileSystem, tableDir: String): Seq[Long] =
     names(fs, tableDir).collect { case GenerationFile(id) => id.toLong }
+
+  /** The entries a parquet read of `tableDir` lists, split into its base
+    * files (a compaction's or the first writer's) and its generation
+    * files ([[publishGeneration]]). */
+  private def tableFiles(fs: FileSystem, tableDir: String): (Seq[Path], Seq[Path]) =
+    names(fs, tableDir).filter(visible).map(new Path(tableDir, _))
+      .partition(p => !GenerationFile.matches(p.getName))
 
   /** Publishes `rows` as one immutable generation of the parquet table at
     * `tableDir`, O(rows) bytes: Spark tasks write them as ONE parquet file

@@ -691,11 +691,12 @@ class PlanAuditSpec extends SparkSpec {
 
   test("indexed probe with a live L0 broadcasts the L0 side, and the main " +
       "level's bucketed scans stay exchange-free") {
-    // Between folds the probe joins the batch against main ∪ L0. The L0
-    // side is batch-grain (≤ foldEvery batches), so its three joins (band
-    // probe, two sig join-backs) are broadcast by hint, also with the
-    // size-based broadcast switched off; the main level keeps its three
-    // sort-merge joins fed straight by bucketed scans.
+    // Between folds the probe joins the batch against main ∪ L0, the docs
+    // it gets as `l0Docs` and signs itself. The L0 side is batch-grain
+    // (≤ foldEvery batches), so its three joins (band probe, two sig
+    // join-backs) are broadcast by hint, also with the size-based
+    // broadcast switched off; the main level keeps its three sort-merge
+    // joins fed straight by bucketed scans.
     import org.apache.spark.sql.functions.col
     import graft.operators.{Dedup, ScaleOps}
     val sigT = ScaleOps.bucketTableName("graft_bkt_l0pin_sig", sfDir)
@@ -709,11 +710,9 @@ class PlanAuditSpec extends SparkSpec {
         .select("doc_id", "text")
       Dedup.buildDedupIndex(docs.where(col("doc_id") % 4 < 2), "doc_id",
         "text", 3, 32, 16, sigT, bandT, buckets = 4)
-      Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 2), "doc_id",
-        "text", 3, 32, 16, sigT, bandT, batchTag = "l0", foldEvery = 1000)
       val cand = Dedup.minhashCandidatesIndexedTables(
         docs.where(col("doc_id") % 4 === 3), "doc_id", "text", 3, 32, 16,
-        sigT, bandT)
+        sigT, bandT, l0Docs = Some(docs.where(col("doc_id") % 4 === 2)))
       val out = new ByteArrayOutputStream()
       Console.withOut(out) { cand.explain() }
       val p = out.toString

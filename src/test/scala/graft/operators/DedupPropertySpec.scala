@@ -313,12 +313,19 @@ class DedupPropertySpec extends SparkSpec {
     val bandT = graft.operators.ScaleOps
       .bucketTableName("graft_test_lvband", sfDir)
     val batch = docs.where(col("doc_id") % 4 === 0)
+    val l0 = docs.where(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    def probe() = Dedup.minhashCandidatesIndexedTables(batch, "doc_id",
-      "text", shingleSize = 3, numHashes = 32, bands = 16,
-      sigTable = sigT, bandTable = bandT)
+    def probe(sigT: String, bandT: String,
+        l0Docs: Option[org.apache.spark.sql.DataFrame] = None) =
+      Dedup.minhashCandidatesIndexedTables(batch, "doc_id", "text",
+        shingleSize = 3, numHashes = 32, bands = 16, sigTable = sigT,
+        bandTable = bandT, l0Docs = l0Docs)
+    def foldSlice(slice: org.apache.spark.sql.DataFrame, sigT: String,
+        bandT: String): Unit =
+      Dedup.foldDedupIndexL0(slice, "doc_id", "text", shingleSize = 3,
+        numHashes = 32, bands = 16, sigTable = sigT, bandTable = bandT)
     def planOf(df: org.apache.spark.sql.DataFrame): String = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(out) { df.explain() }
@@ -328,56 +335,45 @@ class DedupPropertySpec extends SparkSpec {
       docs.where(col("doc_id") % 4 =!= 0), batch, "doc_id", "text",
       shingleSize = 3, numHashes = 32, bands = 16))
     graft.core.CacheScope.drain()
-    // main level = %4==1; generations 2 and 3 land in L0 (foldEvery=3:
-    // two pending generations, no fold yet)
+    // main level = %4==1; slices 2 and 3 wait in L0, which is the
+    // caller's docs: the index writes no table for them
     Dedup.buildDedupIndex(docs.where(col("doc_id") % 4 === 1),
       "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
       sigTable = sigT, bandTable = bandT)
-    Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 2), "doc_id",
-      "text", shingleSize = 3, numHashes = 32, bands = 16,
-      sigTable = sigT, bandTable = bandT, batchTag = "g2", foldEvery = 3)
-    Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 3), "doc_id",
-      "text", shingleSize = 3, numHashes = 32, bands = 16,
-      sigTable = sigT, bandTable = bandT, batchTag = "g3", foldEvery = 3)
-    assert(spark.catalog.tableExists(sigT + "_l0"),
-      "two pending generations under foldEvery=3 must sit in L0")
-    assert(!spark.catalog.tableExists(bandT + "_l0"),
-      "L0 holds signatures only: no band L0 table")
-    val gotPending = canon(probe())
+    val gotPending = canon(probe(sigT, bandT, Some(l0)))
     graft.core.CacheScope.drain()
     assert(gotPending == want,
       "probe over main ∪ L0 diverged from the recompute path")
+    assert(!spark.catalog.listTables().collect().exists(_.name.endsWith("_l0")),
+      "the index keeps no L0 table")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      // explicit fold: L0 gone, main level back to one sorted file per
-      // bucket — the no-L0 plan shape (corpus co-located, sort elision
-      // live; the q221 pins) must come back, output unchanged
-      Dedup.foldDedupIndexL0(spark, sigT, bandT, 32, 16)
-      assert(!spark.catalog.tableExists(sigT + "_l0") &&
-        !spark.catalog.tableExists(bandT + "_l0"), "fold must drop L0")
-      val pFolded = planOf(probe())
+      // explicit fold: main level back to one sorted file per bucket —
+      // the no-L0 plan shape (corpus co-located, sort elision live; the
+      // q221 pins) must come back, output unchanged
+      foldSlice(l0, sigT, bandT)
+      val pFolded = planOf(probe(sigT, bandT))
       assert("Exchange hashpartitioning".r.findAllIn(pFolded).size <= 4,
         s"fold must preserve the corpus-side bucket layout:\n$pFolded")
       assert("\\bSort\\b".r.findAllIn(pFolded).size <= 4,
         s"fold must restore sort-elision (one file per bucket):\n$pFolded")
-      val gotFolded = canon(probe())
+      val gotFolded = canon(probe(sigT, bandT))
       graft.core.CacheScope.drain()
       assert(gotFolded == want, "fold corrupted the index")
-      // a replayed tag whose generation was already folded must stay a
-      // no-op: neither recreate L0 nor double the rows
-      Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 2),
-        "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
-        sigTable = sigT, bandTable = bandT, batchTag = "g2", foldEvery = 3)
-      assert(!spark.catalog.tableExists(sigT + "_l0"),
-        "a replayed folded tag must not recreate L0")
-      val gotReplayed = canon(probe())
+      // a replayed fold of an already folded slice must stay a no-op:
+      // neither main level is rewritten, no row is doubled
+      val files = (levelFiles(sigT), levelFiles(bandT))
+      foldSlice(docs.where(col("doc_id") % 4 === 2), sigT, bandT)
+      assert((levelFiles(sigT), levelFiles(bandT)) == files,
+        "a replayed fold rewrote a main level")
+      val gotReplayed = canon(probe(sigT, bandT))
       graft.core.CacheScope.drain()
       assert(gotReplayed == want,
-        "a replayed folded tag changed the index (idempotence broken)")
+        "a replayed fold changed the index (idempotence broken)")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    // automatic cadence on a fresh table pair: foldEvery=1 folds the
-    // append immediately (same two-generation corpus as the q225 gate)
+    // build → fold → probe on a fresh table pair: the q225 gate's
+    // two-generation corpus
     val sigT2 = graft.operators.ScaleOps
       .bucketTableName("graft_test_lvsig2", sfDir)
     val bandT2 = graft.operators.ScaleOps
@@ -386,17 +382,11 @@ class DedupPropertySpec extends SparkSpec {
       docs.where(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2),
       "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
       sigTable = sigT2, bandTable = bandT2)
-    Dedup.indexAppendLeveled(docs.where(col("doc_id") % 4 === 3), "doc_id",
-      "text", shingleSize = 3, numHashes = 32, bands = 16,
-      sigTable = sigT2, bandTable = bandT2, batchTag = "g2", foldEvery = 1)
-    assert(!spark.catalog.tableExists(sigT2 + "_l0"),
-      "foldEvery=1 must fold the append into the main level immediately")
-    val gotAuto = canon(Dedup.minhashCandidatesIndexedTables(batch,
-      "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
-      sigTable = sigT2, bandTable = bandT2))
+    foldSlice(docs.where(col("doc_id") % 4 === 3), sigT2, bandT2)
+    val gotFoldedOnce = canon(probe(sigT2, bandT2))
     graft.core.CacheScope.drain()
-    assert(gotAuto == want,
-      "auto-folded index diverged from the recompute path")
+    assert(gotFoldedOnce == want,
+      "a build → fold index diverged from the recompute path")
   }
 
   private def docsDf(rows: Seq[(Long, String)]) =
@@ -409,23 +399,51 @@ class DedupPropertySpec extends SparkSpec {
     got
   }
 
-  /** A leveled index over the generated levels: main built, then each
-    * generation appended with `foldEvery`, 4 buckets. */
+  /** The file names in a main level's location: a rewrite renames in new
+    * files. */
+  private def levelFiles(table: String): Set[String] = {
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .location)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(loc)
+      .map(_.getPath.getName).toSet
+  }
+
+  /** A level's rows, columns in name order, rendered and sorted. */
+  private def levelRows(table: String): Seq[String] = {
+    val t = spark.table(table)
+    t.select(t.columns.sorted.map(col).toSeq: _*).collect()
+      .map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }.mkString("|")).sorted.toSeq
+  }
+
+  private def fold(docs: Seq[(Long, String)], sigT: String, bandT: String): Unit =
+    Dedup.foldDedupIndexL0(docsDf(docs), "doc_id", "text", shingleSize = 3,
+      numHashes = 32, bands = 16, sigT, bandT)
+
+  /** A leveled index over the generated levels, 4 buckets: main built,
+    * then at every `foldEvery`-th generation the whole corpus so far is
+    * folded, as the ingest sink folds its compacted table. Returns the
+    * generations since the last fold: the probe's L0. */
   private def leveledIndex(main: Seq[(Long, String)],
       gens: Seq[Seq[(Long, String)]], foldEvery: Int,
-      sigT: String, bandT: String): Unit = {
+      sigT: String, bandT: String): Seq[(Long, String)] = {
     Dedup.buildDedupIndex(docsDf(main), "doc_id", "text", shingleSize = 3,
       numHashes = 32, bands = 16, sigT, bandT, buckets = 4)
-    gens.zipWithIndex.foreach { case (g, i) =>
-      Dedup.indexAppendLeveled(docsDf(g), "doc_id", "text", shingleSize = 3,
-        numHashes = 32, bands = 16, sigT, bandT, batchTag = s"g$i",
-        foldEvery = foldEvery)
+    gens.zipWithIndex.foldLeft(Seq.empty[(Long, String)]) {
+      case (pending, (g, i)) =>
+        if ((i + 1) % foldEvery != 0) pending ++ g
+        else { fold(main ++ gens.take(i + 1).flatten, sigT, bandT); Nil }
     }
   }
 
-  private def probe(batch: Seq[(Long, String)], sigT: String, bandT: String) =
+  private def probe(batch: Seq[(Long, String)], sigT: String, bandT: String,
+      l0: Seq[(Long, String)]) =
     Dedup.minhashCandidatesIndexedTables(docsDf(batch), "doc_id", "text",
-      shingleSize = 3, numHashes = 32, bands = 16, sigT, bandT)
+      shingleSize = 3, numHashes = 32, bands = 16, sigT, bandT,
+      l0Docs = Option.when(l0.nonEmpty)(docsDf(l0)))
 
   /** [[randomCorpus]]-style docs (8-word vocabulary, empty docs, doubled
     * spaces) with id gaps, dealt to the levels. Two docs in three copy one
@@ -482,13 +500,12 @@ class DedupPropertySpec extends SparkSpec {
       val sigT = s"graft_test_twsig_${seen.size}"
       val bandT = s"graft_test_twband_${seen.size}"
       try {
-        leveledIndex(c.main, c.gens, c.foldEvery, sigT, bandT)
-        val got = canonPairs(probe(c.batch, sigT, bandT))
+        val l0 = leveledIndex(c.main, c.gens, c.foldEvery, sigT, bandT)
+        val got = canonPairs(probe(c.batch, sigT, bandT, l0))
         val want = canonPairs(Dedup.minhashCandidatesIncremental(
           docsDf(c.main ++ c.gens.flatten), docsDf(c.batch), "doc_id", "text",
           shingleSize = 3, numHashes = 32, bands = 16))
-        seen += ((want.size, spark.catalog.tableExists(s"${sigT}_l0"),
-          c.foldEvery <= c.gens.size))
+        seen += ((want.size, l0.nonEmpty, c.foldEvery <= c.gens.size))
         Prop(got == want) :| s"${c.gens.size} L0 generations, foldEvery=" +
           s"${c.foldEvery}: probe ${got.size} pairs, recompute ${want.size}"
       } finally Dedup.dropDedupIndex(spark, sigT, bandT)
@@ -501,12 +518,42 @@ class DedupPropertySpec extends SparkSpec {
       s"the cases missed candidate pairs, a live L0 or a fold: $seen")
   }
 
+  test("live vs indexed twin: minhashCandidatesIncremental over base ∪ " +
+      "generations equals the probe of an index built over base with the " +
+      "generations as its L0") {
+    // per case: (L0 generations, pairs, pairs above 0.8)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+    val prop = Prop.forAllNoShrink(leveledCaseGen) { c =>
+      val (sigT, bandT) = (s"graft_test_lisig_${seen.size}",
+        s"graft_test_liband_${seen.size}")
+      try {
+        Dedup.buildDedupIndex(docsDf(c.main), "doc_id", "text",
+          shingleSize = 3, numHashes = 32, bands = 16, sigT, bandT, buckets = 4)
+        val got = canonPairs(probe(c.batch, sigT, bandT, c.gens.flatten))
+        val want = canonPairs(Dedup.minhashCandidatesIncremental(
+          docsDf(c.main ++ c.gens.flatten), docsDf(c.batch), "doc_id", "text",
+          shingleSize = 3, numHashes = 32, bands = 16))
+        seen += ((c.gens.size, want.size, want.count(_._3 > 0.8)))
+        Prop(got == want) :| s"${c.gens.size} L0 generations: probe " +
+          s"${got.size} pairs, live ${want.size}"
+      } finally Dedup.dropDedupIndex(spark, sigT, bandT)
+    }
+    val params = Test.Parameters.default.withMinSuccessfulTests(4)
+      .withWorkers(1).withInitialSeed(Seed(20261021L))
+    val res = Test.check(params, prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(seen.exists(_._1 == 0) && seen.exists(_._1 > 0) &&
+      seen.exists(_._3 > 0),
+      s"the cases missed zero L0 generations, some L0 generations or a " +
+        s"pair above 0.8: $seen")
+  }
+
   test("a fold whose band rewrite fails publishes nothing: the sig main " +
       "level and its L0 keep their rows, and no _folding sibling is left") {
     val corpus = randomCorpus(5)
     val (sigT, bandT) = ("graft_test_fpsig", "graft_test_fpband")
     try {
-      leveledIndex(corpus.filter(_._1 % 3 == 0),
+      val l0 = leveledIndex(corpus.filter(_._1 % 3 == 0),
         Seq(corpus.filter(_._1 % 3 == 1), corpus.filter(_._1 % 3 == 2)),
         foldEvery = 3, sigT, bandT)
       // a band main level without an `id` column: the band sibling's
@@ -514,12 +561,11 @@ class DedupPropertySpec extends SparkSpec {
       spark.sql(s"DROP TABLE $bandT")
       spark.range(3).select(col("id").as("bkey")).write.format("parquet")
         .bucketBy(4, "bkey").sortBy("bkey").saveAsTable(bandT)
-      def counts() = (spark.table(sigT).count(), spark.table(s"${sigT}_l0").count())
-      val before = counts()
-      intercept[org.apache.spark.sql.AnalysisException] {
-        Dedup.foldDedupIndexL0(spark, sigT, bandT, 32, 16)
-      }
-      assert(counts() == before, "a failed fold published the sig table")
+      val before = (spark.table(sigT).count(), levelFiles(sigT))
+      // L0 is the caller's docs, which a fold never touches
+      intercept[org.apache.spark.sql.AnalysisException](fold(l0, sigT, bandT))
+      assert((spark.table(sigT).count(), levelFiles(sigT)) == before,
+        "a failed fold published the sig table")
       val folding = spark.catalog.listTables().collect().map(_.name)
         .filter(_.endsWith("_folding"))
       assert(folding.isEmpty, s"a failed fold left ${folding.mkString(", ")}")
@@ -529,35 +575,27 @@ class DedupPropertySpec extends SparkSpec {
   test("a fold over 1-3 L0 generations leaves the same main levels as " +
       "buildDedupIndex over the same docs") {
     // per case: (L0 generations, L0 live before the explicit fold, a fold
-    // ran inside the appends)
+    // ran at the cadence)
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Boolean, Boolean)]
     val gen = leveledCaseGen.map(c =>
       if (c.gens.isEmpty) c.copy(gens = Seq(c.batch)) else c)
-    def rows(t: String, cols: String*) = spark.table(t).select(cols.map(col): _*)
-      .collect().map(_.toSeq.map {
-        case a: scala.collection.Seq[_] => a.toList
-        case v => v
-      }.mkString("|")).sorted.toSeq
     val prop = Prop.forAllNoShrink(gen) { c =>
       val (sigT, bandT) = (s"graft_test_fdsig_${seen.size}",
         s"graft_test_fdband_${seen.size}")
       val (sigB, bandB) = (s"graft_test_fbsig_${seen.size}",
         s"graft_test_fbband_${seen.size}")
       try {
-        leveledIndex(c.main, c.gens, c.foldEvery, sigT, bandT)
-        val live = spark.catalog.tableExists(s"${sigT}_l0")
-        Dedup.foldDedupIndexL0(spark, sigT, bandT, 32, 16)
-        seen += ((c.gens.size, live, c.foldEvery <= c.gens.size))
+        val l0 = leveledIndex(c.main, c.gens, c.foldEvery, sigT, bandT)
+        fold(c.main ++ c.gens.flatten, sigT, bandT)
+        seen += ((c.gens.size, l0.nonEmpty, c.foldEvery <= c.gens.size))
         Dedup.buildDedupIndex(docsDf(c.main ++ c.gens.flatten), "doc_id",
           "text", shingleSize = 3, numHashes = 32, bands = 16, sigB, bandB,
           buckets = 4)
         // evaluated here: `&&` takes its right side by name, which would
         // run after the finally below dropped the tables
-        val l0Left = spark.catalog.tableExists(s"${sigT}_l0")
-        val sameBands = rows(bandT, "bkey", "id") == rows(bandB, "bkey", "id")
-        val sameSigs = rows(sigT, "id", "sig") == rows(sigB, "id", "sig")
-        Prop(!l0Left) :| "L0 left after the fold" &&
-          Prop(sameBands) :|
+        val sameBands = levelRows(bandT) == levelRows(bandB)
+        val sameSigs = levelRows(sigT) == levelRows(sigB)
+        Prop(sameBands) :|
             s"${c.gens.size} generations: folded (bkey, id) rows differ" &&
           Prop(sameSigs) :|
             s"${c.gens.size} generations: folded (id, sig) rows differ"
@@ -574,22 +612,23 @@ class DedupPropertySpec extends SparkSpec {
       s"the cases missed a fold, or never folded 2+ generations: $seen")
   }
 
-  test("a leveled append runs one Spark write job and writes no band L0") {
+  test("a repeated fold of the same docs leaves both main levels unchanged") {
     val corpus = randomCorpus(7)
-    val (sigT, bandT) = ("graft_test_apsig", "graft_test_apband")
+    val (sigT, bandT) = ("graft_test_rfsig", "graft_test_rfband")
     try {
-      leveledIndex(corpus.filter(_._1 % 3 == 0), Nil, Int.MaxValue, sigT, bandT)
-      Seq(1, 2).foreach { r =>
-        val jobs = graft.core.SparkJobs.during(spark) {
-          Dedup.indexAppendLeveled(docsDf(corpus.filter(_._1 % 3 == r)),
-            "doc_id", "text", shingleSize = 3, numHashes = 32, bands = 16,
-            sigT, bandT, batchTag = s"g$r", foldEvery = Int.MaxValue)
-        }
-        assert(jobs == 1, s"append g$r started $jobs Spark jobs")
-      }
-      assert(spark.catalog.tableExists(s"${sigT}_l0"))
-      assert(!spark.catalog.tableExists(s"${bandT}_l0"),
-        "a leveled append wrote a band L0 table")
+      Dedup.buildDedupIndex(docsDf(corpus.filter(_._1 % 3 == 0)), "doc_id",
+        "text", shingleSize = 3, numHashes = 32, bands = 16, sigT, bandT,
+        buckets = 4)
+      val folded = corpus.filter(_._1 % 3 != 0)
+      fold(folded, sigT, bandT)
+      def levels() = Seq(sigT, bandT).map(t => (levelRows(t), levelFiles(t)))
+      val once = levels()
+      assert(once.head._1.size == corpus.size, "the first fold lost docs")
+      fold(folded, sigT, bandT)
+      assert(levels() == once, "a repeated fold changed a main level")
+      // and so does a fold of docs the main level held from its build
+      fold(corpus, sigT, bandT)
+      assert(levels() == once, "a fold of built docs changed a main level")
     } finally Dedup.dropDedupIndex(spark, sigT, bandT)
   }
 }

@@ -55,8 +55,9 @@ class IngestAdmissionSpec extends SparkSpec {
     // per case: (started from an empty corpus, folds, near-dups dropped)
     val seen = scala.collection.mutable.ArrayBuffer
       .empty[(Boolean, Boolean, Boolean)]
-    // the admitted ids, and whether the index folded (its L0 side table
-    // is gone after the second tick)
+    // the admitted ids, and whether the second tick's fold brought
+    // admitted docs into the index's main level (it then holds every
+    // corpus id)
     def drive(c: IngestCase, indexed: Boolean): (Set[Long], Boolean) = {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_ingest_twin_${indexed}_").toFile
@@ -75,8 +76,13 @@ class IngestAdmissionSpec extends SparkSpec {
               s"$dir/chk", buckets = 2, foldEvery = 2)
             else EventStreams.corpusIngestSink(docs, corpusDir, s"$dir/chk")
           q.awaitTermination()
-          k == 1 && spark.catalog.tableExists(sigT) &&
-            !spark.catalog.tableExists(s"${sigT}_l0")
+          def ids(df: DataFrame, c: String) =
+            df.select(c).collect().map(_.getLong(0)).toSet
+          indexed && k == 1 && {
+            val corpusIds = ids(spark.read.parquet(corpusDir), "doc_id")
+            ids(spark.table(sigT), "id") == corpusIds &&
+              (corpusIds -- c.corpus.map(_._1)).nonEmpty
+          }
         }.exists(identity)
         (spark.read.parquet(corpusDir).select("doc_id")
           .collect().map(_.getLong(0)).toSet, folded)

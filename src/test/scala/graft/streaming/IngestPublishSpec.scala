@@ -15,8 +15,9 @@ class IngestPublishSpec extends SparkSpec {
 
   /** One sink over its own temp corpus (a standing corpus of two docs,
     * written as a plain parquet directory, unless `standing` is off) and
-    * checkpoint. */
-  private final class Sink(indexed: Boolean, standing: Boolean = true) {
+    * checkpoint, writing metrics rows unless `metered` is off. */
+  private final class Sink(indexed: Boolean, standing: Boolean = true,
+      metered: Boolean = true) {
     val dir: String = java.nio.file.Files
       .createTempDirectory(s"graft_publish_${indexed}_").toString
     val corpus = s"$dir/corpus"
@@ -37,9 +38,10 @@ class IngestPublishSpec extends SparkSpec {
       val docs = in.toDF().toDF("doc_id", "text")
       val q =
         if (indexed) EventStreams.corpusIngestSinkIndexed(docs, corpus, chk,
-          metricsDir = Some(metrics), buckets = 2, foldEvery = FoldEvery)
+          metricsDir = Option.when(metered)(metrics), buckets = 2,
+          foldEvery = FoldEvery)
         else EventStreams.corpusIngestSink(docs, corpus, chk,
-          metricsDir = Some(metrics))
+          metricsDir = Option.when(metered)(metrics))
       q.awaitTermination()
     }
 
@@ -65,11 +67,23 @@ class IngestPublishSpec extends SparkSpec {
       graft.operators.ScaleOps.bucketTableName("graft_bkt_ingband", corpus))
   }
 
-  private def withSink[T](indexed: Boolean, standing: Boolean = true)(
-      body: Sink => T): T = {
-    val s = new Sink(indexed, standing)
+  private def withSink[T](indexed: Boolean, standing: Boolean = true,
+      metered: Boolean = true)(body: Sink => T): T = {
+    val s = new Sink(indexed, standing, metered)
     try body(s) finally s.close()
   }
+
+  /** Every parquet file under `dirs`, recursively. */
+  private def parquetFiles(dirs: String*): Set[String] = dirs.flatMap { d =>
+    val p = new org.apache.hadoop.fs.Path(d)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(_.getName.endsWith(".parquet")).map(_.toUri.getPath).toList
+    }
+  }.toSet
 
   test("indexed ingest: after 2 × foldEvery + 1 ticks the corpus root " +
       "holds at most foldEvery generation files and no subdirectory, and " +
@@ -122,6 +136,28 @@ class IngestPublishSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
+  test("indexed ingest: a plain warm tick writes exactly one parquet file, " +
+      "its generation, and creates no _l0 table") {
+    // the generation file is the tick's L0 append: the index's tables in
+    // the session warehouse gain no file
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    withSink(indexed = true, metered = false) { s =>
+      // tick 0 builds the index, tick 1 folds it, tick 2 is plain
+      (0 to 1).foreach(s.tick)
+      val before = parquetFiles(s.dir, warehouse)
+      s.tick(2)
+      val after = parquetFiles(s.dir, warehouse)
+      val gen = s.generations.filter(_.startsWith("part-b2-"))
+      assert(gen.size == 1, s"batch 2's generation files: ${s.generations}")
+      assert(after -- before == Set(new File(s.corpus, gen.head).getPath),
+        s"a plain tick wrote ${after -- before}")
+      assert((before -- after).isEmpty, s"a plain tick removed ${before -- after}")
+      val l0 = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.endsWith("_l0"))
+      assert(l0.isEmpty, s"an indexed tick created ${l0.mkString(", ")}")
+    }
+  }
+
   test("corpusIngestSinkIndexed: a first tick into an empty corpus that " +
       "died before its rename replays, and an empty tick is recorded") {
     withSink(indexed = true, standing = false) { s =>
@@ -167,11 +203,8 @@ class IngestPublishSpec extends SparkSpec {
         if (indexed) {
           assert(s.generations.exists(_.startsWith("part-b2-")),
             s"batch 2 should be a generation file: ${s.root.map(_.getName)}")
-          // the tick died after its rename, before its index append: the
-          // index's L0 level (batch 2 alone, the fold ran on tick 1), one
-          // signature table, is lost
-          spark.sql("DROP TABLE " + graft.operators.ScaleOps
-            .bucketTableName("graft_bkt_ingsig", s.corpus) + "_l0")
+          // the tick died after its rename: its generation file is
+          // already the index's L0, so no index write is lost
         }
         // the checkpoint never recorded batch 2: a fresh checkpoint whose
         // numbering lands on 0, 1, 2 again replays them against the table
