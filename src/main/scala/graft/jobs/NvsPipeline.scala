@@ -494,16 +494,24 @@ object NvsPipeline {
           (col("d.reach") / col("mr.total_monthly_reach")) * col("ca.cost"))
           .otherwise(col("ca.cost")).as("cost"))
 
-  /** `combined_nvs_data` (S1:1069-1084): 6-way positional UNION ALL.
-    * The DMA dim is derived and persisted ONCE here and shared by all six
-    * views (see [[dmasOr]]) — the reference's single-plan Catalyst run
-    * re-derived it per view; sharing changes execution cost only, never
-    * values. */
+  /** The six views of `combined_nvs_data` (S1:1069-1084), by name, in union
+    * order. Each builder takes the shared DMA dim (see [[dmasOr]]). */
+  private[jobs] val digitalViews
+      : Seq[(String, (SparkSession, Option[DataFrame]) => DataFrame)] = Seq(
+    "dtcDisplay" -> dtcDisplay, "dtcPaidSearch" -> dtcPaidSearch,
+    "dtcPoc" -> dtcPoc, "dtcPaidSocial" -> dtcPaidSocial,
+    "hcpPaidSearch" -> hcpPaidSearch, "hcpAllChannels" -> hcpAllChannels)
+
+  /** The DMA dim of [[combined]], derived and persisted ONCE and shared by
+    * all six views — the reference's single-plan Catalyst run re-derived it
+    * per view; sharing changes execution cost only, never values. */
+  private[jobs] def sharedDmas(s: SparkSession): Option[DataFrame] =
+    Some(graft.core.CacheScope.persist(cleanedDmas(T(s, "demographics"))))
+
+  /** `combined_nvs_data` (S1:1069-1084): 6-way positional UNION ALL of
+    * [[digitalViews]] over one [[sharedDmas]]. */
   def combined(s: SparkSession): DataFrame = {
-    val dmas = Some(graft.core.CacheScope.persist(
-      cleanedDmas(T(s, "demographics"))))
-    Seq(dtcDisplay(s, dmas), dtcPaidSearch(s, dmas), dtcPoc(s, dmas),
-      dtcPaidSocial(s, dmas), hcpPaidSearch(s, dmas),
-      hcpAllChannels(s, dmas)).reduce(_ union _)
+    val dmas = sharedDmas(s)
+    digitalViews.map { case (_, view) => view(s, dmas) }.reduce(_ union _)
   }
 }

@@ -1,24 +1,30 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Volume-scaled synthetic staging tables (same shapes as the test fixtures,
   * ~2.8M rows total) for stress-running the reference pipeline — all
   * generated distributed from `spark.range`, no driver-side data. Row counts
-  * scale with `factor` (1.0 ≈ 2.8M staging rows). */
+  * scale with `factor` (1.0 ≈ 2.8M staging rows). Every value of a fact
+  * table derives from its row's `id`; a non-zero `seed` replaces each fact
+  * table's ids by seeded 40-bit hashes of them, so each seed gives other
+  * values in the same shapes. The dimension tables do not change. */
 object StressGen {
 
-  def registerAll(s: SparkSession, factor: Double = 1.0): Unit = {
+  def registerAll(s: SparkSession, factor: Double = 1.0, seed: Long = 0L): Unit = {
     import s.implicits._
     def n(base: Long): Long = math.max((base * factor).toLong, 1L)
+    def facts(rows: Long): DataFrame =
+      if (seed == 0L) s.range(rows).toDF()
+      else s.range(rows).select(pmod(xxhash64(col("id"), lit(seed)), lit(1L << 40)).as("id"))
 
     (0 until 200).map(i => (s"$i", s"DMA_$i", f"$i%05d"))
       .toDF("dma_code", "dma_name", "zip")
       .createOrReplaceTempView("demographics")
 
     def callsView(name: String, yrmoLo: Int, yrmoHi: Int, rows: Long): Unit =
-      s.range(rows).select(
+      facts(rows).select(
         concat(lit("N"), (col("id") % 200000).cast("string")).as("npi_num"),
         format_string("%05d", (col("id") % 90000).cast("int")).as("zip_cd"),
         lit("NYC").as("city"), lit("NY").as("state"), lit("XOLAIR").as("brand"),
@@ -45,7 +51,7 @@ object StressGen {
     ).createOrReplaceTempView("hcp_org_map")
 
     def mediaView(name: String, dmaCol: String, lo: Int, hi: Int, rows: Long): Unit =
-      s.range(rows).select(
+      facts(rows).select(
         (lit(lo) + (col("id") % (hi - lo + 1)).cast("int")).as("year_mth"),
         concat(lit("DMA_"), (col("id") % 200).cast("string")).as(dmaCol),
         (col("id") % 200).cast("string").as("dma_code"),
@@ -60,7 +66,7 @@ object StressGen {
     mediaView("dtc_search_v3", "dma_name", 202401, 202406, n(100000))
 
     def pocView(name: String, lo: Int, hi: Int, rows: Long): Unit =
-      s.range(rows).select(
+      facts(rows).select(
         (lit(lo) + (col("id") % (hi - lo + 1)).cast("int")).as("year_mth"),
         concat(lit("DMA_"), (col("id") % 200).cast("string")).as("dma"),
         (col("id") % 200).cast("string").as("dma_code"),
@@ -71,7 +77,7 @@ object StressGen {
     pocView("poc_v3", 202401, 202406, n(50000))
 
     def socialView(name: String, lo: Int, hi: Int, rows: Long): Unit =
-      s.range(rows).select(
+      facts(rows).select(
         (col("id") % 200).cast("string").as("dma_code"),
         concat(lit("DMA_"), (col("id") % 200).cast("string")).as("dma_name"),
         (lit(lo) + (col("id") % (hi - lo + 1)).cast("int")).as("year_mth"),
@@ -81,7 +87,7 @@ object StressGen {
     socialView("social_v1", 202201, 202212, n(100000))
     socialView("social_v2", 202301, 202406, n(100000))
 
-    s.range(n(100000)).select(
+    facts(n(100000)).select(
       (col("id") % 200).cast("string").as("dma_code"),
       date_format(date_add(lit("2022-01-01").cast("date"),
         (col("id") % 330).cast("int")), "yyyy-MM-dd").as("activity_date"),
@@ -107,7 +113,7 @@ object StressGen {
       yield (ym, a, c, 3000.0)).toDF("year_month", "audience", "channel", "cost")
       .createOrReplaceTempView("costs_unpivot")
 
-    s.range(n(500000)).select(
+    facts(n(500000)).select(
       element_at(array(lit("EHR"), lit("DISPLAY"), lit("VIDEO"), lit("CUSTOM"),
         lit("ENDEMIC_SOCIAL"), lit("3RD_PARTY_EMAIL"), lit("POC")),
         ((col("id") % 7) + 1).cast("int")).as("channel"),
@@ -117,7 +123,7 @@ object StressGen {
       ((col("id") % 900) + 1).cast("string").as("value")
     ).createOrReplaceTempView("hcp_all_weekly")
 
-    s.range(n(100000)).select(
+    facts(n(100000)).select(
       element_at(array(lit("Digital Display"), lit("EHR"), lit("Video"), lit("Custom"),
         lit("3rd Party Email")), ((col("id") % 5) + 1).cast("int")).as("ipmm_channel"),
       (col("id") % 200).cast("int").as("dma_code"),
@@ -125,12 +131,12 @@ object StressGen {
       ((col("id") % 700) + 1).cast("double").as("impressions"),
       ((col("id") % 70) + 1).cast("double").as("clicks")
     ).createOrReplaceTempView("hcp_all_new")
-    s.range(n(50000)).select(
+    facts(n(50000)).select(
       (col("id") % 200).cast("int").as("dma_code"),
       (lit(202401) + (col("id") % 6).cast("int")).as("year_mth"),
       ((col("id") % 400) + 1).cast("double").as("impressions")
     ).createOrReplaceTempView("hcp_poc_new")
-    s.range(n(50000)).select(
+    facts(n(50000)).select(
       (col("id") % 200).cast("int").as("dma_code"),
       (lit(202401) + (col("id") % 6).cast("int")).as("year_mth"),
       ((col("id") % 400) + 1).cast("double").as("impressions"),

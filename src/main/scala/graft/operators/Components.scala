@@ -55,18 +55,21 @@ object Components {
   /** [[checkpointed]], also returning the materialization count — the
     * eager count is a job the caller usually needs anyway (loop-exit
     * tests, small-graph dispatch), so returning it saves one action per
-    * round over a separate `.count()`. */
-  private def checkpointedCounted(df: DataFrame): (DataFrame, Set[Int], Long) = {
+    * round over a separate `.count()`. `ChannelJobs` seals its digital
+    * views with it too. If the count fails, the RDD is released before the
+    * error is rethrown. */
+  private[graft] def checkpointedCounted(df: DataFrame): (DataFrame, Set[Int], Long) = {
     // toRdd rows are mutable per-partition buffers — copy before caching
     val rdd = df.queryExecution.toRdd.map(_.copy())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = rdd.count() // eager, like localCheckpoint(true): one job, then reuse
+    // eager, like localCheckpoint(true): one job, then reuse
+    val n = try rdd.count() catch { case e: Throwable => rdd.unpersist(false); throw e }
     val out = org.apache.spark.sql.graftshim.Bridge
       .internalCreateDataFrame(df.sparkSession, rdd, df.schema)
     (out, Set(rdd.id), n)
   }
 
-  private def release(df: DataFrame, ids: Set[Int]): Unit = {
+  private[graft] def release(df: DataFrame, ids: Set[Int]): Unit = {
     val sc = df.sparkSession.sparkContext
     ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
   }

@@ -132,6 +132,31 @@ class ChannelJobsSpec extends SparkSpec {
     assert(warm <= 23, s"$warm classes compiled by a warm run")
   }
 
+  private def columns(df: DataFrame) = df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+
+  private def channelJobsThreads: Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
+      .filter(_.startsWith("ChannelJobs."))
+
+  /** The digital staging table under `dir` has the columns, types, order
+    * and exact rows of the lazy union over the registered inputs, and holds
+    * every DTC view's channel and both HCP views' rows. */
+  private def assertDigitalIsLazyUnion(dir: String, label: String): Unit = {
+    val written = spark.read.parquet(s"$dir/digital_nvs_staging")
+    val lazyUnion = NvsPipeline.combined(spark)
+    try {
+      assert(columns(written) == columns(lazyUnion), label)
+      assert(sameRows(written, lazyUnion), label)
+    } finally graft.core.CacheScope.drain()
+    val reached = written.select("audience", "channel").distinct().collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSet
+    assert(Set("Display", "Paid Search", "Point of Care", "Paid Social")
+      .map("DTC" -> _).subsetOf(reached), s"$label: $reached")
+    // HCP paid search, and a channel only hcp_all_channels yields
+    assert(Set("HCP" -> "Paid Search", "HCP" -> "Display").subsetOf(reached),
+      s"$label: $reached")
+  }
+
   test("concurrent run equals the two jobs run one after the other") {
     NvsFixtures.registerAll(spark)
     val dir = Files.createTempDirectory("graft_par").toString
@@ -144,6 +169,7 @@ class ChannelJobsSpec extends SparkSpec {
     for (t <- Seq("tam_nvs", "digital_nvs"))
       assert(sameRows(spark.read.parquet(s"$dir/${t}_staging"),
         spark.read.parquet(s"$seqDir/${t}_staging")), t)
+    assertDigitalIsLazyUnion(dir, "fixtures")
 
     val w2 = ChannelJobs.run(spark, cfg.copy(batchId = "p2"))
     assert(w2.map(_.version) == Seq(2L, 2L))
@@ -154,18 +180,47 @@ class ChannelJobsSpec extends SparkSpec {
       assert(sameRows(hist.where(col("version") === 2).drop("version"),
         spark.read.parquet(s"$dir/${t}_staging")), t)
     }
+
+    // generated inputs: StressGen's shapes with seeded values, small factor
+    try for (seed <- Seq(7L, 23L)) {
+      StressGen.registerAll(spark, factor = 0.002, seed = seed)
+      val genDir = Files.createTempDirectory(s"graft_par_gen$seed").toString
+      val gw = ChannelJobs.run(spark, cfg.copy(outDir = genDir))
+      assert(gw.forall(_.rows > 0), s"seed $seed: $gw")
+      assertDigitalIsLazyUnion(genDir, s"StressGen seed $seed")
+    } finally {
+      Seq("hcp_search_v2_base", "hcp_search_v3_base").foreach(spark.catalog.dropTempView)
+      NvsFixtures.registerAll(spark)
+    }
   }
 
   test("a failing build releases the persists it registered") {
-    val before = Bridge.cachedEntries(spark)
-    withoutViews("hcp_all_weekly") {
-      val dir = Files.createTempDirectory("graft_leak").toString
-      intercept[AnalysisException](
-        ChannelJobs.run(spark, ChannelJobs.JobConfig(outDir = dir, outputFiles = 2)))
+    NvsFixtures.registerAll(spark)
+    val sc = spark.sparkContext
+    def held() = (Bridge.cachedEntries(spark), sc.getPersistentRDDs.size)
+    val before = held()
+    ChannelJobs.run(spark, ChannelJobs.JobConfig(
+      outDir = Files.createTempDirectory("graft_leak_ok").toString, outputFiles = 2))
+    assert(held() == before, "(cache entries, persistent RDDs) after a successful run")
+
+    // one digital view's input missing: the other five are sealed, then released
+    val dir = Files.createTempDirectory("graft_leak").toString
+    val err = withoutViews("hcp_all_weekly") {
+      intercept[AnalysisException](ChannelJobs.run(spark,
+        ChannelJobs.JobConfig(outDir = dir, batchId = "l1", outputFiles = 2)))
     }
+    assert(err.getMessage.contains("hcp_all_weekly"), err.getMessage)
+    assert(channelJobsThreads.isEmpty, channelJobsThreads)
     assert(graft.core.CacheScope.pending == 0)
-    assert(Bridge.cachedEntries(spark) <= before,
-      s"cache entries $before -> ${Bridge.cachedEntries(spark)}")
+    assert(held() == before, "(cache entries, persistent RDDs) after a failed run")
+    assert(spark.read.parquet(s"$dir/tam_nvs_historical")
+      .select("version").distinct().collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(new java.io.File(s"$dir/tam_nvs_staging").isDirectory)
+    val digital = new java.io.File(s"$dir/digital_nvs_historical")
+    assert(Option(digital.list()).forall(!_.exists(_.startsWith("version="))))
+    assert(!new java.io.File(s"$dir/digital_nvs_staging").exists())
+    val audit = AuditLog.read(spark, s"$dir/audit_log")
+    assert(audit.where(col("log_id_status") === "COMPLETED").isEmpty)
   }
 
   test("one job failing: the other completes, no COMPLETED row, no thread left") {
@@ -174,7 +229,7 @@ class ChannelJobsSpec extends SparkSpec {
     withoutViews("costs_wide") {
       intercept[AnalysisException](ChannelJobs.run(spark, cfg))
     }
-    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "ChannelJobs.par"))
+    assert(channelJobsThreads.isEmpty, channelJobsThreads)
     val tam = NvsPipeline.tamCe(spark)
     assert(sameRows(spark.read.parquet(s"$dir/tam_nvs_staging"), tam))
     val hist = spark.read.parquet(s"$dir/tam_nvs_historical")
@@ -248,7 +303,6 @@ class ChannelJobsSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_empty_out").toString
     val cfg = ChannelJobs.JobConfig(outDir = dir, outputFiles = 2)
     val tam = NvsPipeline.tamCe(spark)
-    def columns(df: DataFrame) = df.schema.fields.toSeq.map(f => f.name -> f.dataType)
     val w = ChannelJobs.materialize(spark, tam.where(lit(false)), "tam_nvs", cfg)
     assert(w == ChannelJobs.TableWrite("tam_nvs", 0L, 1L))
     val staging = spark.read.parquet(s"$dir/tam_nvs_staging")
